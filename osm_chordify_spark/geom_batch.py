@@ -324,12 +324,32 @@ def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
     dedup and midpoint classification are the element-for-element
     formulas of ``geom.clip_segments_batch``.
     """
+    return _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes,
+                       chunk, keep_geometry=False)[0]
+
+
+def clip_pairs_pieces(edge_lines_list, ecodes, zone_polys_list, zcodes,
+                      chunk: int = 4_000_000):
+    """``clip_pairs_totals`` plus the inside sub-polylines per pair:
+    returns (totals, pieces_per) — per pair, what
+    ``intersect._exact_clip_edges_vs_zone(lines, zpolys, True)`` returns
+    per edge (pieces None where the total is ≤ 0).  Pieces come from the
+    same ``intersect._assemble_pieces`` over the same (segment, t)
+    intervals, polygon by polygon, so their coordinates are
+    byte-identical to the per-zone kernel's."""
+    return _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes,
+                       chunk, keep_geometry=True)
+
+
+def _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes, chunk,
+                keep_geometry):
     ecodes = np.asarray(ecodes, dtype=np.int64)
     zcodes = np.asarray(zcodes, dtype=np.int64)
     npairs = len(ecodes)
     totals = np.zeros(npairs, dtype=np.float64)
+    pieces_per: list = [None] * npairs
     if npairs == 0:
-        return totals
+        return totals, pieces_per
 
     # ---- flatten edges: segments + line structure ---------------------
     eseg_ax, eseg_ay, eseg_bx, eseg_by = [], [], [], []
@@ -353,7 +373,7 @@ def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
         edge_seg_off.append(edge_seg_off[-1] + k)
         edge_line_off.append(nline)
     if edge_seg_off[-1] == 0:
-        return totals
+        return totals, pieces_per
     eax = np.concatenate(eseg_ax)
     eay = np.concatenate(eseg_ay)
     ebx = np.concatenate(eseg_bx)
@@ -364,6 +384,11 @@ def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
     eex = ebx - eax
     eey = eby - eay
     eseg_len = np.hypot(eex, eey)
+    # segment endpoints in the (P0, P1) layout _assemble_pieces reads
+    ends = (
+        (np.column_stack((eax, eay)), np.column_stack((ebx, eby)))
+        if keep_geometry else None
+    )
 
     # ---- flatten zone polygons (one FlatZones "zone" per POLYGON) -----
     flat_polys = []
@@ -374,7 +399,7 @@ def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
         zone_poly_off.append(len(flat_polys))
     zone_poly_off = np.asarray(zone_poly_off, dtype=np.int64)
     if zone_poly_off[-1] == 0:
-        return totals
+        return totals, pieces_per
     fzp = FlatZones(flat_polys)
     poly_nseg = fzp.zone_seg_off[1:] - fzp.zone_seg_off[:-1]
 
@@ -399,16 +424,19 @@ def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
             totals, sl, ecodes[sl], zcodes[sl],
             eax, eay, eex, eey, eline, eseg_len,
             edge_seg_off, edge_line_off, zone_poly_off, fzp,
+            pieces_per if keep_geometry else None, ends,
         )
         start = end
-    return totals
+    return totals, pieces_per
 
 
 def _clip_chunk(totals, sl, ec, zc, eax, eay, eex, eey, eline, eseg_len,
-                edge_seg_off, edge_line_off, zone_poly_off, fzp):
+                edge_seg_off, edge_line_off, zone_poly_off, fzp,
+                pieces_per, ends):
     """One chunk of clip_pairs_totals: build (task=pair×poly,
     seg×poly-edge) expansions, extract crossings, form intervals,
-    classify midpoints, accumulate."""
+    classify midpoints, accumulate; with ``pieces_per``, also assemble
+    each positive pair's pieces from its intervals."""
     P = len(ec)
     # tasks: one per (pair, polygon of its zone)
     tcnt = zone_poly_off[zc + 1] - zone_poly_off[zc]
@@ -504,6 +532,25 @@ def _clip_chunk(totals, sl, ec, zc, eax, eay, eex, eey, eline, eseg_len,
     sub = np.zeros(P, dtype=np.float64)
     np.add.at(sub, pair_of_line, line_acc)
     totals[sl] = sub
+    if pieces_per is None:
+        return
+    from osm_chordify_spark.operators.intersect import _assemble_pieces
+
+    # intervals are sorted by task (pair, polygon), then (segment, t):
+    # one _assemble_pieces call per task, concatenated in polygon order
+    # — the per-zone kernel's per-polygon loop
+    iv_task = ks_task[iv_k]
+    cut = np.flatnonzero(iv_task[1:] != iv_task[:-1]) + 1
+    for a, b in zip(np.concatenate(([0], cut)), np.concatenate((cut, [len(iv_task)]))):
+        p = int(task_pair[iv_task[a]])
+        if sub[p] <= 0:
+            continue
+        k = sl.start + p
+        if pieces_per[k] is None:
+            pieces_per[k] = []
+        pieces_per[k].extend(_assemble_pieces(
+            ends[0], ends[1], eline, seg_global[a:b], iv_t0[a:b], iv_t1[a:b]
+        ))
 
 
 def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
@@ -663,8 +710,9 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
     kcells = cells[kept]
     kfull = full[kept]
     # ---- per-zone (cell, full-OR) dedupe across polygons --------------
-    # single-polygon zones (the overwhelmingly common case) need none
-    if len(outers) > n_zones:
+    # only a zone with more than one polygon can repeat a cell (a
+    # polygon-count vs zone-count test misses this beside empty zones)
+    if np.bincount(poly_zone, minlength=n_zones).max() > 1:
         order = np.lexsort((kcells, zidx))
         zidx, kcells, kfull = zidx[order], kcells[order], kfull[order]
         first = np.ones(len(zidx), dtype=bool)

@@ -17,35 +17,40 @@ intersect.py:586-884) as a pure DataFrame program:
    the containment fast path is the aggregate test
    ``every cover cell of the edge is a full cell of the zone``
    (reference intersect.py:703-733);
-4. zone geometry and edge geometry re-attach to the candidate set by
-   key, and the exact clip runs as a BATCHED kernel over whole Arrow
-   batches (``geom_batch.clip_pairs_totals`` — float-accumulation-order
-   identical to ``intersect._exact_clip_edges_vs_zone``, which the
-   keep_geometry path still runs per zone group): since round 6 the
-   metrics-only shape needs NO regroup exchange at all — every
-   (edge, zone) pair is independent and the kernel dedups WKB parses
-   per batch, so mapInPandas runs straight off the re-attach joins.
+4. zone geometry reaches the candidate pairs by one of two transports,
+   and ONE batched pair kernel per operator runs over whole Arrow
+   batches (``geom_batch.clip_pairs_totals`` / ``clip_pairs_pieces`` —
+   totals float-accumulation-order identical and pieces byte-identical
+   to ``intersect._exact_clip_edges_vs_zone``).  Every (edge, zone)
+   pair is independent and the kernel parses each distinct edge/zone
+   WKB once per batch, so no regroup exchange is needed:
+
+   * **join** (the default): the zone and edge payloads equi-join onto
+     the candidate set and ``mapInPandas`` runs straight off the joins;
+   * **cogroup** (mean zone WKB ≥ ``COGROUP_WKB_BYTES``): pairs and
+     zone payloads shuffle SEPARATELY on a (zone bucket, edge salt) key
+     via ``cogroup().applyInPandas``; the group's zone WKB and attrs
+     attach to the pair frame in pandas (object references — no copy
+     per pair) and the same kernel runs on it.
 
 Output is row-for-row and value-identical to
 ``intersect.intersect_lines_with_zones`` (schema from the same
 ``_assemble_schema``, rounding from the same kernels) — pytest asserts
 hash-parity between the two paths.
 
-Scale shape: no broadcast anywhere; the only driver-side values are two
-scalars (effective resolution, global edge bbox).  Shuffles: cell join,
-candidate groupBy, two re-attach joins (plus, keep_geometry only, one
-grouped-map repartition) — all on keys AQE can handle; the fact side is
-never collected.
+Scale shape: no broadcast anywhere; the only driver-side values are
+scalars (effective resolution, global edge bbox, mean zone WKB size).
+Shuffles: cell join, candidate groupBy and the two re-attach joins (or
+the cogroup) — all on keys AQE can handle; the fact side is never
+collected.
 
-Known trade-off, deliberately taken: the re-attach join duplicates the
-zone's geometry bytes once per candidate pair through the grouped-map
-shuffle (a 10k-vertex county ring with 10k candidate edges repeats its
-WKB 10k×).  The alternative — ``cogroup().applyInPandas`` shipping the
-geometry once per (zone, salt) group — pays the ~5 ms/group Arrow tax
-this repo measured and designed around (graph._grouped_map docstring);
-with salting bounding group width and zone rings typically ≤ a few KB,
-the duplication is the cheaper side.  Revisit if zone geometries are
-megabyte-scale: cogroup wins there.
+The transport trade-off (the replicate-vs-partition choice of *MPR*,
+ICDE'19): the join repeats a zone's WKB once per candidate pair through
+the re-attach shuffle, which is the cheap side for rings of a few KB;
+the cogroup ships it once per (zone bucket, salt) group but pays the
+per-group Arrow overhead.  Measured on a 20k-vertex zone × 3k edges,
+cogroup cut shuffle from 951 MB to 2.7 MB and wall time from 24.2 s to
+8.0 s, hence the automatic switch for megabyte-scale geometry.
 """
 
 from __future__ import annotations
@@ -64,7 +69,6 @@ from osm_chordify_spark.operators import zoneindex as ZI
 from osm_chordify_spark.operators.intersect import (
     Zones,
     _assemble_schema,
-    _exact_clip_edges_vs_zone,
     line_metric_names,
 )
 
@@ -80,21 +84,14 @@ def zones_to_df(spark, zones: Zones, geometry_col: str = "geometry") -> DataFram
     return spark.createDataFrame(pdf)
 
 
-def _group_key(zone_buckets: int, salt_buckets: int):
-    """Grouped-kernel key: (hash(zone) % zone_buckets, hash(edge) %
-    salt_buckets).  Zone-bucketing packs MANY zones into one Arrow
-    group (the kernels regroup by ``__zid`` in pandas — sub-µs per
-    group — so semantics are untouched): at 10⁵⁻⁶ tiny zones,
-    per-group Arrow overhead would otherwise dominate the job (102k
-    single-zone groups measured ~2× slower than 1024 multi-zone
-    buckets on the 100k-zone bench).  At ≤~1000 zones the bucket count
-    exceeds the zone count and this degenerates to the old per-zone
-    grouping.  Salt still subdivides hot zones by edge hash."""
-    return F.concat_ws(
-        "#",
-        F.pmod(F.xxhash64("__zid"), F.lit(zone_buckets)).cast("string"),
-        F.pmod(F.xxhash64("__eid"), F.lit(salt_buckets)).cast("string"),
-    )
+# cogroup transport: mean zone WKB at or above this switches the lines
+# operator from the re-attach join to the cogroup
+COGROUP_WKB_BYTES = 65536
+# cogroup group key: (hash(zone) % buckets, hash(edge) % salt) — buckets
+# pack many zones into one Arrow group, the salt splits a hot zone's
+# pairs over several groups (each group receives that zone's WKB once)
+COGROUP_ZONE_BUCKETS = 1024
+COGROUP_SALT = 8
 
 
 def _map_batches(df: DataFrame, fn, schema) -> DataFrame:
@@ -114,73 +111,52 @@ def _map_batches(df: DataFrame, fn, schema) -> DataFrame:
     return df.mapInPandas(run, schema=schema)
 
 
-def _per_zone(kern_zone):
-    """Wrap a one-zone pandas kernel into a multi-zone-group kernel:
-    iterate ``groupby('__zid')`` subframes and concat.  Each subframe
-    keeps the single-zone invariant (``__zgeom.iloc[0]`` is THE zone)."""
-    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        outs = [kern_zone(g) for _, g in pdf.groupby("__zid", sort=False)]
-        return pd.concat(outs, ignore_index=True)
-
-    return kern
+def _parse_once(ids, geoms, parse):
+    """Parse each distinct geometry of a batch once: (parsed list,
+    per-row codes into it).  ``ids``/``geoms`` are aligned arrays."""
+    _u, first, codes = np.unique(ids, return_index=True, return_inverse=True)
+    return [parse(bytes(geoms[int(i)])) for i in first], codes
 
 
-def _resolve_reattach(reattach: str, zindexed: DataFrame,
-                      cogroup_wkb_bytes: int) -> str:
-    """``auto`` → join/cogroup from the mean zone WKB size (one cheap
-    aggregate over the zone payload; its lazy checkpoint materializes
-    here and is reused by every later consumer)."""
-    if reattach in ("join", "cogroup"):
-        return reattach
-    if reattach != "auto":
-        raise ValueError(f"reattach must be join/cogroup/auto, got {reattach!r}")
+def _use_cogroup(zindexed: DataFrame) -> bool:
+    """Mean zone WKB ≥ ``COGROUP_WKB_BYTES`` → cogroup transport (one
+    cheap aggregate over the zone payload; its lazy checkpoint
+    materializes here and is reused by every later consumer)."""
     avg = zindexed.agg(F.avg(F.length("__zgeom"))).first()[0] or 0.0
-    return "cogroup" if avg >= cogroup_wkb_bytes else "join"
+    return avg >= COGROUP_WKB_BYTES
 
 
-def _cogroup_reattach(pairs: DataFrame, zindexed: DataFrame, zattr_cols,
-                      kern_zone, kern_schema, zone_buckets: int,
-                      salt_buckets: int) -> DataFrame:
-    """Megabyte-geometry re-attach: candidate pairs (edge payload only)
-    and zone payloads shuffle SEPARATELY on the (zone-bucket, salt)
-    key via ``cogroup().applyInPandas`` — each zone's WKB crosses the
-    wire once per group it participates in (≤ salt_buckets copies
-    total), never once per candidate pair.  The kernel receives the
-    zone geometry + attrs out-of-band (kern_zone's _zgeom/_zattrs),
-    trading the native per-group Arrow overhead (bounded by
-    zone_buckets × salt_buckets groups) for the WKB dedup."""
-    left = pairs.withColumn("__gk", _group_key(zone_buckets, salt_buckets))
-    right = (
-        zindexed.withColumn(
-            "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_buckets)]))
-        )
-        .withColumn(
-            "__gk",
-            F.concat_ws(
-                "#",
-                F.pmod(F.xxhash64("__zid"), F.lit(zone_buckets)).cast("string"),
-                F.col("__salt").cast("string"),
-            ),
-        )
-        .drop("__salt")
+def _cogroup_key(salt):
+    return F.concat_ws(
+        "#",
+        F.pmod(F.xxhash64("__zid"), F.lit(COGROUP_ZONE_BUCKETS)).cast("string"),
+        salt.cast("string"),
+    )
+
+
+def _cogroup_reattach(pairs: DataFrame, zindexed: DataFrame, kern,
+                      kern_schema) -> DataFrame:
+    """Megabyte-geometry transport: candidate pairs (edge payload only)
+    and zone payloads shuffle SEPARATELY on the cogroup key — each
+    zone's WKB crosses the wire once per group it joins (≤ COGROUP_SALT
+    copies), never once per candidate pair.  In each group the zone
+    payload attaches to the pair frame by a pandas merge (the WKB column
+    holds object references, so bytes are not copied per pair) and the
+    batch kernel ``kern`` runs on the result."""
+    left = pairs.withColumn(
+        "__gk", _cogroup_key(F.pmod(F.xxhash64("__eid"), F.lit(COGROUP_SALT)))
+    )
+    right = zindexed.withColumn(
+        "__gk",
+        F.explode(F.array(*[_cogroup_key(F.lit(i)) for i in range(COGROUP_SALT)])),
     )
     out_names = [f.name for f in kern_schema.fields]
 
     def cg(left_pdf: pd.DataFrame, right_pdf: pd.DataFrame) -> pd.DataFrame:
         if not len(left_pdf):
             return pd.DataFrame(columns=out_names)
-        zinfo = right_pdf.set_index("__zid")
-        outs = []
-        for zid, g in left_pdf.groupby("__zid", sort=False):
-            zr = zinfo.loc[zid]
-            outs.append(
-                kern_zone(
-                    g.reset_index(drop=True),
-                    _zgeom=bytes(zr["__zgeom"]),
-                    _zattrs={c: zr[c] for c in zattr_cols},
-                )
-            )
-        return pd.concat(outs, ignore_index=True)
+        return kern(left_pdf.merge(right_pdf.drop(columns="__gk"), on="__zid",
+                                   how="left"))
 
     return (
         left.groupBy("__gk")
@@ -370,29 +346,15 @@ def intersect_lines_with_zones_dist(
     geometry_col: str = "geometry",
     world=ci.WORLD,
     max_cells_per_zone: int = 4096,
-    salt_buckets: int = 8,
-    zone_buckets: int = 1024,
-    reattach: str = "auto",
-    cogroup_wkb_bytes: int = 65536,
 ) -> DataFrame:
     """Exact line∩polygon join with proportional length metrics over a
     DataFrame zone table — same contract as
     ``intersect.intersect_lines_with_zones`` (which see), for zone
     tables too large to broadcast.
 
-    ``reattach`` picks how zone geometry reaches the clip kernel:
-
-    * ``"join"`` — equi-join the zone payload onto every candidate
-      pair; the zone's WKB repeats once per pair through the
-      grouped-map shuffle.  Cheapest for typical (≤ a few KB) rings.
-    * ``"cogroup"`` — ``cogroup().applyInPandas``: pairs and zone
-      payloads shuffle SEPARATELY on the group key, so each zone's WKB
-      ships once per (zone-bucket, salt) group instead of once per
-      pair — the megabyte-geometry shape (a 10k-vertex county ring
-      with 10k candidate edges would otherwise repeat its WKB 10k×).
-    * ``"auto"`` (default) — one cheap aggregate over the materialized
-      zone payload: mean WKB ≥ ``cogroup_wkb_bytes`` → cogroup."""
-    spark = edges.sparkSession
+    Zone geometry reaches the batch kernel by the re-attach join, or by
+    the cogroup transport when the mean zone WKB is ≥
+    ``COGROUP_WKB_BYTES`` (module docstring, step 4)."""
     metric_names = line_metric_names(zone_label)
     zone_fields = [f for f in zones_df.schema.fields if f.name != geometry_col]
     schema, edge_renames, zone_renames, edge_attr_cols = _assemble_schema(
@@ -411,83 +373,38 @@ def intersect_lines_with_zones_dist(
     mp, me, mz = (metric_names["proportion"], metric_names["edge_length"],
                   metric_names["zone_length"])
     out_names = [f.name for f in kern_schema.fields]
-    zattr_cols = [zone_renames[zf.name] for zf in zone_fields]
-    attr_names = [edge_renames[c] for c in edge_attr_cols] + zattr_cols
-
-    def kern_zone(pdf: pd.DataFrame, _zgeom=None, _zattrs=None) -> pd.DataFrame:
-        zpolys = G.geometry_polygons(
-            bytes(_zgeom) if _zgeom is not None else bytes(pdf["__zgeom"].iloc[0])
-        )
-        lines = [G.geometry_lines(bytes(g)) for g in pdf["__egeom"]]
-        contained = pdf["__contained"].to_numpy()
-        elen = pdf["__elen"].to_numpy()
-        pend = np.nonzero(~contained)[0]
-        totals, pieces_per = _exact_clip_edges_vs_zone(
-            [lines[i] for i in pend], zpolys, keep_geometry
-        )
-        pend_pos = {int(i): k for k, i in enumerate(pend)}
-        keep, mpv, mev, mzv, geov = [], [], [], [], []
-        for i in range(len(pdf)):
-            edge_len = float(elen[i])
-            if contained[i]:
-                zone_len = edge_len
-                prop = 1.0 if edge_len > 0 else 0.0
-                pieces = lines[i]
-            else:
-                zone_len = round(float(totals[pend_pos[i]]), 2)
-                if zone_len <= 0:
-                    continue  # boundary touch / no overlap
-                prop = round(zone_len / edge_len, 4) if edge_len > 0 else 0.0
-                pieces = pieces_per[pend_pos[i]] or []
-            keep.append(i)
-            mpv.append(prop)
-            mev.append(edge_len)
-            mzv.append(zone_len)
-            if keep_geometry:
-                geov.append(
-                    G.wkb_linestring(pieces[0])
-                    if len(pieces) == 1
-                    else G.wkb_multilinestring(pieces)
-                )
-        base = pdf.iloc[keep].reset_index(drop=True)
-        out = {mp: mpv, me: mev, mz: mzv}
-        if keep_geometry:
-            out["geometry"] = geov
-        for c in attr_names:
-            if _zattrs is not None and c in _zattrs:
-                out[c] = [_zattrs[c]] * len(base)
-            else:
-                out[c] = base[c]
-        if include_void_zones:
-            out["__zid"] = base["__zid"]
-        return pd.DataFrame(out, columns=out_names)
+    attr_names = [edge_renames[c] for c in edge_attr_cols] + [
+        zone_renames[zf.name] for zf in zone_fields
+    ]
 
     def kern_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Whole-group clip kernel (keep_geometry=False): every
-        (edge, zone) pair of the Arrow group in one geom_batch pass —
-        each distinct edge/zone WKB parsed once, totals
-        accumulation-order-identical to _exact_clip_edges_vs_zone
-        (clip_pairs_totals parity contract)."""
+        """Whole-batch clip kernel: every (edge, zone) pair of the batch
+        in one geom_batch pass — each distinct edge/zone WKB parsed
+        once, totals accumulation-order-identical and pieces
+        byte-identical to _exact_clip_edges_vs_zone (geom_batch parity
+        contract)."""
         contained = pdf["__contained"].to_numpy()
         elen = pdf["__elen"].to_numpy(np.float64)
+        egeoms = pdf["__egeom"].to_numpy()
         n = len(pdf)
         pend = np.nonzero(~contained)[0]
         zone_len = np.where(contained, elen, 0.0)
+        pieces_per = []
         if len(pend):
-            eids = pdf["__eid"].to_numpy()[pend]
-            zids = pdf["__zid"].to_numpy()[pend]
-            _ue, efirst, ec = np.unique(eids, return_index=True, return_inverse=True)
-            _uz, zfirst, zc = np.unique(zids, return_index=True, return_inverse=True)
-            egeoms = pdf["__egeom"]
-            zgeoms = pdf["__zgeom"]
-            edge_lines = [
-                G.geometry_lines(bytes(egeoms.iloc[int(pend[i])])) for i in efirst
-            ]
-            zone_polys = [
-                G.geometry_polygons(bytes(zgeoms.iloc[int(pend[i])])) for i in zfirst
-            ]
-            zone_len[pend] = GB.clip_pairs_totals(edge_lines, ec, zone_polys, zc)
-        # rounding via Python round() — the exact idiom of the per-zone
+            edge_lines, ec = _parse_once(
+                pdf["__eid"].to_numpy()[pend], egeoms[pend], G.geometry_lines
+            )
+            zone_polys, zc = _parse_once(
+                pdf["__zid"].to_numpy()[pend], pdf["__zgeom"].to_numpy()[pend],
+                G.geometry_polygons,
+            )
+            if keep_geometry:
+                zone_len[pend], pieces_per = GB.clip_pairs_pieces(
+                    edge_lines, ec, zone_polys, zc
+                )
+            else:
+                zone_len[pend] = GB.clip_pairs_totals(edge_lines, ec, zone_polys, zc)
+        # rounding via Python round() — the exact idiom of the broadcast
         # kernel (banker's rounding on the decimal repr, not np.round)
         zl = [
             float(elen[i]) if contained[i] else round(float(zone_len[i]), 2)
@@ -508,33 +425,35 @@ def intersect_lines_with_zones_dist(
             me: [float(elen[i]) for i in keep],
             mz: [zl[i] for i in keep],
         }
+        if keep_geometry:
+            pend_pos = np.zeros(n, dtype=np.int64)
+            pend_pos[pend] = np.arange(len(pend))
+            geov = []
+            for i in keep:
+                pieces = (
+                    G.geometry_lines(bytes(egeoms[i])) if contained[i]
+                    else pieces_per[pend_pos[i]] or []
+                )
+                geov.append(
+                    G.wkb_linestring(pieces[0])
+                    if len(pieces) == 1
+                    else G.wkb_multilinestring(pieces)
+                )
+            out["geometry"] = geov
         for c in attr_names:
             out[c] = base[c]
         if include_void_zones:
             out["__zid"] = base["__zid"]
         return pd.DataFrame(out, columns=out_names)
 
-    # ---- re-attach payloads, run the exact kernel per zone group --------
-    mode = _resolve_reattach(reattach, zindexed, cogroup_wkb_bytes)
-    if mode == "join":
-        from osm_chordify_spark.operators.graph import _grouped_map
-
-        work = cand.join(zindexed, "__zid").join(epay, "__eid")
-        if keep_geometry:
-            # per-pair piece reconstruction is inherently per-zone Python
-            # — keep the zone-bucketed grouped map for that shape
-            result = _grouped_map(
-                work.withColumn("__gk", _group_key(zone_buckets, salt_buckets)),
-                "__gk", _per_zone(kern_zone), kern_schema,
-            )
-        else:
-            # metrics-only (the lake-scale shape): pairs are independent
-            # under the batched kernel, so no regroup exchange at all
-            result = _map_batches(work, kern_batch, kern_schema)
-    else:
+    if _use_cogroup(zindexed):
         result = _cogroup_reattach(
-            cand.join(epay, "__eid"), zindexed, zattr_cols, kern_zone,
-            kern_schema, zone_buckets, salt_buckets,
+            cand.join(epay, "__eid"), zindexed, kern_batch, kern_schema
+        )
+    else:
+        result = _map_batches(
+            cand.join(zindexed, "__zid").join(epay, "__eid"), kern_batch,
+            kern_schema,
         )
 
     if include_void_zones:
@@ -609,8 +528,6 @@ def spatial_left_join_with_zones_dist(
     geometry_col: str = "geometry",
     world=ci.WORLD,
     max_cells_per_zone: int = 4096,
-    salt_buckets: int = 8,
-    zone_buckets: int = 1024,
 ) -> DataFrame:
     """Distributed left spatial join — same contract as
     ``intersect.spatial_left_join_with_zones`` (every input row kept; k
@@ -619,9 +536,10 @@ def spatial_left_join_with_zones_dist(
 
     Shares the candidate machinery with the intersect operator; the
     exact touch test (inside length > 0 for lines, overlap area > 0 for
-    polygon subjects) runs per salted zone group, and the final shape is
-    one LEFT equi-join of the input against the matched (row, zone)
-    pairs carrying the renamed zone attributes."""
+    polygon subjects) runs as a batch kernel over the non-contained
+    pairs, and the final shape is one LEFT equi-join of the input
+    against the matched (row, zone) pairs carrying the renamed zone
+    attributes."""
     from osm_chordify_spark.operators.intersect import zone_output_name, _label
 
     existing = set(df.columns)
@@ -640,37 +558,30 @@ def spatial_left_join_with_zones_dist(
         .select("__eid", "__zid")
         .join(zindexed.select("__zid", "__zgeom"), "__zid")
         .join(epay.select("__eid", "__egeom"), "__eid")
-        .withColumn("__gk", _group_key(zone_buckets, salt_buckets))
     )
 
-    def touch_kern(pdf: pd.DataFrame) -> pd.DataFrame:
-        zpolys = G.geometry_polygons(bytes(pdf["__zgeom"].iloc[0]))
-        keep = []
-        if geometry_kind == "line":
-            lines = [G.geometry_lines(bytes(g)) for g in pdf["__egeom"]]
-            totals, _ = _exact_clip_edges_vs_zone(lines, zpolys, False)
-            keep = [i for i in range(len(pdf)) if totals[i] > 0]
-        else:
-            for i, g in enumerate(pdf["__egeom"]):
-                subj = G.geometry_polygons(bytes(g))
-                touched = any(
-                    G.poly_poly_area(srings, zrings) > 0
-                    for zrings in zpolys
-                    for srings in subj
-                )
-                if touched:
-                    keep.append(i)
-        base = pdf.iloc[keep]
-        return pd.DataFrame(
-            {"__eid": base["__eid"], "__zid": base["__zid"]},
-            columns=["__eid", "__zid"],
+    def touch_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        egeoms = pdf["__egeom"].to_numpy()
+        zone_polys, zc = _parse_once(
+            pdf["__zid"].to_numpy(), pdf["__zgeom"].to_numpy(), G.geometry_polygons
         )
+        if geometry_kind == "line":
+            edge_lines, ec = _parse_once(
+                pdf["__eid"].to_numpy(), egeoms, G.geometry_lines
+            )
+            keep = GB.clip_pairs_totals(edge_lines, ec, zone_polys, zc) > 0
+        else:
+            keep = np.array([
+                any(
+                    G.poly_poly_area(srings, zrings) > 0
+                    for zrings in zone_polys[zc[i]]
+                    for srings in G.geometry_polygons(bytes(egeoms[i]))
+                )
+                for i in range(len(pdf))
+            ], dtype=bool)
+        return pdf.loc[keep, ["__eid", "__zid"]]
 
-    from osm_chordify_spark.operators.graph import _grouped_map
-
-    touched = _grouped_map(
-        pend, "__gk", _per_zone(touch_kern), "__eid long, __zid long"
-    )
+    touched = _map_batches(pend, touch_batch, "__eid long, __zid long")
     hits = (
         cand.filter(F.col("__contained")).select("__eid", "__zid")
         .unionByName(touched)
@@ -691,14 +602,13 @@ def intersect_polygons_with_zones_dist(
     geometry_col: str = "geometry",
     world=ci.WORLD,
     max_cells_per_zone: int = 4096,
-    salt_buckets: int = 8,
-    zone_buckets: int = 1024,
 ) -> DataFrame:
     """Distributed polygon-subject variant — same contract as
     ``intersect.intersect_polygons_with_zones`` (area-based proportions,
     cascade metric names supported), for zone tables too large to
     broadcast.  Completes the distributed family: lines, left join, and
-    polygon subjects all run off the shared candidate machinery."""
+    polygon subjects all run off the shared candidate machinery, each
+    with one batch kernel over the joined pairs."""
     from osm_chordify_spark.operators.intersect import (
         cascade_metric_names,
         polygon_metric_names,
@@ -728,19 +638,18 @@ def intersect_polygons_with_zones_dist(
         polys, zones_df, zone_fields, zone_renames, edge_renames,
         edge_attr_cols, geometry_col, index_res, world, max_cells_per_zone,
     )
-    work = (
-        cand.join(zindexed, "__zid")
-        .join(epay, "__eid")
-        .withColumn("__gk", _group_key(zone_buckets, salt_buckets))
-    )
+    work = cand.join(zindexed, "__zid").join(epay, "__eid")
     out_names = [f.name for f in schema.fields]
     attr_names = [edge_renames[c] for c in edge_attr_cols] + [
         zone_renames[zf.name] for zf in zone_fields
     ]
     len_attr = edge_renames.get(length_col) if length_col else None
 
-    def kern_zone(pdf: pd.DataFrame) -> pd.DataFrame:
-        zpolys = G.geometry_polygons(bytes(pdf["__zgeom"].iloc[0]))
+    def kern_batch(pdf: pd.DataFrame) -> pd.DataFrame:
+        zone_polys, zc = _parse_once(
+            pdf["__zid"].to_numpy(), pdf["__zgeom"].to_numpy(), G.geometry_polygons
+        )
+        egeoms = pdf["__egeom"].to_numpy()
         contained = pdf["__contained"].to_numpy()
         areas = pdf["__elen"].to_numpy()  # rounded subject areas
         len_vals = pdf[len_attr].to_numpy() if len_attr and len_attr in pdf else None
@@ -749,14 +658,14 @@ def intersect_polygons_with_zones_dist(
         geov = []
         for i in range(len(pdf)):
             subj_area = float(areas[i])
-            subj = G.geometry_polygons(bytes(pdf["__egeom"].iloc[i]))
+            subj = G.geometry_polygons(bytes(egeoms[i]))
             if contained[i]:
                 overlap = subj_area
-                pieces_wkb = bytes(pdf["__egeom"].iloc[i])
+                pieces_wkb = bytes(egeoms[i])
             else:
                 overlap = 0.0
                 piece_rings = []
-                for zrings in zpolys:
+                for zrings in zone_polys[zc[i]]:
                     for srings in subj:
                         overlap += G.poly_poly_area(srings, zrings)
                         piece_rings.extend(G.clip_poly_general(srings, zrings))
@@ -789,9 +698,7 @@ def intersect_polygons_with_zones_dist(
             out[c] = base[c]
         return pd.DataFrame(out, columns=out_names)
 
-    from osm_chordify_spark.operators.graph import _grouped_map
-
-    return _grouped_map(work, "__gk", _per_zone(kern_zone), schema)
+    return _map_batches(work, kern_batch, schema)
 
 
 def nearest_zone_dist(
@@ -805,8 +712,6 @@ def nearest_zone_dist(
     max_ring: int = 64,
     world=ci.WORLD,
     max_cells_per_zone: int = 4096,
-    salt_buckets: int = 8,
-    zone_buckets: int = 1024,
     escalate_after: int = 3,
 ) -> DataFrame:
     """Nearest-zone assignment over a DataFrame zone table too large to
@@ -821,7 +726,7 @@ def nearest_zone_dist(
     Shape: the kNN annulus machinery pointed at the zone cover-cell
     table — per doubling round, still-unresolved points explode ONLY
     the new annulus (codegen), equi-join the (cell → zone) rows, and a
-    salted grouped kernel scores exact point-to-boundary distances
+    batched kernel scores exact point-to-boundary distances
     (containment ⇒ 0).  A point resolves when its best distance ≤
     (r-1)·cell_min, the same cover-cell bound the broadcast path uses.
     Mixed-resolution covers (round 4): each zone's cover lives at its
@@ -842,7 +747,7 @@ def nearest_zone_dist(
     covers collapse to parent cells (``cell_parent_expr``), each point
     probes the full coarse disk covering the whole remaining
     ``max_ring`` range (≤ (2·Rc+1)² ≈ 81 cells), and the fat candidate
-    lists score in the same vectorized grouped kernel — one round
+    lists score in the same batched kernel — one round
     instead of many.  Exactness is unchanged (scoring is exact
     geometry; the disk covers every zone within ``max_ring``, plus a
     ≤ 2^shift-cell fringe beyond it, so a point whose true nearest
@@ -896,13 +801,10 @@ def nearest_zone_dist(
         Arrow group in one geom_batch pass — each distinct zone's WKB is
         parsed once; distances and inside flags are bit-identical to the
         old per-zone loop (geom_batch parity contract)."""
-        zid = pdf["__zid"].to_numpy()
-        _uniq, first, inv = np.unique(zid, return_index=True, return_inverse=True)
-        geoms = pdf["__zgeom"]
-        fz = GB.FlatZones(
-            [G.geometry_polygons(bytes(geoms.iloc[int(i)])) for i in first]
+        zone_polys, inv = _parse_once(
+            pdf["__zid"].to_numpy(), pdf["__zgeom"].to_numpy(), G.geometry_polygons
         )
-        best, _inside = fz.min_dist_inside(
+        best, _inside = GB.FlatZones(zone_polys).min_dist_inside(
             inv,
             pdf["__px"].to_numpy(np.float64),
             pdf["__py"].to_numpy(np.float64),
@@ -912,7 +814,6 @@ def nearest_zone_dist(
         )
 
     from osm_chordify_spark.functions.cells import cell_expr
-    from osm_chordify_spark.operators.graph import _grouped_map
     from osm_chordify_spark.operators.knn import _annulus_cells
 
     x0, y0, x1, y1 = world
@@ -935,7 +836,7 @@ def nearest_zone_dist(
         2. descend the surviving coarse cells to their FINE cover cells
            (parent equi-join), re-bound at fine rects, cut again —
            the shell is now ~one cell thick;
-        3. exact-score only the shell's zones (the same grouped kernel)
+        3. exact-score only the shell's zones (the same batched kernel)
            and min-rank with the carried best.
 
         Every exclusion is justified by d_lo > min(d_hi) ≥ true best

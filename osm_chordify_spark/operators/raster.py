@@ -810,8 +810,6 @@ def zonal_stats_dist(
     res: int = 7,
     world=None,
     max_cells_per_zone: int = 4096,
-    salt_buckets: int = 8,
-    zone_buckets: int = 1024,
 ) -> DataFrame:
     """``zonal_stats`` over a DataFrame zone table too large to
     broadcast (the same dispatch story as
@@ -820,7 +818,7 @@ def zonal_stats_dist(
     classification the broadcast index uses, raster cell centers map to
     index cells in pure codegen, candidates come from a cell equi-join,
     full cells skip the exact test, and only partial-cell candidates
-    flow through a salted winding-number kernel.  Same output contract
+    flow through a batched winding-number kernel.  Same output contract
     as ``zonal_stats`` — parity is pinned in pytest."""
     from osm_chordify_spark import cellindex as ci
 
@@ -861,7 +859,7 @@ def zonal_stats_dist(
     zcells = zindexed.select("__zid", "__zgeom").mapInPandas(
         zone_cells, schema="__zid long, __icell long, full boolean"
     ).localCheckpoint(eager=False)
-    from osm_chordify_spark.operators.intersect_dist import _zone_res_list
+    from osm_chordify_spark.operators.intersect_dist import _parse_once, _zone_res_list
 
     res_list = _zone_res_list(zcells, "__icell") or [res]
 
@@ -900,13 +898,10 @@ def zonal_stats_dist(
         per-zone point_in_polygon loop."""
         from osm_chordify_spark import geom_batch as GB
 
-        zid = pdf["__zid"].to_numpy()
-        _uniq, first, inv = np.unique(zid, return_index=True, return_inverse=True)
-        geoms = pdf["__zgeom"]
-        fz = GB.FlatZones(
-            [G.geometry_polygons(bytes(geoms.iloc[int(i)])) for i in first]
+        zone_polys, inv = _parse_once(
+            pdf["__zid"].to_numpy(), pdf["__zgeom"].to_numpy(), G.geometry_polygons
         )
-        inside = fz.inside_points(
+        inside = GB.FlatZones(zone_polys).inside_points(
             inv,
             pdf["__cx"].to_numpy(np.float64),
             pdf["__cy"].to_numpy(np.float64),

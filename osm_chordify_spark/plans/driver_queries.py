@@ -388,8 +388,8 @@ from pairs where ov > 0
 def zone_intersect_lines_dist(spark, sf_dir):
     """The DISTRIBUTED zone-intersection path (operators.intersect_dist):
     zones arrive as a DataFrame, candidates come from a cell equi-JOIN
-    instead of a broadcast index, and the exact clip kernel runs per
-    salted zone group — the shape for zone tables too large to
+    instead of a broadcast index, and the exact clip runs as one batched
+    pair kernel — the shape for zone tables too large to
     broadcast (10⁵–10⁶ census tracts).  100 grid zones here — 50× the
     flagship query's zone count and semantics-identical to
     zone_intersect_lines's kernel (hash-parity asserted in pytest)."""
@@ -454,9 +454,7 @@ def zone_intersect_100k_zones_dist(spark, sf_dir):
     serial driver loop (~66 s for these 102k zones, linear in zones,
     plus a pickle broadcast that scales with total ring vertices) while
     this path builds zone covers inside mapInPandas at full executor
-    parallelism.  salt_buckets=1: candidate fan-in per zone is tiny
-    (~25 pairs), so hot-zone salting would only multiply Arrow group
-    count; index_res=12 sizes cells (~0.09 deg) to the 0.03125-unit
+    parallelism.  index_res=12 sizes cells (~0.09 deg) to the 0.03125-unit
     zones.  Float-parity design: zone width 2^-5 keeps zone boundaries
     binary-exact, the +2^-6 y offset keeps edges off row boundaries,
     and the +1e-3 x offset keeps every partial-overlap value >=2.5e-4
@@ -502,7 +500,7 @@ def zone_intersect_100k_zones_dist(spark, sf_dir):
         "osm_id", F.lit(4.0).alias("edge_length"), mk_line("xs", "y").alias("geometry")
     )
     out = _ID.intersect_lines_with_zones_dist(
-        edges, zdf, keep_geometry=False, index_res=12, salt_buckets=1
+        edges, zdf, keep_geometry=False, index_res=12
     )
     return out.select(
         "edge_osm_id",
@@ -700,8 +698,8 @@ def zones_overlay_100k_x_100k_dist(spark, sf_dir):
     102,400-polygon grids (offset by a quarter cell) through the
     distributed polygon-subject path — neither side broadcasts or
     collects; candidates come from the cell equi-join of the two cover
-    tables, overlap areas from the exact clip kernel per zone-bucketed
-    group.  Every interior subject overlaps exactly 4 zones with
+    tables, overlap areas from one batched kernel over the candidate
+    pairs.  Every interior subject overlaps exactly 4 zones with
     binary-exact areas (grid pitch 3.125 = 2^-5 scaled, offset
     0.78125 = 2^-7 scaled), so the rounded-area contract is
     float-parity-exact against the closed-form oracle."""
@@ -737,7 +735,7 @@ def zones_overlay_100k_x_100k_dist(spark, sf_dir):
     # binary-exact
     out = _ID.intersect_polygons_with_zones_dist(
         subjects, zones, length_col=None, keep_geometry=False,
-        index_res=9, salt_buckets=1, world=(0.0, 0.0, 1024.0, 1024.0),
+        index_res=9, world=(0.0, 0.0, 1024.0, 1024.0),
     )
     return out.select(
         "edge_bid", "zone_aid", "edge_surface_m2", "zone_surface_m2",
@@ -3019,7 +3017,7 @@ def pages_nearest_zone_163k_dist(spark, sf_dir):
     163,592 grid zones covering the full page extent, through the
     DISTRIBUTED annulus search (intersect_dist.nearest_zone_dist — no
     broadcast index, zone covers as a cell table, doubling annuli +
-    exact boundary-distance scoring per zone-bucketed group).  Every
+    batched exact boundary-distance scoring).  Every
     point is strictly inside one zone, so the search resolves in round
     one with the containment bound — the shape of a national
     point-to-tract assignment.  (The far-outside multi-round search is

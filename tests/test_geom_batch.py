@@ -120,6 +120,10 @@ def test_zone_cover_cells_batch_parity(zones):
         assert batch_map.get(u, {}) == seen, f"zone {u}"
 
 
+def _piece_bytes(pieces):
+    return None if pieces is None else [np.asarray(p).tobytes() for p in pieces]
+
+
 def test_clip_pairs_totals_bit_parity(zones):
     from osm_chordify_spark.operators.intersect import _exact_clip_edges_vs_zone
 
@@ -131,15 +135,79 @@ def test_clip_pairs_totals_bit_parity(zones):
             -50, 50, 2
         )
         edges.append([pts])
+    # multi-line edges (pieces never merge across source lines)
+    for _ in range(30):
+        edges.append([
+            np.cumsum(rng.uniform(-3, 3, (rng.randint(2, 5), 2)), axis=0)
+            + rng.uniform(-50, 50, 2)
+            for _ in range(rng.randint(2, 4))
+        ])
     ecodes = rng.randint(0, len(edges), 4000)
     zcodes = rng.randint(0, len(zones), 4000)
+    # edges straight through a holed zone's hole and across both polygons
+    # of a multipolygon zone
+    for u in range(1, 60, 5):
+        (hx0, hy0), (hx1, _hy) = zones[u][0][1].min(0), zones[u][0][1].max(0)
+        (ox0, _oy), (ox1, _oy2) = zones[u][0][0].min(0), zones[u][0][0].max(0)
+        y = (hy0 + _hy) / 2
+        edges.append([np.array([[ox0 - 1.0, y], [(hx0 + hx1) / 2, y + 0.01],
+                                [ox1 + 1.0, y]])])
+        ecodes = np.append(ecodes, len(edges) - 1)
+        zcodes = np.append(zcodes, u)
+    for u in range(2, 60, 5):
+        c0, c1 = zones[u][0][0].mean(0), zones[u][1][0].mean(0)
+        edges.append([np.array([c0 - [3.0, 0.0], c1 + [3.0, 0.0]])])
+        ecodes = np.append(ecodes, len(edges) - 1)
+        zcodes = np.append(zcodes, u)
+    # touch-only pairs: an edge along a square zone's top and right
+    # borders (boundary points there classify outside) plus a corner touch
+    for u in range(3, 53, 5):
+        (x0, y0), (x1, _y), _c, (_x, y1) = zones[u][0][0]
+        edges.append([np.array([[x0 - 1.0, y1], [x1 + 1.0, y1]]),
+                      np.array([[x1, y0 - 1.0], [x1, y1 + 1.0]]),
+                      np.array([[x0 - 1.0, y0 - 1.0], [x0, y0]])])
+        ecodes = np.append(ecodes, len(edges) - 1)
+        zcodes = np.append(zcodes, u)
     totals = GB.clip_pairs_totals(edges, ecodes, zones, zcodes)
+    ptotals, pieces = GB.clip_pairs_pieces(edges, ecodes, zones, zcodes)
+    assert np.array_equal(ptotals, totals)
     # reference: the per-zone batch clip over each zone's pairs
     for z in np.unique(zcodes):
         m = zcodes == z
         lines = [edges[e] for e in ecodes[m]]
         ref, _ = _exact_clip_edges_vs_zone(lines, zones[z], False)
         assert np.array_equal(totals[m], ref), f"zone {z}"
+        ref_t, ref_pieces = _exact_clip_edges_vs_zone(lines, zones[z], True)
+        assert np.array_equal(ref_t, ref)
+        got = [_piece_bytes(pieces[i]) for i in np.nonzero(m)[0]]
+        assert got == [_piece_bytes(p) for p in ref_pieces], f"zone {z}"
+    # the input mix really holds each case
+    assert any(len(zones[z]) > 1 and totals[i] > 0 for i, z in enumerate(zcodes))
+    assert any(len(zones[z][0]) > 1 and totals[i] > 0
+               for i, z in enumerate(zcodes) if zones[z])
+    assert any(len(edges[e]) > 1 and totals[i] > 0 for i, e in enumerate(ecodes))
+    assert all(totals[-10:] == 0) and all(p is None for p in pieces[-10:])
+
+
+def test_zone_cover_cells_batch_dedupes_after_empty_zone():
+    """An empty zone plus one 2-polygon zone: polygon count == zone count,
+    yet the second zone's polygons share a cell with conflicting full
+    flags — the batch must emit each (zone, cell) once, OR-merged, like
+    the per-zone reference."""
+    world, res, mx = (0.0, 0.0, 1024.0, 1024.0), 4, 4096
+    big = [np.array([[0.0, 0.0], [256.0, 0.0], [256.0, 256.0], [0.0, 256.0]])]
+    small = [np.array([[70.0, 70.0], [80.0, 70.0], [80.0, 80.0], [70.0, 80.0]])]
+    zs = [[], [big, small]]
+    zidx, cells, fulls = GB.zone_cover_cells_batch(zs, res, world, mx)
+    pairs = list(zip(zidx.tolist(), cells.tolist()))
+    assert len(pairs) == len(set(pairs))
+    ref = ZI.zone_cover_cells(zs[1], ZI.zone_min_res(zs[1], res, world, mx),
+                              world, mx)
+    assert set(zidx.tolist()) == {1}
+    assert dict(zip(cells.tolist(), fulls.tolist())) == {
+        int(k): bool(v) for k, v in ref.items()
+    }
+    assert ref[int(ci.make_cell(res, 1, 1))]  # the conflicting cell is full
 
 
 def test_flatzones_degenerate_and_empty():

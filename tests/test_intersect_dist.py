@@ -285,12 +285,13 @@ def test_nearest_zone_dist_parity_with_broadcast(spark):
     assert np.allclose(got["dist"], exp["dist"], rtol=1e-12)
 
 
-def test_cogroup_reattach_parity_with_join_on_high_vertex_zone(spark):
+def test_cogroup_reattach_parity_with_join_on_high_vertex_zone(spark, monkeypatch):
     """Megabyte-geometry dispatch (VERDICT r3 #6): a zone whose outer
     ring has 20k vertices (~320 KB WKB) must produce IDENTICAL output
-    through reattach='cogroup' (geometry ships once per group) and
-    reattach='join' (geometry repeats per candidate pair), and
-    reattach='auto' must pick cogroup for it."""
+    through the cogroup transport (geometry ships once per group) and
+    the re-attach join (geometry repeats per candidate pair), and the
+    automatic rule must pick cogroup for it.  The transports are forced
+    through the module threshold."""
     edges = _edges(spark)
     # near-circular 20k-vertex polygon covering the edge extent, plus a
     # plain rectangle so multi-zone groups are exercised
@@ -307,16 +308,17 @@ def test_cogroup_reattach_parity_with_join_on_high_vertex_zone(spark):
             }
         )
     )
-    assert ID._resolve_reattach("auto", zdf.select(
+    assert ID._use_cogroup(zdf.select(
         F.monotonically_increasing_id().alias("__zid"),
-        F.col("geometry").alias("__zgeom")), 65536) == "cogroup"
+        F.col("geometry").alias("__zgeom")))
     outs = {}
-    for mode in ("join", "cogroup"):
+    for mode, threshold in (("join", float("inf")), ("cogroup", 0)):
+        monkeypatch.setattr(ID, "COGROUP_WKB_BYTES", threshold)
+        out = ID.intersect_lines_with_zones_dist(edges, zdf, keep_geometry=True)
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert ("FlatMapCoGroupsInPandas" in plan) == (mode == "cogroup")
         outs[mode] = (
-            ID.intersect_lines_with_zones_dist(
-                edges, zdf, keep_geometry=True, reattach=mode
-            )
-            .select(*METRIC_COLS, "geometry").toPandas()
+            out.select(*METRIC_COLS, "geometry").toPandas()
             .sort_values(METRIC_COLS).reset_index(drop=True)
         )
     assert len(outs["join"]) > 100

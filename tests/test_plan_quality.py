@@ -72,6 +72,41 @@ def test_dist_zone_join_is_equi_join_plus_one_agg_shuffle(spark):
     assert "partial_count" in plan  # map-side combine on the containment agg
 
 
+def test_dist_zone_family_has_no_regroup_exchange(spark):
+    """Every distributed zone operator runs one batch kernel straight off
+    the re-attach joins: no grouped-map repartition for the lines path
+    with piece geometry, the left join, or polygon subjects."""
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import functions as F
+
+    from osm_chordify_spark import geom as G
+    from osm_chordify_spark.operators import intersect as I
+    from osm_chordify_spark.operators import intersect_dist as ID
+
+    @F.pandas_udf("binary")
+    def mk(x: pd.Series) -> pd.Series:
+        return pd.Series([G.wkb_linestring([[v, 0.5], [v + 2.5, 0.5]]) for v in x])
+
+    edges = spark.range(0, 50, 1, 2).select(
+        F.col("id").alias("osm_id"), mk(F.col("id") / 10.0).alias("geometry")
+    )
+    zdf = ID.zones_to_df(spark, I.Zones.from_records([
+        {"zone_id": f"G{i}", "geometry": [np.array(
+            [[i, 0.0], [i + 1.0, 0.0], [i + 1.0, 1.0], [i, 1.0]], float)]}
+        for i in range(8)
+    ]))
+    lines = ID.intersect_lines_with_zones_dist(edges, zdf, keep_geometry=True)
+    plans = {
+        "lines keep_geometry": lines._jdf.queryExecution().executedPlan().toString(),
+        "left join": _plan(spark, "spatial_left_join_dist"),
+        "polygon overlay": _plan(spark, "zones_overlay_100k_x_100k_dist"),
+    }
+    for name, plan in plans.items():
+        assert "MapInPandas" in plan, name
+        assert "REPARTITION_BY_COL" not in plan, name
+
+
 def test_chordify_no_cartesian_and_arrow_only_python(spark):
     plan = _plan(spark, "chordify_contraction")
     assert "CartesianProduct" not in plan
