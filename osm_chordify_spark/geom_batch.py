@@ -10,24 +10,29 @@ vectorized kernels, don't loop rows in Python).
 
 This module flattens a set of zones into contiguous segment arrays with
 CSR offsets (zone → polygons → rings → segments) and evaluates
-point-distance / point-in-polygon / segment-rect queries for MANY
-(query, zone) pairs in single NumPy passes:
+point-distance / point-in-polygon queries for MANY (query, zone) pairs
+in single NumPy passes:
 
 * each query row expands to its zone's segments via ``np.repeat`` +
   cumsum offsets (the classic CSR gather);
 * per-element formulas are copied VERBATIM from ``geom.py``
-  (``point_segment_dist``, ``winding_number``, ``_segs_intersect_rects``)
-  so every float comparison is bit-identical to the per-zone path;
+  (``point_segment_dist``, ``winding_number``) so every float comparison
+  is bit-identical to the per-zone path;
 * per-query reductions use ``np.minimum.reduceat`` (min is exact, so
   reduction order cannot perturb results) and integer winding sums.
+
+The cover classifier ``zone_cover_cells_batch`` is output-sensitive
+instead: each segment meets only the cover cells of its own bbox (the
+Liang–Barsky comparisons of ``geom._segs_intersect_rects``) and only the
+cell rows whose y0 it straddles (the winding formula), so its cost
+scales with boundary cells, not cover cells × ring segments.
 
 Degenerate rings (< 2 distinct closed points ⇒ zero segments) are
 represented by one sentinel segment at ``_FAR`` so every ring owns at
 least one slot (``reduceat`` needs non-empty slices): the sentinel is
 provably inert for winding (both endpoints above any query point) and
-for Liang–Barsky (zero-length segment outside every rect), and a
-per-zone ``real_segs`` mask restores the exact ``inf`` distance for
-all-degenerate zones.
+lies outside every cover, and a per-zone ``zone_has_real`` mask restores
+the exact ``inf`` distance for all-degenerate zones.
 """
 
 from __future__ import annotations
@@ -37,6 +42,36 @@ import numpy as np
 from osm_chordify_spark import geom as G
 
 _FAR = 1e308
+# cap on the expanded (query, segment) / (segment, cell) arrays of one
+# NumPy pass
+_CHUNK = 4_000_000
+# cell-width margin for "on a grid line"; see _cell_range
+_GRID_EPS = 1e-6
+
+
+def _winding_contrib(X, Y, AX, AY, BX, BY):
+    """Per (point, segment) winding-number contribution — the
+    ``geom.winding_number`` element formula."""
+    dx, dy = BX - AX, BY - AY
+    upward = (AY <= Y) & (BY > Y)
+    downward = (AY > Y) & (BY <= Y)
+    cross = dx * (Y - AY) - (X - AX) * dy
+    return (upward & (cross > 0)).astype(np.int64) - (
+        downward & (cross < 0)
+    ).astype(np.int64)
+
+
+def _csr_chunks(cnt, chunk):
+    """(start, end) item slices whose summed ``cnt`` stays within
+    ``chunk`` (at least one item per slice)."""
+    csum = np.cumsum(cnt)
+    start = 0
+    while start < len(cnt):
+        base = csum[start - 1] if start else 0
+        end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
+        end = min(max(end, start + 1), len(cnt))
+        yield start, end
+        start = end
 
 
 class FlatZones:
@@ -172,7 +207,7 @@ class FlatZones:
 
     # -- public batch kernels -------------------------------------------
 
-    def min_dist_inside(self, codes, qx, qy, chunk: int = 4_000_000):
+    def min_dist_inside(self, codes, qx, qy, chunk: int = _CHUNK):
         """Per (query point, its zone): (min distance to any ring
         segment, inside flag).  Distance is ``inf`` for zones with no
         real segments (matching the per-zone loop's untouched best).
@@ -186,12 +221,7 @@ class FlatZones:
         inside = np.empty(nq, dtype=bool)
         cnt = self.zone_seg_off[codes + 1] - self.zone_seg_off[codes]
         # chunk queries so the expanded arrays stay bounded
-        start = 0
-        csum = np.cumsum(cnt)
-        while start < nq:
-            base = csum[start - 1] if start else 0
-            end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
-            end = min(max(end, start + 1), nq)
+        for start, end in _csr_chunks(cnt, chunk):
             sl = slice(start, end)
             off, flat, rep = self._expand(codes[sl])
             X, Y = qx[sl][rep], qy[sl][rep]
@@ -204,22 +234,15 @@ class FlatZones:
             cx, cy = AX + t * dx, AY + t * dy
             d = np.hypot(X - cx, Y - cy)
             b = np.minimum.reduceat(d, off[:-1]) if len(d) else np.empty(0)
-            # winding contribution per (query, segment)
-            upward = (AY <= Y) & (BY > Y)
-            downward = (AY > Y) & (BY <= Y)
-            cross = dx * (Y - AY) - (X - AX) * dy
-            contrib = (upward & (cross > 0)).astype(np.int64) - (
-                downward & (cross < 0)
-            ).astype(np.int64)
+            contrib = _winding_contrib(X, Y, AX, AY, BX, BY)
             ins = self._inside_from_contrib(codes[sl], contrib, off)
             b = np.where(self.zone_has_real[codes[sl]], b, np.inf)
             b[ins] = 0.0
             best[sl] = b
             inside[sl] = ins
-            start = end
         return best, inside
 
-    def inside_points(self, codes, qx, qy, chunk: int = 4_000_000):
+    def inside_points(self, codes, qx, qy, chunk: int = _CHUNK):
         """Per (query point, its zone): point-in-polygon (OR over the
         zone's polygons, holes excluded) — ``geom.point_in_polygon``
         semantics, batched."""
@@ -229,82 +252,19 @@ class FlatZones:
         nq = len(codes)
         inside = np.empty(nq, dtype=bool)
         cnt = self.zone_seg_off[codes + 1] - self.zone_seg_off[codes]
-        csum = np.cumsum(cnt)
-        start = 0
-        while start < nq:
-            base = csum[start - 1] if start else 0
-            end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
-            end = min(max(end, start + 1), nq)
+        for start, end in _csr_chunks(cnt, chunk):
             sl = slice(start, end)
             off, flat, rep = self._expand(codes[sl])
             X, Y = qx[sl][rep], qy[sl][rep]
             AX, AY = self.seg_ax[flat], self.seg_ay[flat]
             BX, BY = self.seg_bx[flat], self.seg_by[flat]
-            dx, dy = BX - AX, BY - AY
-            upward = (AY <= Y) & (BY > Y)
-            downward = (AY > Y) & (BY <= Y)
-            cross = dx * (Y - AY) - (X - AX) * dy
-            contrib = (upward & (cross > 0)).astype(np.int64) - (
-                downward & (cross < 0)
-            ).astype(np.int64)
+            contrib = _winding_contrib(X, Y, AX, AY, BX, BY)
             inside[sl] = self._inside_from_contrib(codes[sl], contrib, off)
-            start = end
         return inside
-
-    def rects_intersect(self, codes, rx0, ry0, rx1, ry1, chunk: int = 4_000_000):
-        """Per (query rect, its zone): does ANY segment of the zone's
-        rings intersect the rect?  Liang–Barsky, comparisons identical
-        to ``geom._segs_intersect_rects``."""
-        codes = np.asarray(codes, dtype=np.int64)
-        rx0 = np.asarray(rx0, dtype=np.float64)
-        ry0 = np.asarray(ry0, dtype=np.float64)
-        rx1 = np.asarray(rx1, dtype=np.float64)
-        ry1 = np.asarray(ry1, dtype=np.float64)
-        nq = len(codes)
-        out = np.empty(nq, dtype=bool)
-        cnt = self.zone_seg_off[codes + 1] - self.zone_seg_off[codes]
-        csum = np.cumsum(cnt)
-        start = 0
-        while start < nq:
-            base = csum[start - 1] if start else 0
-            end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
-            end = min(max(end, start + 1), nq)
-            sl = slice(start, end)
-            off, flat, rep = self._expand(codes[sl])
-            AX, AY = self.seg_ax[flat], self.seg_ay[flat]
-            BX, BY = self.seg_bx[flat], self.seg_by[flat]
-            dx, dy = BX - AX, BY - AY
-            X0, Y0 = rx0[sl][rep], ry0[sl][rep]
-            X1, Y1 = rx1[sl][rep], ry1[sl][rep]
-            t0 = np.zeros(len(AX))
-            t1 = np.ones(len(AX))
-            ok = np.ones(len(AX), dtype=bool)
-            for p, q in (
-                (-dx, AX - X0),
-                (dx, X1 - AX),
-                (-dy, AY - Y0),
-                (dy, Y1 - AY),
-            ):
-                zero = p == 0
-                ok &= ~(zero & (q < 0))
-                with np.errstate(divide="ignore", invalid="ignore"):
-                    t = q / np.where(zero, 1.0, p)
-                ent = (~zero) & (p < 0)
-                ext = (~zero) & (p > 0)
-                t0 = np.where(ent, np.maximum(t0, t), t0)
-                t1 = np.where(ext, np.minimum(t1, t), t1)
-            hit = ok & (t0 <= t1)
-            out[sl] = (
-                np.logical_or.reduceat(hit, off[:-1])
-                if len(hit)
-                else np.zeros(end - start, bool)
-            )
-            start = end
-        return out
 
 
 def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
-                      chunk: int = 4_000_000):
+                      chunk: int = _CHUNK):
     """Exact inside length per (edge, zone) PAIR, batched across zones —
     the cross-zone vectorization of
     ``intersect._exact_clip_edges_vs_zone`` (keep_geometry=False path).
@@ -329,7 +289,7 @@ def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
 
 
 def clip_pairs_pieces(edge_lines_list, ecodes, zone_polys_list, zcodes,
-                      chunk: int = 4_000_000):
+                      chunk: int = _CHUNK):
     """``clip_pairs_totals`` plus the inside sub-polylines per pair:
     returns (totals, pieces_per) — per pair, what
     ``intersect._exact_clip_edges_vs_zone(lines, zpolys, True)`` returns
@@ -412,13 +372,7 @@ def _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes, chunk,
         zone_poly_off[1:] > zone_poly_off[:-1], zone_nseg, 0
     )
     cost = np.maximum(pair_nseg * zone_nseg[zcodes], 1)
-    csum = np.cumsum(cost)
-
-    start = 0
-    while start < npairs:
-        base = csum[start - 1] if start else 0
-        end = int(np.searchsorted(csum, base + chunk, side="left")) + 1
-        end = min(max(end, start + 1), npairs)
+    for start, end in _csr_chunks(cost, chunk):
         sl = slice(start, end)
         _clip_chunk(
             totals, sl, ecodes[sl], zcodes[sl],
@@ -426,7 +380,6 @@ def _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes, chunk,
             edge_seg_off, edge_line_off, zone_poly_off, fzp,
             pieces_per if keep_geometry else None, ends,
         )
-        start = end
     return totals, pieces_per
 
 
@@ -553,6 +506,124 @@ def _clip_chunk(totals, sl, ec, zc, eax, eay, eex, eey, eline, eseg_len,
         ))
 
 
+def _cell_range(a, b, lo, span, n, g0, g1):
+    """Per segment, the column (or row) range [i0, i1] of cells at ``n``
+    per side that the closed interval between coordinates ``a`` and
+    ``b`` can touch, clipped to the cover range [g0, g1] (empty when
+    i0 > i1).
+
+    The floor range is widened by one cell on a side whose end lies
+    within ``_GRID_EPS`` (1e-6) cell widths of a grid line.  That keeps
+    it a strict superset of every cell Liang–Barsky can hit and every
+    row whose y0 the segment straddles: the rounding in this cell
+    coordinate, in ``cellindex.cell_bounds`` and in the Liang–Barsky t
+    values is a few ulps of the coordinates, i.e. about 4ε·2^res ≈
+    1e-9 cells at res 20 (``cellindex.MAX_RES``) for coordinates and
+    segment lengths of the order of the world span — far below 1e-6.
+    Non-finite coordinates (NaN/inf segments, whose Liang–Barsky
+    comparisons do not follow the bbox) take the whole cover range."""
+    with np.errstate(invalid="ignore", over="ignore"):
+        f0 = (np.minimum(a, b) - lo) / span * n
+        f1 = (np.maximum(a, b) - lo) / span * n
+        i0 = np.floor(f0)
+        i1 = np.floor(f1)
+        i0 = i0 - (f0 - i0 < _GRID_EPS)
+        i1 = i1 + (i1 + 1 - f1 < _GRID_EPS)
+        finite = np.isfinite(f0) & np.isfinite(f1)
+        i0 = np.where(finite, np.clip(i0, g0, g1 + 1), g0).astype(np.int64)
+        i1 = np.where(finite, np.clip(i1, g0 - 1, g1), g1).astype(np.int64)
+    return i0, i1
+
+
+def _cover_crossing(fz, sp, sx0, sx1, sy0, sy1, gx0, gy0, ncy, coff, bounds):
+    """crossing[cover slot]: does any ring segment of the slot's polygon
+    intersect the cell rect?  Each segment enumerates the cells of its
+    own ``_cell_range`` box; the cover slot of cell (ix, iy) of polygon
+    p is ``coff[p] + (ix - gx0[p])·ncy[p] + (iy - gy0[p])``.
+    Liang–Barsky comparisons identical to ``geom._segs_intersect_rects``."""
+    cx0, cy0, cx1, cy1 = bounds
+    crossing = np.zeros(len(cx0), dtype=bool)
+    nsy = np.maximum(sy1 - sy0 + 1, 0)
+    cnt = np.maximum(sx1 - sx0 + 1, 0) * nsy
+    segs = np.nonzero(cnt)[0]
+    cnt = cnt[segs]
+    for a, b in _csr_chunks(cnt, _CHUNK):
+        c = cnt[a:b]
+        s = np.repeat(segs[a:b], c)
+        local = np.arange(len(s), dtype=np.int64) - np.repeat(np.cumsum(c) - c, c)
+        ix = sx0[s] + local // nsy[s]
+        iy = sy0[s] + local % nsy[s]
+        p = sp[s]
+        slot = coff[p] + (ix - gx0[p]) * ncy[p] + (iy - gy0[p])
+        AX, AY = fz.seg_ax[s], fz.seg_ay[s]
+        dx, dy = fz.seg_bx[s] - AX, fz.seg_by[s] - AY
+        t0 = np.zeros(len(s))
+        t1 = np.ones(len(s))
+        ok = np.ones(len(s), dtype=bool)
+        for p_, q in (
+            (-dx, AX - cx0[slot]),
+            (dx, cx1[slot] - AX),
+            (-dy, AY - cy0[slot]),
+            (dy, cy1[slot] - AY),
+        ):
+            zero = p_ == 0
+            ok &= ~(zero & (q < 0))
+            with np.errstate(divide="ignore", invalid="ignore"):
+                t = q / np.where(zero, 1.0, p_)
+            ent = (~zero) & (p_ < 0)
+            ext = (~zero) & (p_ > 0)
+            t0 = np.where(ent, np.maximum(t0, t), t0)
+            t1 = np.where(ext, np.minimum(t1, t), t1)
+        crossing[slot[ok & (t0 <= t1)]] = True
+    return crossing
+
+
+def _cover_full(fz, seg_ring, sp, sy0, sy1, gy0, roff, row_y, crow, X, Y):
+    """Winding test of non-crossing cells' (X, Y) = (x0, y0) corners,
+    rows ``crow``: the ``FlatZones.inside_points`` formula, evaluated
+    only against the segments that straddle the row's y0 (``AY <= Y <
+    BY`` or ``BY <= Y < AY``).  Every other segment contributes exactly
+    0, so the per-ring integer winding numbers — and outer ``wn != 0``
+    AND every hole ``wn == 0`` — are those of the full test."""
+    # (segment, row) straddle records, grouped by row in segment order
+    nrow = np.maximum(sy1 - sy0 + 1, 0)
+    s = np.repeat(np.arange(len(nrow)), nrow)
+    rec_row = (roff[sp[s]] + sy0[s] - gy0[sp[s]]
+               + np.arange(len(s)) - np.repeat(np.cumsum(nrow) - nrow, nrow))
+    AY, BY, Yr = fz.seg_ay[s], fz.seg_by[s], row_y[rec_row]
+    keep = ((AY <= Yr) & (BY > Yr)) | ((AY > Yr) & (BY <= Yr))
+    s, rec_row = s[keep], rec_row[keep]
+    order = np.argsort(rec_row, kind="stable")
+    rec_seg = s[order]
+    rcnt = np.bincount(rec_row, minlength=len(row_y))
+    rbeg = np.cumsum(rcnt) - rcnt
+
+    full = np.zeros(len(crow), dtype=bool)
+    k = rcnt[crow]
+    for a, b in _csr_chunks(k, _CHUNK):
+        kk = k[a:b]
+        c = np.repeat(np.arange(a, b), kk)
+        if not len(c):
+            continue
+        seg = rec_seg[np.repeat(rbeg[crow[a:b]] - (np.cumsum(kk) - kk), kk)
+                      + np.arange(len(c))]
+        contrib = _winding_contrib(X[c], Y[c], fz.seg_ax[seg], fz.seg_ay[seg],
+                                   fz.seg_bx[seg], fz.seg_by[seg])
+        # per-(cell, ring) sums: a cell's records are in segment order,
+        # so each ring's records are contiguous
+        ring = seg_ring[seg]
+        first = np.ones(len(c), dtype=bool)
+        first[1:] = (c[1:] != c[:-1]) | (ring[1:] != ring[:-1])
+        wn = np.add.reduceat(contrib, np.nonzero(first)[0])
+        gc, outer = c[first], fz.ring_is_outer[ring[first]]
+        hit = wn != 0
+        full[a:b] = (
+            (np.bincount(gc[outer & hit] - a, minlength=b - a) > 0)
+            & (np.bincount(gc[~outer & hit] - a, minlength=b - a) == 0)
+        )
+    return full
+
+
 def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
                            return_bbox: bool = False, return_res: bool = False):
     """Batched equivalent of ``zoneindex.zone_min_res`` +
@@ -572,11 +643,21 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
        ``pick_cover_res`` (replicating its floor arithmetic), min-reduced
        per zone;
     3. bbox cover enumeration at the zone resolution via CSR expansion;
-    4. crossing classification: Liang–Barsky over (cell, zone segments)
-       pairs (``FlatZones.rects_intersect``);
+    4. crossing classification, segment-driven: each ring segment
+       enumerates only the cells of its own bbox at its polygon's cover
+       resolution, clipped to the polygon's cover range, and Liang–Barsky
+       runs on those (segment, cell) pairs only (``_cover_crossing``).
+       The floor-based cell range is widened by one cell on a side whose
+       end lies within 1e-6 cell widths of a grid line, which keeps it a
+       superset of every cell Liang–Barsky can hit (``_cell_range``);
     5. full classification: winding test of the cell's (x0, y0) corner
        for non-crossing cells only — identical corner choice to
-       ``zone_cover_cells``;
+       ``zone_cover_cells``.  All cells of one (polygon, iy) row share
+       y0, and only segments straddling that y0 can wind, so
+       (segment, row) straddle records are built once and joined to the
+       non-crossing cells by row (``_cover_full``); every skipped
+       segment contributes exactly 0, so the integer winding numbers
+       are those of ``FlatZones.inside_points``;
     6. (zone, cell) dedupe across a zone's polygons with OR(full).
     """
     from osm_chordify_spark import cellindex as ci
@@ -696,14 +777,36 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
 
     # ---- classification ----------------------------------------------
     # FlatZones over the POLYGONS (each polygon classified independently,
-    # exactly as zone_cover_cells' per-polygon loop)
+    # exactly as zone_cover_cells' per-polygon loop).  Both passes are
+    # output-sensitive: a segment only meets the cells of its own bbox
+    # (crossing) and the rows its y-extent straddles (full), never the
+    # whole cover.
     fz = FlatZones([[rings] for rings in poly_rings])
-    cx0, cy0, cx1, cy1 = ci.cell_bounds(cells, world)
-    crossing = fz.rects_intersect(cell_poly, cx0, cy0, cx1, cy1)
+    bounds = ci.cell_bounds(cells, world)
+    ring_poly = np.repeat(np.arange(fz.n), np.diff(fz.zone_ring_off))
+    ring_start = fz.zone_seg_off[ring_poly] + fz.ring_local_seg_off
+    seg_ring = np.repeat(np.arange(len(ring_poly)),
+                         np.diff(np.append(ring_start, len(fz.seg_ax))))
+    sp = ring_poly[seg_ring]
+    # segments of polygons without a cover (empty outer ring) meet no cell
+    live = counts[sp] > 0
+    sx0, sx1 = _cell_range(fz.seg_ax, fz.seg_bx, wx0, wx1 - wx0, npow[sp],
+                           gx0[sp], np.where(live, gx1[sp], gx0[sp] - 1))
+    sy0, sy1 = _cell_range(fz.seg_ay, fz.seg_by, wy0, wy1 - wy0, npow[sp],
+                           gy0[sp], np.where(live, gy1[sp], gy0[sp] - 1))
+    crossing = _cover_crossing(fz, sp, sx0, sx1, sy0, sy1, gx0, gy0, ncy,
+                               coff, bounds)
     full = np.zeros(total, dtype=bool)
     ncross = np.nonzero(~crossing)[0]
     if len(ncross):
-        full[ncross] = fz.inside_points(cell_poly[ncross], cx0[ncross], cy0[ncross])
+        # rows: one id per (polygon, iy); every cell of a row shares its y0
+        roff = np.concatenate(([0], np.cumsum(ncy)))
+        cell_row = roff[cell_poly] + iy - gy0[cell_poly]
+        row_y = np.empty(int(roff[-1]))
+        row_y[cell_row] = bounds[1]
+        full[ncross] = _cover_full(fz, seg_ring, sp, sy0, sy1, gy0, roff, row_y,
+                                   cell_row[ncross], bounds[0][ncross],
+                                   bounds[1][ncross])
     kept = crossing | full
 
     zidx = poly_zone[cell_poly[kept]]

@@ -126,6 +126,16 @@ def kmeans_assign(
     pts = df.select(
         F.col(id_col).alias("__id"), quantize_expr(vec_col, scale).alias("__qv")
     ).localCheckpoint(eager=True)
+    # the centroid update counts per (cluster, j): a short, empty or null
+    # vector would drop out of those counts and shift centroids, so every
+    # vector must have the same length d
+    size = F.coalesce(F.size("__qv"), F.lit(-1))
+    lo, hi = pts.agg(F.min(size), F.max(size)).first()
+    if lo is not None and (lo != hi or lo < 0):
+        raise ValueError(
+            f"{vec_col} vectors must all have one length, got lengths {lo}..{hi}"
+            " (-1: null)"
+        )
     seeds = (
         pts.select("__id", "__qv", _seed_hash("__id").alias("__h"))
         .orderBy("__h", "__id")

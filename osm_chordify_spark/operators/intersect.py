@@ -401,7 +401,6 @@ def intersect_lines_with_zones(
     index = zones.index(res=index_res)
     b_index = spark.sparkContext.broadcast(index)
     b_attrs = spark.sparkContext.broadcast(zones.attrs)
-    b_geoms = spark.sparkContext.broadcast(zones.geoms)
     mp, me, mz = (
         metric_names["proportion"],
         metric_names["edge_length"],
@@ -411,7 +410,7 @@ def intersect_lines_with_zones(
     def compute(batches):
         idx: ZoneIndex = b_index.value
         zattrs: pd.DataFrame = b_attrs.value
-        zgeoms = b_geoms.value
+        zgeoms = idx.zone_rings  # the index's parsed zone polygons
         zone_rows = zattrs.to_dict("records")  # cheap scalar access
         out_cols = [f.name for f in schema.fields]
         for pdf in batches:
@@ -606,12 +605,11 @@ def intersect_polygons_with_zones(
     index = zones.index(res=index_res)
     b_index = spark.sparkContext.broadcast(index)
     b_attrs = spark.sparkContext.broadcast(zones.attrs)
-    b_geoms = spark.sparkContext.broadcast(zones.geoms)
 
     def compute(batches):
         idx: ZoneIndex = b_index.value
         zattrs: pd.DataFrame = b_attrs.value
-        zgeoms = b_geoms.value
+        zgeoms = idx.zone_rings  # the index's parsed zone polygons
         zone_rows = zattrs.to_dict("records")
         for pdf in batches:
             out_rows = []
@@ -712,7 +710,6 @@ def spatial_left_join_with_zones(
     index = zones.index(res=index_res)
     b_index = spark.sparkContext.broadcast(index)
     b_attrs = spark.sparkContext.broadcast(zones.attrs)
-    b_geoms = spark.sparkContext.broadcast(zones.geoms)
 
     existing = set(df.columns)
     zone_renames = {}
@@ -731,7 +728,7 @@ def spatial_left_join_with_zones(
     def compute(batches):
         idx: ZoneIndex = b_index.value
         zattrs: pd.DataFrame = b_attrs.value
-        zgeoms = b_geoms.value
+        zgeoms = idx.zone_rings  # the index's parsed zone polygons
         zone_rows = zattrs.to_dict("records")
         for pdf in batches:
             out_rows = []

@@ -150,10 +150,11 @@ class ZoneIndex:
 
         zone_ids = [zid for zid, _ in parsed]
         zone_rings = [polys for _, polys in parsed]
-        # batched cover classification (geom_batch): one set of NumPy
-        # passes over ALL zones instead of ~0.3 ms/zone of small-array
-        # dispatch — per-zone {cell: full} content is pinned identical
-        # to zone_min_res + zone_cover_cells
+        # batched cover classification (geom_batch): NumPy passes over
+        # ALL zones whose cost follows the boundary, not the cover — each
+        # ring segment meets only the cells of its own bbox (crossing)
+        # and the cell rows it straddles (full).  Per-zone {cell: full}
+        # content is pinned identical to zone_min_res + zone_cover_cells
         from osm_chordify_spark import geom_batch as GB
 
         zone_arr32, cell_arr, full_arr, zres = GB.zone_cover_cells_batch(

@@ -3,14 +3,39 @@
 Local-mode knobs mirror what a cluster submit would set via spark-submit
 conf: AQE on (runtime re-plan + skew-join splitting), Arrow on (all our
 geometry kernels are Arrow-batched pandas UDFs), shuffle partitions sized
-to cores rather than the 200 default.
+to cores rather than the 200 default.  The core count and driver heap
+default to the host's (``SPARK_GRAFT_CPUS`` / ``SPARK_DRIVER_MEM`` and
+``extra_conf`` override them).
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import SparkSession
+
+# the former fixed heap default; the host-derived heap never exceeds it
+_MAX_DRIVER_MEM_MB = 48 * 1024
+
+
+def default_driver_memory(meminfo: str) -> str:
+    """Local-mode driver heap from ``/proc/meminfo`` text: half of
+    MemTotal (the JVM runs every task in local mode; the other half is
+    left to Python workers and the OS), at least 1 GB, at most 48 GB;
+    48 GB when MemTotal is missing."""
+    m = re.search(r"^MemTotal:\s+(\d+) kB", meminfo, re.M)
+    if not m:
+        return f"{_MAX_DRIVER_MEM_MB}m"
+    return f"{min(max(int(m.group(1)) // 2048, 1024), _MAX_DRIVER_MEM_MB)}m"
+
+
+def _host_driver_memory() -> str:
+    try:
+        with open("/proc/meminfo") as f:
+            return default_driver_memory(f.read())
+    except OSError:
+        return default_driver_memory("")
 
 
 def get_spark(
@@ -19,7 +44,7 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         # match parallelism; AQE coalesces small partitions at runtime
@@ -33,7 +58,8 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEM") or _host_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -124,3 +124,12 @@ def test_kmeans_param_validation(spark):
         kmeans_assign(df, iters=0)
     with pytest.raises(ValueError):
         kmeans_assign(df, scale=1000)  # not a power of two
+
+
+@pytest.mark.parametrize("bad", [[1.0, 2.0], [], None])
+def test_kmeans_rejects_ragged_vectors(spark, bad):
+    """A vector shorter than d (or empty, or null) would drop out of the
+    per-(cluster, component) counts and silently shift its centroid."""
+    rows = _blob_rows() + [(999, bad, 0)]
+    with pytest.raises(ValueError, match="one length"):
+        kmeans_assign(_df(spark, rows), k=4, iters=1)

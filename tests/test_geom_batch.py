@@ -99,8 +99,9 @@ def test_inside_points_bit_parity(zones):
         assert np.array_equal(got[m], ref), f"zone {z}"
 
 
-def test_zone_cover_cells_batch_parity(zones):
-    res, world, mx = 9, ci.WORLD, 4096
+def _assert_cover_parity(zones, res, world=ci.WORLD, mx=4096):
+    """Batch covers ≡ per-zone ``zone_min_res`` + ``zone_cover_cells``,
+    dict for dict."""
     zidx, cells, fulls, zres = GB.zone_cover_cells_batch(
         zones, res, world, mx, return_res=True
     )
@@ -118,6 +119,65 @@ def test_zone_cover_cells_batch_parity(zones):
             for k, v in ZI.zone_cover_cells(polys, zr, world, mx).items()
         }
         assert batch_map.get(u, {}) == seen, f"zone {u}"
+    return zres
+
+
+def test_zone_cover_cells_batch_parity(zones):
+    _assert_cover_parity(zones, 9)
+
+
+@pytest.mark.parametrize("world", [ci.WORLD, (-180.0, -90.0, 180.3, 90.1)])
+def test_zone_cover_cells_batch_grid_aligned_parity(world):
+    """Zones whose edges and vertices sit exactly on res-9 cell lines —
+    the inputs where the segment-driven crossing pass and the
+    row-straddler winding pass would lose a cell if their cell ranges
+    were not widened at grid lines.  The second world has non-dyadic
+    cell sizes, so grid-line coordinates map to cell coordinates a few
+    ulps off the integer."""
+    wx0, wy0, wx1, wy1 = world
+    w, h = (wx1 - wx0) / 512.0, (wy1 - wy0) / 512.0  # res-9 cell size
+
+    def gx(i):  # the cellindex.cell_bounds expression
+        return wx0 + i * w
+
+    def gy(j):
+        return wy0 + j * h
+
+    def box(i0, j0, i1, j1):
+        return np.array([[gx(i0), gy(j0)], [gx(i1), gy(j0)],
+                         [gx(i1), gy(j1)], [gx(i0), gy(j1)]])
+
+    ang = np.linspace(0, 2 * np.pi, 4000, endpoint=False)
+    rad = 30 + 0.7 * np.sin(37 * ang)
+    wiggly = np.stack([10 + rad * np.cos(ang), 5 + rad * np.sin(ang)], axis=1)
+    zs = [
+        # square with every side on a cell line
+        [[box(300, 260, 304, 263)]],
+        # vertex exactly on a cell corner, other vertices off-grid
+        [[np.array([[gx(310), gy(270)], [gx(313) + 0.1, gy(271) + 0.05],
+                    [gx(311) + 0.3, gy(274) + 0.2]])]],
+        # horizontal edges on row y0 lines (bottom and an inner step)
+        [[np.array([[gx(320) + 0.2, gy(250)], [gx(326) + 0.1, gy(250)],
+                    [gx(326) + 0.1, gy(253)], [gx(323) + 0.3, gy(253)],
+                    [gx(323) + 0.3, gy(256) + 0.1], [gx(320) + 0.2, gy(256) + 0.1]])]],
+        # holed zone: off-grid outer, hole edges on cell lines
+        [[np.array([[gx(330) - 0.2, gy(240) - 0.1], [gx(338) + 0.2, gy(240) - 0.1],
+                    [gx(338) + 0.2, gy(248) + 0.1], [gx(330) - 0.2, gy(248) + 0.1]]),
+          box(332, 242, 336, 246)]],
+        # diagonal through cell corners, with a zero-length edge on one
+        [[np.array([[gx(340), gy(230)], [gx(340), gy(230)], [gx(345), gy(235)],
+                    [gx(340), gy(235)]])]],
+        # two grid-aligned squares sharing an edge (dedupe, OR(full))
+        [[box(350, 220, 352, 222)], [box(352, 220, 355, 222)]],
+        # past the world's east edge (covers clip to the last column)
+        [[np.array([[179.0, 10.0], [185.0, 10.0], [185.0, 12.0], [179.0, 12.0]])]],
+        # ~4 000 wiggly vertices: the 4096-cell guard coarsens this zone
+        [[wiggly]],
+        [[np.array([[1.0, 1.0]])]],  # degenerate single-point ring
+        [],  # empty zone
+    ]
+    zres = _assert_cover_parity(zs, 9, world)
+    assert zres[7] < 9 and zres[0] == 9  # mixed resolution
 
 
 def _piece_bytes(pieces):

@@ -54,9 +54,13 @@ METRIC_COLS = [
 def test_dist_path_hash_parity_with_broadcast(spark):
     """Both paths over 36 grid zones: identical rows, identical values,
     byte-identical piece geometry (they share the clip kernel and the
-    cell classification by construction — this pins it)."""
+    cell classification by construction — this pins it).  The empty
+    zone has no cover cells, so it is never a candidate on either path
+    (the broadcast kernels read the index's parsed zone rings)."""
     edges = _edges(spark)
-    zones = I.Zones.from_records(_grid_zones())
+    empty = {"zone_id": "EMPTY", "geometry": G.wkb_multipolygon([])}
+    zones = I.Zones.from_records(_grid_zones() + [empty])
+    assert zones.geoms[-1] == []
     zdf = ID.zones_to_df(spark, zones)
     a = (
         I.intersect_lines_with_zones(edges, zones)
