@@ -161,6 +161,34 @@ def cover_bbox(x0, y0, x1, y1, res: int, world=WORLD, max_cells: int = 4096):
     return make_cell(res, gx.ravel(), gy.ravel())
 
 
+def cover_bboxes(x0, y0, x1, y1, res_list, world=WORLD, max_cells: int = 4096):
+    """``cover_bbox`` of many bboxes at every resolution of ``res_list``
+    in one CSR expansion: (row, cells, n_cells) arrays, bbox-major, then
+    resolution, each cover in ``cover_bbox``'s row-major order and
+    floor/clamp arithmetic.  Raises like ``cover_bbox``."""
+    wx0, wy0, wx1, wy1 = world
+    res = np.asarray(res_list, dtype=np.int64)[None, :]
+    n = np.int64(1) << res
+
+    def floor_at(v, w0, w1):
+        f = np.floor((_as_np(v, np.float64)[:, None] - w0) / (w1 - w0) * n)
+        return np.clip(f, 0, n - 1).astype(np.int64)
+
+    fx0, fy0 = floor_at(x0, wx0, wx1), floor_at(y0, wy0, wy1)
+    nx = floor_at(x1, wx0, wx1) - fx0 + 1
+    cnt = (nx * (floor_at(y1, wy0, wy1) - fy0 + 1)).ravel()
+    if cnt.size and cnt.max() > max_cells:
+        raise ValueError(f"bbox cover of {cnt.max()} cells exceeds max_cells={max_cells}")
+
+    def rep(a):  # one value per (bbox, res) → one per emitted cell
+        return np.repeat(np.broadcast_to(a, fx0.shape).ravel(), cnt)
+
+    k = np.arange(cnt.sum()) - np.repeat(np.cumsum(cnt) - cnt, cnt)
+    nxr = rep(nx)
+    cells = make_cell(rep(res), rep(fx0) + k % nxr, rep(fy0) + k // nxr)
+    return rep(np.arange(len(fx0))[:, None]), cells, np.repeat(cnt, cnt)
+
+
 def pick_cover_res(x0, y0, x1, y1, res: int, world=WORLD, max_cells: int = 4096):
     """Coarsen ``res`` until the bbox cover fits in ``max_cells``."""
     r = res

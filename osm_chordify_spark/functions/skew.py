@@ -90,6 +90,13 @@ def fan_out(df: DataFrame, min_factor: int = 1) -> DataFrame:
     at lake scale the scan already has ≥ parallelism partitions and this
     is a no-op — scale-adaptive, not tuned to any fixed core count
     (guide §2.2/§6: partition count from input size AND cluster size).
+
+    The probe reads the PRE-AQE partition count: after a shuffle it sees
+    ``spark.sql.shuffle.partitions``, not the count AQE coalesces to, so
+    it cannot spread a coalesced exchange (use an explicit
+    ``repartition`` there).  ``getNumPartitions`` plans the DataFrame:
+    45–65 ms of driver time per call over a parquet scan, about 0.2 s
+    over a scan + aggregate + join (4-core host, warm session).
     """
     sc = df.sparkSession.sparkContext
     target = sc.defaultParallelism * min_factor

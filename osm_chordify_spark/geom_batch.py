@@ -74,6 +74,22 @@ def _csr_chunks(cnt, chunk):
         start = end
 
 
+def round_dp(x, k: int) -> np.ndarray:
+    """``builtins.round(v, k)`` of every value, bit for bit, as array ops.
+    Below 2⁵⁰ every half-integer is a double, so the rounded product
+    ``v·10ᵏ`` can land on one but never cross it: ``rint(v·10ᵏ)/10ᵏ`` is
+    exact off the near-tie band ``|frac − 0.5| < 1e-6``.  That band,
+    larger and non-finite values fall back to ``builtins.round``."""
+    x = np.asarray(x, dtype=np.float64)
+    with np.errstate(over="ignore", invalid="ignore"):
+        y = x * 10.0 ** k
+        out = np.rint(y) / 10.0 ** k
+        slow = ~(np.abs(y) <= 2.0 ** 50) | (np.abs(y - np.floor(y) - 0.5) < 1e-6)
+    for i in np.flatnonzero(slow):
+        out[i] = round(float(x[i]), k)
+    return out
+
+
 class FlatZones:
     """Flattened segment/ring/polygon structure for a list of zones.
 

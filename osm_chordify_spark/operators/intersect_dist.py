@@ -38,11 +38,19 @@ Output is row-for-row and value-identical to
 ``_assemble_schema``, rounding from the same kernels) — pytest asserts
 hash-parity between the two paths.
 
-Scale shape: no broadcast anywhere; the only driver-side values are
-scalars (effective resolution, global edge bbox, mean zone WKB size).
-Shuffles: cell join, candidate groupBy and the two re-attach joins (or
-the cogroup) — all on keys AQE can handle; the fact side is never
-collected.
+Scale shape: no broadcast is forced; the only driver-side values are
+scalars (occupied resolutions and mean zone WKB size from one collect,
+global edge bbox for void rows).  Exchanges per call: **zone fan-out**
+and **edge fan-out** (round-robin of a scan with fewer splits than
+cores; the edge one feeds only the cover explode), the **candidate
+aggregate** on (edge, zone), and the **edge-hash split**
+``repartition(defaultParallelism, edge)`` that puts the pair kernel on
+every core (AQE coalesces the aggregate's few-hundred-KB output to one
+partition, but never a ``REPARTITION_BY_NUM``); plus the cell join and
+the payload re-attach joins (or the cogroup), broadcast or shuffled by
+size.  When the payload joins are shuffle joins, the split costs one
+id-only exchange of about 17 B per candidate pair (443 KB for 26.9k
+pairs measured).  The fact side is never collected.
 
 The transport trade-off (the replicate-vs-partition choice of *MPR*,
 ICDE'19): the join repeats a zone's WKB once per candidate pair through
@@ -118,14 +126,6 @@ def _parse_once(ids, geoms, parse):
     return [parse(bytes(geoms[int(i)])) for i in first], codes
 
 
-def _use_cogroup(zindexed: DataFrame) -> bool:
-    """Mean zone WKB ≥ ``COGROUP_WKB_BYTES`` → cogroup transport (one
-    cheap aggregate over the zone payload; its lazy checkpoint
-    materializes here and is reused by every later consumer)."""
-    avg = zindexed.agg(F.avg(F.length("__zgeom"))).first()[0] or 0.0
-    return avg >= COGROUP_WKB_BYTES
-
-
 def _cogroup_key(salt):
     return F.concat_ws(
         "#",
@@ -165,15 +165,50 @@ def _cogroup_reattach(pairs: DataFrame, zindexed: DataFrame, kern,
     )
 
 
-def _zone_res_list(zcells: DataFrame, cell_col: str = "cell") -> list[int]:
-    """Sorted distinct resolutions occupied by a zone cover-cell table
-    (≤ MAX_RES+1 values) — the probe side explodes its covers at exactly
-    these resolutions.  One tiny distinct over the (already
-    materialized) zone side."""
-    rows = zcells.select(
-        F.shiftright(cell_col, 58).alias("r")
-    ).distinct().collect()
-    return sorted(int(r.r) for r in rows)
+def _zone_cover_stats(zcells: DataFrame, cell_col: str = "cell"):
+    """(sorted occupied resolutions, mean zone WKB bytes) of a zone
+    cover-cell table from one tiny aggregate — the probe side explodes
+    its covers at exactly these resolutions.  The mean reads ``__zwkb``
+    (a zone's WKB length on its first cover row, else 0; 0 without it),
+    so zones with no cover cell, which never join, do not count."""
+    wkb = F.col("__zwkb") if "__zwkb" in zcells.columns else F.lit(0)
+    rows = zcells.groupBy(F.shiftright(cell_col, 58).alias("r")).agg(
+        F.sum(wkb).alias("b"), F.count(F.when(wkb > 0, 1)).alias("n")
+    ).collect()
+    n = sum(r.n for r in rows)
+    return sorted(int(r.r) for r in rows), (sum(r.b for r in rows) / n if n else 0.0)
+
+
+def _edge_measures(geoms) -> np.ndarray:
+    """(measure, x0, y0, x1, y1) rows for a batch of line or polygon
+    WKBs, each parsed once.  Lines measure their length, polygon
+    subjects their area (the broadcast op's subj_area); the bbox spans
+    the line vertices or the outer rings."""
+    out = np.empty((len(geoms), 5))
+    for i, g in enumerate(geoms):
+        kind, data = G.parse_wkb(bytes(g))
+        if kind in ("polygon", "multipolygon"):
+            polys = [data] if kind == "polygon" else data
+            parts = [rings[0] for rings in polys]
+            m = sum(G.polygon_area(rings) for rings in polys)
+        else:
+            parts = [data] if kind == "linestring" else data
+            m = sum(G.polyline_length(ln) for ln in parts)
+        c = np.concatenate(parts)
+        out[i] = (m, *c.min(axis=0), *c.max(axis=0))
+    return out
+
+
+def _edge_cover_rows(pdf: pd.DataFrame, res_list, world) -> pd.DataFrame:
+    """Batch-wide edge covers: one (__eid, cell, n_cells, __elen, bbox)
+    row per bbox cover cell of every edge at every resolution of
+    ``res_list`` (``ci.cover_bboxes``), carrying the 2-dp measure."""
+    m, x0, y0, x1, y1 = _edge_measures(pdf["geometry"]).T
+    row, cells, ncs = ci.cover_bboxes(x0, y0, x1, y1, res_list, world,
+                                      max_cells=1 << 20)
+    return pd.DataFrame({"__eid": pdf["__eid"].to_numpy()[row], "cell": cells,
+                         "n_cells": ncs.astype(np.int32), "__elen": GB.round_dp(m, 2)[row],
+                         "__ex0": x0[row], "__ey0": y0[row], "__ex1": x1[row], "__ey1": y1[row]})
 
 
 def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_renames,
@@ -221,80 +256,41 @@ def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_renames,
                 polys_list, index_res, world, max_cells_per_zone,
                 return_bbox=True,
             )
+            # each zone's WKB length on its first cover row (zidx is
+            # zone-sorted) feeds the cogroup switch via _zone_cover_stats
+            zwkb = np.where(np.diff(zidx, prepend=-1) != 0,
+                            pdf["__zgeom"].map(len).to_numpy()[zidx], 0)
             yield pd.DataFrame(
                 {"__zid": pdf["__zid"].to_numpy()[zidx],
                  "cell": pd.Series(cells, dtype="int64"),
                  "full": pd.Series(fulls, dtype="bool"),
                  "__zx0": zx0[zidx], "__zy0": zy0[zidx],
-                 "__zx1": zx1[zidx], "__zy1": zy1[zidx]}
+                 "__zx1": zx1[zidx], "__zy1": zy1[zidx], "__zwkb": zwkb}
             )
 
     # materialized once: read twice (res-list collect + the equi-join)
     zcells = zindexed.select("__zid", "__zgeom").mapInPandas(
         zone_cells,
-        schema="__zid long, cell long, full boolean, "
-               "__zx0 double, __zy0 double, __zx1 double, __zy1 double",
+        schema="__zid long, cell long, full boolean, __zx0 double, "
+               "__zy0 double, __zx1 double, __zy1 double, __zwkb long",
     ).localCheckpoint(eager=False)
-    res_list = _zone_res_list(zcells) or [index_res]
+    res_list, zwkb_mean = _zone_cover_stats(zcells)
+    res_list = res_list or [index_res]
 
     # ---- edge side: ids + (cell, n_cells, rounded length) cover rows ----
-    # fan_out: a tiny single-split fact scan would otherwise run the
-    # cover/clip kernels on one core.  Ids are assigned BEFORE the
-    # repartition: monotonically_increasing_id on the narrow scan plan is
-    # deterministic, so the two consumers of ``e`` (payload + cover
-    # explode) see identical ids even though each re-executes the
-    # exchange; assigning after the shuffle would tie ids to block-fetch
-    # order and silently break the candidate join.
-    e = fan_out(edges.withColumn("__eid", F.monotonically_increasing_id()))
+    # Ids are assigned on the narrow scan plan, where they are
+    # deterministic, so the payload and the cover explode see identical
+    # ids (after a shuffle they would follow block-fetch order and break
+    # the candidate join).  Only the cover explode takes the fan_out
+    # exchange: one edge-scan exchange per call.
+    e = edges.withColumn("__eid", F.monotonically_increasing_id())
     epay = e.select(
         "__eid",
         F.col("geometry").alias("__egeom"),
         *[F.col(c).alias(edge_renames[c]) for c in edge_attr_cols],
     )
-
-    def edge_cells(batches):
-        for pdf in batches:
-            eids, cells, ncs, lens = [], [], [], []
-            bxs0, bys0, bxs1, bys1 = [], [], [], []
-            for eid, g in zip(pdf["__eid"], pdf["geometry"]):
-                kind, _ = G.parse_wkb(bytes(g))
-                if kind in ("polygon", "multipolygon"):
-                    polys = G.geometry_polygons(bytes(g))
-                    parts = [rings[0] for rings in polys]
-                    # polygon subjects: the carried measure is the rounded
-                    # subject AREA (the broadcast op's subj_area)
-                    elen = round(sum(G.polygon_area(rings) for rings in polys), 2)
-                else:
-                    parts = G.geometry_lines(bytes(g))
-                    elen = round(sum(G.polyline_length(ln) for ln in parts), 2)
-                xs = np.concatenate([np.asarray(pt)[:, 0] for pt in parts])
-                ys = np.concatenate([np.asarray(pt)[:, 1] for pt in parts])
-                bx0, by0 = xs.min(), ys.min()
-                bx1, by1 = xs.max(), ys.max()
-                for rr in res_list:
-                    cover = ci.cover_bbox(
-                        bx0, by0, bx1, by1, rr, world, max_cells=1 << 20,
-                    )
-                    n = len(cover)
-                    eids.extend([eid] * n)
-                    cells.extend(cover.tolist())
-                    ncs.extend([n] * n)
-                    lens.extend([elen] * n)
-                    bxs0.extend([bx0] * n)
-                    bys0.extend([by0] * n)
-                    bxs1.extend([bx1] * n)
-                    bys1.extend([by1] * n)
-            yield pd.DataFrame({"__eid": pd.Series(eids, dtype="int64"),
-                                "cell": pd.Series(cells, dtype="int64"),
-                                "n_cells": pd.Series(ncs, dtype="int32"),
-                                "__elen": pd.Series(lens, dtype="float64"),
-                                "__ex0": pd.Series(bxs0, dtype="float64"),
-                                "__ey0": pd.Series(bys0, dtype="float64"),
-                                "__ex1": pd.Series(bxs1, dtype="float64"),
-                                "__ey1": pd.Series(bys1, dtype="float64")})
-
-    ecells = e.select("__eid", "geometry").mapInPandas(
-        edge_cells,
+    ecells = fan_out(e.select("__eid", "geometry")).mapInPandas(
+        lambda batches: (_edge_cover_rows(pdf, res_list, world) for pdf in batches),
         schema="__eid long, cell long, n_cells int, __elen double, "
                "__ex0 double, __ey0 double, __ex1 double, __ey1 double",
     )
@@ -331,8 +327,13 @@ def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_renames,
             (F.col("__hits") == F.col("__ncells")) & (F.col("__allfull") == 1),
         )
         .select("__eid", "__zid", "__contained", "__elen")
+        # edge-hash split onto every core: REPARTITION_BY_NUM, which AQE
+        # never coalesces, so the CPU-bound pair kernel is sized by cores,
+        # not by the few-hundred-KB candidate bytes; each edge's pairs
+        # stay in one task, so its WKB is parsed once
+        .repartition(edges.sparkSession.sparkContext.defaultParallelism, "__eid")
     )
-    return e, epay, zindexed, cand, min(res_list)
+    return e, epay, zindexed, cand, zwkb_mean
 
 
 def intersect_lines_with_zones_dist(
@@ -365,7 +366,7 @@ def intersect_lines_with_zones_dist(
         out_fields = out_fields + [StructField("__zid", LongType(), True)]
     kern_schema = StructType(out_fields)
 
-    e, epay, zindexed, cand, eff_res = _build_candidates(
+    e, epay, zindexed, cand, zwkb_mean = _build_candidates(
         edges, zones_df, zone_fields, zone_renames, edge_renames,
         edge_attr_cols, geometry_col, index_res, world, max_cells_per_zone,
     )
@@ -404,27 +405,16 @@ def intersect_lines_with_zones_dist(
                 )
             else:
                 zone_len[pend] = GB.clip_pairs_totals(edge_lines, ec, zone_polys, zc)
-        # rounding via Python round() — the exact idiom of the broadcast
-        # kernel (banker's rounding on the decimal repr, not np.round)
-        zl = [
-            float(elen[i]) if contained[i] else round(float(zone_len[i]), 2)
-            for i in range(n)
-        ]
-        keep = [
-            i for i in range(n)
-            if contained[i] or zl[i] > 0
-        ]
-        mpv = [
-            (1.0 if elen[i] > 0 else 0.0) if contained[i]
-            else (round(zl[i] / elen[i], 4) if elen[i] > 0 else 0.0)
-            for i in keep
-        ]
+        # round_dp is builtins.round bit for bit — the exact idiom of the
+        # broadcast kernel (banker's rounding on the decimal repr, not
+        # np.round)
+        zl = np.where(contained, elen, GB.round_dp(zone_len, 2))
+        keep = np.flatnonzero(contained | (zl > 0))
+        ck, ek, zk = contained[keep], elen[keep], zl[keep]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ratio = GB.round_dp(np.where(ek > 0, zk / ek, 0.0), 4)
         base = pdf.iloc[keep].reset_index(drop=True)
-        out = {
-            mp: mpv,
-            me: [float(elen[i]) for i in keep],
-            mz: [zl[i] for i in keep],
-        }
+        out = {mp: np.where(ck, (ek > 0).astype(np.float64), ratio), me: ek, mz: zk}
         if keep_geometry:
             pend_pos = np.zeros(n, dtype=np.int64)
             pend_pos[pend] = np.arange(len(pend))
@@ -446,7 +436,7 @@ def intersect_lines_with_zones_dist(
             out["__zid"] = base["__zid"]
         return pd.DataFrame(out, columns=out_names)
 
-    if _use_cogroup(zindexed):
+    if zwkb_mean >= COGROUP_WKB_BYTES:
         result = _cogroup_reattach(
             cand.join(epay, "__eid"), zindexed, kern_batch, kern_schema
         )
@@ -510,12 +500,8 @@ def _append_void_rows_dist(result, e, zindexed, zone_fields, zone_renames,
 
 def _edge_bbox_batches(batches):
     for pdf in batches:
-        arr = np.array(
-            [G.bbox(np.vstack(G.geometry_lines(bytes(g)))) for g in pdf["geometry"]]
-        )
-        yield pd.DataFrame(
-            {"x0": arr[:, 0], "y0": arr[:, 1], "x1": arr[:, 2], "y1": arr[:, 3]}
-        )
+        yield pd.DataFrame(_edge_measures(pdf["geometry"])[:, 1:],
+                           columns=["x0", "y0", "x1", "y1"])
 
 
 def spatial_left_join_with_zones_dist(
@@ -549,7 +535,7 @@ def spatial_left_join_with_zones_dist(
         out = zone_output_name(zf.name, existing, prefix=_label(zone_label) or "zone")
         zone_renames[zf.name] = out
         existing.add(out)
-    e, epay, zindexed, cand, eff_res = _build_candidates(
+    e, epay, zindexed, cand, _ = _build_candidates(
         df, zones_df, zone_fields, zone_renames, {}, [],
         geometry_col, index_res, world, max_cells_per_zone,
     )
@@ -634,7 +620,7 @@ def intersect_polygons_with_zones_dist(
         polys.schema, zone_fields, base_names, zone_label, keep_geometry,
         extra_metrics=extra,
     )
-    e, epay, zindexed, cand, eff_res = _build_candidates(
+    e, epay, zindexed, cand, _ = _build_candidates(
         polys, zones_df, zone_fields, zone_renames, edge_renames,
         edge_attr_cols, geometry_col, index_res, world, max_cells_per_zone,
     )
@@ -778,7 +764,7 @@ def nearest_zone_dist(
         .mapInPandas(zone_cells, schema="__zid long, __cell long")
         .localCheckpoint(eager=False)
     )
-    res_list = _zone_res_list(zcells, "__cell") or [index_res]
+    res_list = _zone_cover_stats(zcells, "__cell")[0] or [index_res]
 
     px, py = point_xy
     # internal ordinal point id (frozen): the search state schemas are

@@ -859,9 +859,9 @@ def zonal_stats_dist(
     zcells = zindexed.select("__zid", "__zgeom").mapInPandas(
         zone_cells, schema="__zid long, __icell long, full boolean"
     ).localCheckpoint(eager=False)
-    from osm_chordify_spark.operators.intersect_dist import _parse_once, _zone_res_list
+    from osm_chordify_spark.operators.intersect_dist import _parse_once, _zone_cover_stats
 
-    res_list = _zone_res_list(zcells, "__icell") or [res]
+    res_list = _zone_cover_stats(zcells, "__icell")[0] or [res]
 
     # raster cells → index cell of the CENTER at each occupied
     # resolution, all codegen (a point matches a zone through exactly

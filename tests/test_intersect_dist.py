@@ -312,9 +312,11 @@ def test_cogroup_reattach_parity_with_join_on_high_vertex_zone(spark, monkeypatc
             }
         )
     )
-    assert ID._use_cogroup(zdf.select(
-        F.monotonically_increasing_id().alias("__zid"),
-        F.col("geometry").alias("__zgeom")))
+    zone_fields = [f for f in zdf.schema.fields if f.name != "geometry"]
+    *_, zwkb_mean = ID._build_candidates(
+        edges, zdf, zone_fields, {"zone_id": "zone_zone_id"}, {}, [],
+        "geometry", 9, ID.ci.WORLD, 4096)
+    assert zwkb_mean >= ID.COGROUP_WKB_BYTES
     outs = {}
     for mode, threshold in (("join", float("inf")), ("cogroup", 0)):
         monkeypatch.setattr(ID, "COGROUP_WKB_BYTES", threshold)
@@ -425,3 +427,61 @@ def test_nearest_zone_dist_far_outside_escalates(spark):
     # escalation must not be slower; in practice it's ~2x+ faster
     # (4 driver rounds vs 9) — assert a loose floor to stay noise-proof
     assert t_fast < t_slow * 1.2, (t_fast, t_slow)
+
+
+def _edge_cover_rows_loop(pdf, res_list, world):
+    """The per-edge reference: one ``ci.cover_bbox`` per (edge, res)."""
+    from osm_chordify_spark import cellindex as ci
+
+    rows = []
+    for eid, g in zip(pdf["__eid"], pdf["geometry"]):
+        kind, _ = G.parse_wkb(bytes(g))
+        if kind in ("polygon", "multipolygon"):
+            polys = G.geometry_polygons(bytes(g))
+            parts = [rings[0] for rings in polys]
+            elen = round(sum(G.polygon_area(rings) for rings in polys), 2)
+        else:
+            parts = G.geometry_lines(bytes(g))
+            elen = round(sum(G.polyline_length(ln) for ln in parts), 2)
+        xs = np.concatenate([np.asarray(pt)[:, 0] for pt in parts])
+        ys = np.concatenate([np.asarray(pt)[:, 1] for pt in parts])
+        bb = (xs.min(), ys.min(), xs.max(), ys.max())
+        for rr in res_list:
+            cover = ci.cover_bbox(*bb, rr, world, max_cells=1 << 20)
+            rows += [(eid, int(c), len(cover), elen, *bb) for c in cover]
+    return rows
+
+
+def test_batch_edge_covers_equal_per_edge_loop():
+    """The batch-wide edge cover gives the same multiset of (eid, cell,
+    n_cells, __elen, bbox) rows as the per-edge ``cover_bbox`` loop at two
+    resolutions, on grid-line, clamped, zero-length, multi-part and
+    polygon subjects; the void-row bbox path reads the same bboxes."""
+    world = (0.0, 0.0, 16.0, 16.0)  # res 4 → unit cells, res 2 → 4-wide
+    sq = [[3.0, 3.0], [7.0, 3.0], [7.0, 7.0], [3.0, 7.0]]
+    hole = [[4.0, 4.0], [5.0, 4.0], [5.0, 5.0], [4.0, 5.0]]
+    geoms = [
+        G.wkb_linestring([[2.0, 0.0], [2.0, 5.0]]),            # on x = 2
+        G.wkb_linestring([[0.0, 4.0], [8.0, 4.0], [8.0, 12.0]]),  # on grid
+        G.wkb_linestring([[-3.0, 1.5], [5.5, 20.0]]),           # clamped
+        G.wkb_linestring([[20.0, -4.0], [30.0, -2.0]]),         # outside
+        G.wkb_linestring([[1.5, 1.5], [1.5, 1.5]]),             # zero length
+        G.wkb_linestring([[16.0, 16.0], [16.0, 16.0]]),         # world corner
+        G.wkb_multilinestring([[[0.5, 0.5], [1.5, 0.7]],
+                               [[9.2, 9.9], [12.0, 15.99]]]),
+        G.wkb_polygon([sq, hole]),
+        G.wkb_multipolygon([[sq], [[[10.0, 1.0], [12.5, 1.0], [11.0, 3.3]]]]),
+    ]
+    pdf = pd.DataFrame({"__eid": np.arange(100, 100 + len(geoms)), "geometry": geoms})
+    res_list = [2, 4]
+    got = ID._edge_cover_rows(pdf, res_list, world)
+    assert list(got.columns) == ["__eid", "cell", "n_cells", "__elen",
+                                 "__ex0", "__ey0", "__ex1", "__ey1"]
+    exp = _edge_cover_rows_loop(pdf, res_list, world)
+    assert sorted(map(tuple, got.itertuples(index=False))) == sorted(exp)
+    assert len(got) == len(exp) > len(geoms) * len(res_list)
+
+    lines = pdf.iloc[:7]
+    (bb,) = ID._edge_bbox_batches([lines])
+    exp_bb = [G.bbox(np.vstack(G.geometry_lines(bytes(g)))) for g in lines["geometry"]]
+    assert [tuple(r) for r in bb.itertuples(index=False)] == exp_bb

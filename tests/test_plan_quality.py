@@ -72,10 +72,8 @@ def test_dist_zone_join_is_equi_join_plus_one_agg_shuffle(spark):
     assert "partial_count" in plan  # map-side combine on the containment agg
 
 
-def test_dist_zone_family_has_no_regroup_exchange(spark):
-    """Every distributed zone operator runs one batch kernel straight off
-    the re-attach joins: no grouped-map repartition for the lines path
-    with piece geometry, the left join, or polygon subjects."""
+def _dist_lines_fixture(spark):
+    """50 two-split edges × 8 unit zones: a candidate shuffle of a few KB."""
     import numpy as np
     import pandas as pd
     from pyspark.sql import functions as F
@@ -96,7 +94,18 @@ def test_dist_zone_family_has_no_regroup_exchange(spark):
             [[i, 0.0], [i + 1.0, 0.0], [i + 1.0, 1.0], [i, 1.0]], float)]}
         for i in range(8)
     ]))
-    lines = ID.intersect_lines_with_zones_dist(edges, zdf, keep_geometry=True)
+    return edges, zdf
+
+
+def test_dist_zone_family_has_no_regroup_exchange(spark):
+    """Every distributed zone operator runs one batch kernel straight off
+    the re-attach joins: no grouped-map repartition for the lines path
+    with piece geometry, the left join, or polygon subjects."""
+    from osm_chordify_spark.operators import intersect_dist as ID
+
+    lines = ID.intersect_lines_with_zones_dist(
+        *_dist_lines_fixture(spark), keep_geometry=True
+    )
     plans = {
         "lines keep_geometry": lines._jdf.queryExecution().executedPlan().toString(),
         "left join": _plan(spark, "spatial_left_join_dist"),
@@ -105,6 +114,35 @@ def test_dist_zone_family_has_no_regroup_exchange(spark):
     for name, plan in plans.items():
         assert "MapInPandas" in plan, name
         assert "REPARTITION_BY_COL" not in plan, name
+
+
+def test_dist_pair_kernel_runs_on_every_core(spark):
+    """A candidate shuffle far below AQE's 1 MB coalescing floor must not
+    shrink the pair-kernel stage to one task: the candidates end in an
+    edge-hash repartition BY NUMBER, which AQE never coalesces.  The
+    edge scan feeds exactly one round-robin exchange (the cover
+    explode's fan-out); the payload reads the id-tagged scan itself."""
+    from osm_chordify_spark.operators import intersect_dist as ID
+
+    lines = ID.intersect_lines_with_zones_dist(
+        *_dist_lines_fixture(spark), keep_geometry=False
+    )
+    plan = lines._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("RoundRobinPartitioning") == 1, plan
+    assert "REPARTITION_BY_COL" not in plan
+    sc = spark.sparkContext
+    sc.setJobGroup("dist-kernel-pin", "dist pair kernel stage")
+    try:
+        assert len(lines.collect()) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup("dist-kernel-pin"))
+    # the result stage of the final job runs the kernel (its payload
+    # joins are broadcast at this size)
+    kernel_stage = max(tracker.getJobInfo(last_job).stageIds)
+    assert sc._jsc.sc().statusStore().lastStageAttempt(kernel_stage).numTasks() >= 2
 
 
 def test_chordify_no_cartesian_and_arrow_only_python(spark):

@@ -175,3 +175,37 @@ def test_dense_nodes_block_roundtrip(nodes):
     got_lat = (df["lat"].to_numpy() * 1e7).round().astype(int).tolist()
     got_lon = (df["lon"].to_numpy() * 1e7).round().astype(int).tolist()
     assert got_lat == lats and got_lon == lons
+
+
+_ROUND_SPECIALS = [0.125, 2.675, 1.005, 0.5, 2.5, -0.125, -2.675, -1.005, -0.5,
+                   -2.5, 0.00005, 1.23455, -0.0, 0.0, 2.0 ** 50, 2.0 ** 50 + 0.5,
+                   -(2.0 ** 52) - 2.0, 1e300, float("nan"), float("inf"),
+                   float("-inf")]
+
+
+@settings(max_examples=60, deadline=None)
+@given(
+    st.lists(
+        st.one_of(
+            st.floats(allow_nan=True, allow_infinity=True),
+            st.floats(-1e6, 1e6),
+            st.floats(2.0 ** 46, 2.0 ** 54).flatmap(lambda v: st.sampled_from([v, -v])),
+            # decimal ties at the 3rd and 5th place: x.xx5 / x.xxxx5
+            st.integers(-10 ** 9, 10 ** 9).map(lambda i: (10 * i + 5) / 1e3),
+            st.integers(-10 ** 9, 10 ** 9).map(lambda i: (10 * i + 5) / 1e5),
+        ),
+        max_size=40,
+    ),
+    st.sampled_from([2, 4]),
+)
+def test_round_dp_equals_builtin_round(xs, k):
+    """The vectorized rounding of the dist kernels is builtins.round bit
+    for bit (sign of zero and NaN included), on ties, negatives, huge
+    and non-finite values."""
+    from osm_chordify_spark.geom_batch import round_dp
+
+    vals = np.array(xs + _ROUND_SPECIALS, dtype=np.float64)
+    got = round_dp(vals, k)
+    exp = np.array([round(float(v), k) for v in vals])
+    same = (got.view(np.int64) == exp.view(np.int64)) | (np.isnan(got) & np.isnan(exp))
+    assert same.all(), list(zip(vals[~same], got[~same], exp[~same]))
