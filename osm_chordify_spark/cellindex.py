@@ -161,11 +161,10 @@ def cover_bbox(x0, y0, x1, y1, res: int, world=WORLD, max_cells: int = 4096):
     return make_cell(res, gx.ravel(), gy.ravel())
 
 
-def cover_bboxes(x0, y0, x1, y1, res_list, world=WORLD, max_cells: int = 4096):
-    """``cover_bbox`` of many bboxes at every resolution of ``res_list``
-    in one CSR expansion: (row, cells, n_cells) arrays, bbox-major, then
-    resolution, each cover in ``cover_bbox``'s row-major order and
-    floor/clamp arithmetic.  Raises like ``cover_bbox``."""
+def cover_grid(x0, y0, x1, y1, res_list, world=WORLD):
+    """(res, fx0, fy0, nx, cnt) of each (bbox, resolution) cover, shape
+    (n_bbox, n_res): ``cover_bbox``'s floor/clamp arithmetic without the
+    cells — ``cnt`` is the cover size."""
     wx0, wy0, wx1, wy1 = world
     res = np.asarray(res_list, dtype=np.int64)[None, :]
     n = np.int64(1) << res
@@ -176,7 +175,16 @@ def cover_bboxes(x0, y0, x1, y1, res_list, world=WORLD, max_cells: int = 4096):
 
     fx0, fy0 = floor_at(x0, wx0, wx1), floor_at(y0, wy0, wy1)
     nx = floor_at(x1, wx0, wx1) - fx0 + 1
-    cnt = (nx * (floor_at(y1, wy0, wy1) - fy0 + 1)).ravel()
+    return res, fx0, fy0, nx, nx * (floor_at(y1, wy0, wy1) - fy0 + 1)
+
+
+def cover_bboxes(x0, y0, x1, y1, res_list, world=WORLD, max_cells: int = 4096):
+    """``cover_bbox`` of many bboxes at every resolution of ``res_list``
+    in one CSR expansion: (row, cells, n_cells) arrays, bbox-major, then
+    resolution, each cover in ``cover_bbox``'s row-major order and
+    floor/clamp arithmetic.  Raises like ``cover_bbox``."""
+    res, fx0, fy0, nx, cnt = cover_grid(x0, y0, x1, y1, res_list, world)
+    cnt = cnt.ravel()
     if cnt.size and cnt.max() > max_cells:
         raise ValueError(f"bbox cover of {cnt.max()} cells exceeds max_cells={max_cells}")
 

@@ -47,6 +47,9 @@ _FAR = 1e308
 _CHUNK = 4_000_000
 # cell-width margin for "on a grid line"; see _cell_range
 _GRID_EPS = 1e-6
+# zones with at least this many ring segments clip zone by zone, not in
+# the flat pair expansion (see clip_pairs_totals)
+BIG_ZONE_SEGMENTS = 256
 
 
 def _winding_contrib(X, Y, AX, AY, BX, BY):
@@ -281,23 +284,36 @@ class FlatZones:
 
 def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
                       chunk: int = _CHUNK):
-    """Exact inside length per (edge, zone) PAIR, batched across zones —
-    the cross-zone vectorization of
-    ``intersect._exact_clip_edges_vs_zone`` (keep_geometry=False path).
+    """Exact inside length per (edge, zone) PAIR, batched across zones.
 
     ``edge_lines_list[e]``: edge e's polylines (lists of (n, 2) arrays);
     ``zone_polys_list[u]``: zone u's polygons; ``ecodes``/``zcodes``:
     per-pair indices into those lists.  Returns float64 totals aligned
     with the pairs.
 
+    Two kernels, picked per pair by its zone's ring size.  Pairs of a
+    zone with at least ``BIG_ZONE_SEGMENTS`` ring segments are clipped
+    zone by zone (``_clip_zone``: ``geom.clip_segments_batch`` of all the
+    zone's pair segments against each of its polygons); every other pair
+    goes through one flat (pair × polygon, edge segment × ring segment)
+    expansion (``_clip_chunk``).  The flat expansion pays for every ring
+    segment once per edge segment, so it loses on big rings, and the
+    per-zone calls lose on many small zones.  Measured on a 4-vCPU host
+    (``BENCH/one_zone_kernel.md``, with the ring-size sweep): 5,000
+    county pairs (801 vertices) clip in 0.48 s flat and 0.27 s routed;
+    35k tract pairs (9–20 vertices) in 0.63 s flat and 2.2 s zone by
+    zone.  The crossover falls between 16 and 350 vertices as pairs per
+    zone fall from 100 to 1.
+
     Float parity: the per-zone kernel accumulates each line's subtotal
     polygon-major then in (segment, t-interval) order, and each edge's
     total in line order (``np.add.at`` over sorted interval arrays).
-    This function sorts its global interval array by
+    The flat kernel sorts its global interval array by
     (pair, polygon, segment, t) and runs the same two ``np.add.at``
     passes, so every accumulator sees its additions in the identical
-    sequence — totals are bit-identical.  Crossing extraction, exact-t
-    dedup and midpoint classification are the element-for-element
+    sequence — totals are bit-identical on either branch, and no pair's
+    total depends on the other pairs of the call.  Crossing extraction,
+    exact-t dedup and midpoint classification are the element-for-element
     formulas of ``geom.clip_segments_batch``.
     """
     return _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes,
@@ -307,14 +323,87 @@ def clip_pairs_totals(edge_lines_list, ecodes, zone_polys_list, zcodes,
 def clip_pairs_pieces(edge_lines_list, ecodes, zone_polys_list, zcodes,
                       chunk: int = _CHUNK):
     """``clip_pairs_totals`` plus the inside sub-polylines per pair:
-    returns (totals, pieces_per) — per pair, what
-    ``intersect._exact_clip_edges_vs_zone(lines, zpolys, True)`` returns
-    per edge (pieces None where the total is ≤ 0).  Pieces come from the
-    same ``intersect._assemble_pieces`` over the same (segment, t)
-    intervals, polygon by polygon, so their coordinates are
-    byte-identical to the per-zone kernel's."""
+    returns (totals, pieces_per), pieces None where the total is ≤ 0.
+    Both branches build pieces with ``_assemble_pieces`` over the same
+    (segment, t) intervals, polygon by polygon, so their coordinates are
+    byte-identical whichever kernel a pair takes."""
     return _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes,
                        chunk, keep_geometry=True)
+
+
+def _assemble_pieces(P0, P1, sline, sidx, t0, t1):
+    """Reconstruct inside sub-polylines from batch-clip intervals.
+
+    Intervals arrive sorted by (segment, t); contiguous intervals of the
+    same source line whose endpoints coincide merge into one piece
+    (np.allclose on the junction point), never across distinct source
+    lines."""
+    pieces, current = [], []
+    last_line = None
+    for i in range(len(sidx)):
+        s = sidx[i]
+        ax, ay = P0[s]
+        ex, ey = P1[s, 0] - ax, P1[s, 1] - ay
+        p0 = np.array([ax + t0[i] * ex, ay + t0[i] * ey])
+        p1 = np.array([ax + t1[i] * ex, ay + t1[i] * ey])
+        ln = sline[s]
+        if current and ln == last_line and np.allclose(current[-1], p0):
+            current.append(p1)
+        else:
+            if len(current) >= 2:
+                pieces.append(np.asarray(current))
+            current = [p0, p1]
+        last_line = ln
+    if len(current) >= 2:
+        pieces.append(np.asarray(current))
+    return pieces
+
+
+def _clip_zone(lines_per_edge, zpolys, keep_geometry):
+    """The big-ring branch: many edges' polylines against ONE zone (list
+    of polygons-with-holes), one ``geom.clip_segments_batch`` call per
+    polygon over all their segments.  Per-line subtotals accumulate in
+    (seg, t) order, then sum per edge in line order.  Returns (raw
+    totals, pieces per edge or None where empty)."""
+    n_edges = len(lines_per_edge)
+    p0s, p1s, rowidx, lineidx = [], [], [], []
+    line_row: list[int] = []  # global line ordinal → edge index
+    for cr, lines in enumerate(lines_per_edge):
+        for ln in lines:
+            if len(ln) < 2:
+                continue
+            k = len(ln) - 1
+            p0s.append(ln[:-1])
+            p1s.append(ln[1:])
+            rowidx.append(np.full(k, cr, np.int64))
+            lineidx.append(np.full(k, len(line_row), np.int64))
+            line_row.append(cr)
+    if not p0s:
+        return np.zeros(n_edges), [None] * n_edges
+    P0 = np.vstack(p0s)
+    P1 = np.vstack(p1s)
+    srow = np.concatenate(rowidx)
+    sline = np.concatenate(lineidx)
+    seg_len = np.hypot(P1[:, 0] - P0[:, 0], P1[:, 1] - P0[:, 1])
+    line_tot = np.zeros(len(line_row))
+    per_poly_iv = []
+    for rings in zpolys:
+        sidx, t0, t1 = G.clip_segments_batch(P0, P1, rings)
+        per_poly_iv.append((sidx, t0, t1))
+        np.add.at(line_tot, sline[sidx], seg_len[sidx] * (t1 - t0))
+    totals = np.zeros(n_edges)
+    np.add.at(totals, np.asarray(line_row, np.int64), line_tot)
+    pieces_per: list = [None] * n_edges
+    if keep_geometry:
+        for cr in range(n_edges):
+            if totals[cr] <= 0:
+                continue
+            pieces = []
+            for sidx, t0, t1 in per_poly_iv:
+                m = srow[sidx] == cr
+                pieces.extend(_assemble_pieces(P0, P1, sline, sidx[m], t0[m], t1[m]))
+            pieces_per[cr] = pieces
+    return totals, pieces_per
 
 
 def _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes, chunk,
@@ -387,11 +476,24 @@ def _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes, chunk,
     zone_nseg = np.where(
         zone_poly_off[1:] > zone_poly_off[:-1], zone_nseg, 0
     )
-    cost = np.maximum(pair_nseg * zone_nseg[zcodes], 1)
+    is_big = zone_nseg[zcodes] >= BIG_ZONE_SEGMENTS
+    big = np.flatnonzero(is_big)
+    big = big[np.argsort(zcodes[big], kind="stable")]
+    for idx in np.split(big, np.flatnonzero(np.diff(zcodes[big])) + 1):
+        if not len(idx):
+            continue
+        totals[idx], zpieces = _clip_zone(
+            [edge_lines_list[e] for e in ecodes[idx]],
+            zone_polys_list[zcodes[idx[0]]], keep_geometry,
+        )
+        for k, p in zip(idx, zpieces):
+            pieces_per[k] = p
+    flat = np.flatnonzero(~is_big)
+    cost = np.maximum(pair_nseg[flat] * zone_nseg[zcodes[flat]], 1)
     for start, end in _csr_chunks(cost, chunk):
-        sl = slice(start, end)
+        idx = flat[start:end]
         _clip_chunk(
-            totals, sl, ecodes[sl], zcodes[sl],
+            totals, idx, ecodes[idx], zcodes[idx],
             eax, eay, eex, eey, eline, eseg_len,
             edge_seg_off, edge_line_off, zone_poly_off, fzp,
             pieces_per if keep_geometry else None, ends,
@@ -399,13 +501,13 @@ def _clip_pairs(edge_lines_list, ecodes, zone_polys_list, zcodes, chunk,
     return totals, pieces_per
 
 
-def _clip_chunk(totals, sl, ec, zc, eax, eay, eex, eey, eline, eseg_len,
+def _clip_chunk(totals, idx, ec, zc, eax, eay, eex, eey, eline, eseg_len,
                 edge_seg_off, edge_line_off, zone_poly_off, fzp,
                 pieces_per, ends):
-    """One chunk of clip_pairs_totals: build (task=pair×poly,
-    seg×poly-edge) expansions, extract crossings, form intervals,
-    classify midpoints, accumulate; with ``pieces_per``, also assemble
-    each positive pair's pieces from its intervals."""
+    """The flat branch for the pairs at positions ``idx``: build
+    (task=pair×poly, seg×poly-edge) expansions, extract crossings, form
+    intervals, classify midpoints, accumulate; with ``pieces_per``, also
+    assemble each positive pair's pieces from its intervals."""
     P = len(ec)
     # tasks: one per (pair, polygon of its zone)
     tcnt = zone_poly_off[zc + 1] - zone_poly_off[zc]
@@ -500,11 +602,9 @@ def _clip_chunk(totals, sl, ec, zc, eax, eay, eex, eey, eline, eseg_len,
     pair_of_line = np.repeat(np.arange(P, dtype=np.int64), lcnt)
     sub = np.zeros(P, dtype=np.float64)
     np.add.at(sub, pair_of_line, line_acc)
-    totals[sl] = sub
+    totals[idx] = sub
     if pieces_per is None:
         return
-    from osm_chordify_spark.operators.intersect import _assemble_pieces
-
     # intervals are sorted by task (pair, polygon), then (segment, t):
     # one _assemble_pieces call per task, concatenated in polygon order
     # — the per-zone kernel's per-polygon loop
@@ -514,7 +614,7 @@ def _clip_chunk(totals, sl, ec, zc, eax, eay, eex, eey, eline, eseg_len,
         p = int(task_pair[iv_task[a]])
         if sub[p] <= 0:
             continue
-        k = sl.start + p
+        k = idx[p]
         if pieces_per[k] is None:
             pieces_per[k] = []
         pieces_per[k].extend(_assemble_pieces(
@@ -647,9 +747,11 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
     (zone_idx int64, cell int64, full bool) arrays whose per-zone
     {cell: full} content is identical to the per-zone loop (set-equal
     cells, OR-merged full flags across a zone's polygons).  With
-    ``return_bbox`` a 4-tuple of per-ZONE bbox arrays (outer-ring
-    min/max over the zone's polygons, aligned with ``polys_list``) is
-    appended — the candidate-prefilter side channel.
+    ``return_bbox`` the bbox side channel is appended: (zone_bbox
+    (n_zones, 4), poly_zone, poly_bbox (n_polys, 4)) — outer-ring bboxes
+    per zone (the candidate prefilter, inf for a zone without polygons)
+    and per polygon with its zone (the void-row prefilter,
+    ``zones_touching``).
 
     Steps (all NumPy passes; the only Python loop is the per-polygon
     ring flatten):
@@ -692,14 +794,11 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
         e = np.empty(0, dtype=np.int64)
         out = [e, e, np.empty(0, dtype=bool)]
         if return_bbox:
-            inf = np.full(n_zones, np.inf)
-            out.append((inf, inf, -inf, -inf))
+            out.append(zbbox)
         if return_res:
             out.append(np.full(n_zones, res, dtype=np.int64))
         return tuple(out)
 
-    if not poly_rings:
-        return _empty()
     poly_zone = np.asarray(poly_zone, dtype=np.int64)
 
     # outer-ring bboxes (zone_min_res / zone_cover_cells use rings[0])
@@ -773,15 +872,11 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
     coff = np.concatenate(([0], np.cumsum(counts)))
     total = int(coff[-1])
     if return_bbox:
-        zbx0 = np.full(n_zones, np.inf)
-        zby0 = np.full(n_zones, np.inf)
-        zbx1 = np.full(n_zones, -np.inf)
-        zby1 = np.full(n_zones, -np.inf)
-        np.minimum.at(zbx0, poly_zone, bx0)
-        np.minimum.at(zby0, poly_zone, by0)
-        np.maximum.at(zbx1, poly_zone, bx1)
-        np.maximum.at(zby1, poly_zone, by1)
-        zbbox = (zbx0, zby0, zbx1, zby1)
+        pbox = np.column_stack((bx0, by0, bx1, by1))
+        zbox = np.tile([np.inf, np.inf, -np.inf, -np.inf], (n_zones, 1))
+        for k, ufunc in enumerate((np.minimum, np.minimum, np.maximum, np.maximum)):
+            ufunc.at(zbox[:, k], poly_zone, pbox[:, k])
+        zbbox = (zbox, poly_zone, pbox)
     if total == 0:
         return _empty()
     cell_poly = np.repeat(np.arange(len(outers), dtype=np.int64), counts)
@@ -849,3 +944,17 @@ def zone_cover_cells_batch(polys_list, res: int, world, max_cells_per_zone: int,
     if return_res:
         out.append(zone_res)
     return tuple(out) if len(out) > 3 else (zidx, kcells, kfull)
+
+
+def zones_touching(poly_zone, poly_bbox, bounds, n_zones: int) -> np.ndarray:
+    """Zone mask: some polygon's outer-ring bbox (``zone_cover_cells_batch``
+    side channel) overlaps ``bounds`` = (x0, y0, x1, y1) — the void-row
+    zone prefilter (reference intersect.py:447-486).  Per polygon: a
+    multipolygon whose parts all miss ``bounds`` is not kept even when
+    its whole bbox overlaps."""
+    x0, y0, x1, y1 = bounds
+    ok = ((poly_bbox[:, 0] <= x1) & (poly_bbox[:, 2] >= x0)
+          & (poly_bbox[:, 1] <= y1) & (poly_bbox[:, 3] >= y0))
+    keep = np.zeros(n_zones, dtype=bool)
+    keep[poly_zone[ok]] = True
+    return keep

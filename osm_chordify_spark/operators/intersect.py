@@ -10,9 +10,15 @@ Reimplements the semantics of ``intersect_road_network_with_zones``
 * zones (small side — the reference's county gate assumes ≤100 polygons,
   intersect.py:440-444) become a broadcast cell→candidate index;
 * the fact side (edges/pages) is scanned once inside an Arrow-batched
-  pandas UDF: per row, covering cells → candidate zones → exact
-  Shapely-free geometry kernels; **no shuffle anywhere** — Catalyst
-  sees Scan → MapInPandas → (optional union for void rows);
+  ``mapInPandas`` kernel; **no shuffle anywhere** — Catalyst sees
+  Scan → MapInPandas → (optional union for void rows);
+* per Arrow batch, one vectorized index probe
+  (``ZoneIndex.candidates_for_bboxes`` over the batch's edge bboxes)
+  builds the same (edge, zone, contained) pair frame the distributed
+  path (``operators.intersect_dist``) gets from its cell equi-join, and
+  the pair frame goes to the pair kernel both transports share
+  (``lines_kernel``, ``polygons_kernel``, ``touch_kernel``; exact clips
+  in ``geom_batch.clip_pairs_*``);
 * the contained fast path (reference intersect.py:703-733: proportion
   1.0 without exact clipping) generalizes to "every covering cell of
   the edge is a fully-inside cell of the zone".
@@ -26,11 +32,14 @@ Output contracts reproduced exactly (the row-for-row parity surface):
   values, then 4 dp (reference intersect.py:428-435);
 * zero-length/degenerate intersections are dropped — boundary touches
   produce no row (reference intersect.py:415-417, LINE_GEOMETRY_TYPES);
-* void rows: bbox-prefiltered zones with no pieces yield one row each
-  with NULL metrics and zone attrs (reference intersect.py:347-382).
+* void rows: zones with a polygon whose bbox overlaps the edge table's
+  bbox but that have no pieces yield one row each with NULL metrics and
+  zone attrs (reference intersect.py:347-382).
 """
 
 from __future__ import annotations
+
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -39,12 +48,14 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import (
     BinaryType,
     DoubleType,
+    LongType,
     StructField,
     StructType,
 )
 
 from osm_chordify_spark import cellindex as ci
 from osm_chordify_spark import geom as G
+from osm_chordify_spark import geom_batch as GB
 from osm_chordify_spark.functions.skew import fan_out
 from osm_chordify_spark.operators.zoneindex import ZoneIndex
 
@@ -92,46 +103,31 @@ def _label(zone_label):
     return zone_label.strip().lower() if zone_label else None
 
 
-def line_metric_names(zone_label=None) -> dict:
+def _metric_names(base: dict, zone_label) -> dict:
+    """``base`` metric names, each prefixed ``<label>_`` when a zone
+    label is given."""
     p = _label(zone_label)
-    if p is None:
-        return {
-            "proportion": "zone_edge_proportion",
-            "edge_length": "edge_link_length_m",
-            "zone_length": "zone_link_length_m",
-        }
-    return {
-        "proportion": f"{p}_zone_edge_proportion",
-        "edge_length": f"{p}_edge_link_length_m",
-        "zone_length": f"{p}_zone_link_length_m",
-    }
+    return {k: v if p is None else f"{p}_{v}" for k, v in base.items()}
+
+
+def line_metric_names(zone_label=None) -> dict:
+    return _metric_names({"proportion": "zone_edge_proportion",
+                          "edge_length": "edge_link_length_m",
+                          "zone_length": "zone_link_length_m"}, zone_label)
 
 
 def polygon_metric_names(zone_label=None) -> dict:
-    p = _label(zone_label)
-    base = line_metric_names(zone_label)
-    base["edge_surface"] = "edge_surface_m2" if p is None else f"{p}_edge_surface_m2"
-    base["zone_surface"] = "zone_surface_m2" if p is None else f"{p}_zone_surface_m2"
-    return base
+    return {**line_metric_names(zone_label),
+            **_metric_names({"edge_surface": "edge_surface_m2",
+                             "zone_surface": "zone_surface_m2"}, zone_label)}
 
 
 def cascade_metric_names(zone_label=None) -> dict:
-    p = _label(zone_label)
-    if p is None:
-        return {
-            "proportion": "zone_piece_proportion",
-            "piece_length": "piece_link_length_m",
-            "zone_length": "zone_piece_length_m",
-            "piece_surface": "piece_surface_m2",
-            "zone_surface": "zone_surface_m2",
-        }
-    return {
-        "proportion": f"{p}_zone_piece_proportion",
-        "piece_length": f"{p}_piece_link_length_m",
-        "zone_length": f"{p}_zone_piece_length_m",
-        "piece_surface": f"{p}_piece_surface_m2",
-        "zone_surface": f"{p}_zone_surface_m2",
-    }
+    return _metric_names({"proportion": "zone_piece_proportion",
+                          "piece_length": "piece_link_length_m",
+                          "zone_length": "zone_piece_length_m",
+                          "piece_surface": "piece_surface_m2",
+                          "zone_surface": "zone_surface_m2"}, zone_label)
 
 
 # -- zones: local representation ---------------------------------------------
@@ -174,19 +170,6 @@ class Zones:
             world=self.world,
         )
 
-    def bbox_filter(self, bounds) -> np.ndarray:
-        """Ordinals of zones whose bbox intersects ``bounds`` — the
-        pre-join zone prefilter (reference intersect.py:447-486)."""
-        x0, y0, x1, y1 = bounds
-        keep = []
-        for i, polys in enumerate(self.geoms):
-            for rings in polys:
-                bx0, by0, bx1, by1 = G.polygon_bbox(rings)
-                if bx0 <= x1 and bx1 >= x0 and by0 <= y1 and by1 >= y0:
-                    keep.append(i)
-                    break
-        return np.asarray(keep, dtype=np.int64)
-
 
 # -- schema assembly ----------------------------------------------------------
 
@@ -228,102 +211,303 @@ def _assemble_schema(edges_schema, zone_fields, metric_names, zone_label,
     return StructType(cols), edge_renames, zone_renames, list(edge_renames)
 
 
-def _result_schema(edges_schema, zones: Zones, metric_names, zone_label,
-                   keep_geometry, extra_metrics=()):
-    from pyspark.sql.pandas.types import from_arrow_type
+def _zone_fields(zones: Zones) -> list:
+    """StructFields of a driver-side zone table's attribute columns."""
     import pyarrow as pa
+    from pyspark.sql.pandas.types import from_arrow_type
 
-    zone_fields = [
-        StructField(
-            cname,
-            from_arrow_type(pa.Schema.from_pandas(zones.attrs[[cname]]).field(0).type),
-            True,
-        )
-        for cname in zones.attrs.columns
+    return [
+        StructField(c, from_arrow_type(pa.Schema.from_pandas(zones.attrs[[c]]).field(0).type), True)
+        for c in zones.attrs.columns
     ]
-    return _assemble_schema(
-        edges_schema, zone_fields, metric_names, zone_label, keep_geometry,
-        extra_metrics,
+
+
+def _left_join_schema(schema, zone_fields, zone_label):
+    """Left-join output schema — the input columns, then the renamed zone
+    attrs — and the zone renames; shared by both transports."""
+    existing, renames, fields = set(schema.names), {}, list(schema.fields)
+    for zf in zone_fields:
+        out = zone_output_name(zf.name, existing, prefix=_label(zone_label) or "zone")
+        renames[zf.name] = out
+        fields.append(StructField(out, zf.dataType, True))
+        existing.add(out)
+    return StructType(fields), renames
+
+
+def _polygon_schema(subj_schema, zone_fields, zone_label, keep_geometry,
+                    cascade: bool, length_col):
+    """The polygon-subject operators' output schema, zone renames, edge
+    columns ((source, output name) pairs; ``length_col`` rides as
+    ``__len``) and the five metric names in kernel order — proportion,
+    subject length, zone length, subject surface, zone surface; shared
+    by both transports."""
+    m = cascade_metric_names(zone_label) if cascade else polygon_metric_names(zone_label)
+    s = "piece" if cascade else "edge"
+    names = (m["proportion"], m[f"{s}_length"], m["zone_length"],
+             m[f"{s}_surface"], m["zone_surface"])
+    schema, edge_renames, zone_renames, edge_attr_cols = _assemble_schema(
+        subj_schema, zone_fields,
+        dict(zip(("proportion", "edge_length", "zone_length"), names)),
+        zone_label, keep_geometry, extra_metrics=names[3:],
     )
+    edge_cols = [(c, edge_renames[c]) for c in edge_attr_cols]
+    if length_col and length_col in subj_schema.names:
+        edge_cols.append((length_col, "__len"))
+    return schema, zone_renames, edge_cols, names
 
 
-def _assemble_pieces(P0, P1, sline, sidx, t0, t1):
-    """Reconstruct inside sub-polylines from batch-clip intervals.
+# -- the pair frame and its kernels (shared by both transports) ---------------
+#
+# A pair frame holds one row per candidate (edge, zone) pair: ``__eid``,
+# ``__zid``, ``__contained`` (the fast-path flag), ``__elen`` (the edge's
+# 2-dp length, or a polygon subject's 2-dp area), ``__egeom`` (edge WKB),
+# optionally ``__len`` (a polygon subject's ``length_col``) and the
+# renamed output attrs.  The broadcast path builds it per Arrow batch from
+# the index (``_index_pairs``); the dist path from its joins.  Kernels get
+# zone polygons from ``zone_polys(pdf, rows) → (polygons, codes)``:
+# ``_wkb_zones`` parses the frame's ``__zgeom`` column, ``_index_zones``
+# reads the broadcast index's parsed rings.
 
-    Intervals arrive sorted by (segment, t); contiguous intervals of the
-    same source line whose endpoints coincide merge into one piece —
-    the same merge rule (np.allclose on the junction point) as the
-    per-edge clip path, and never across distinct source lines."""
-    pieces, current = [], []
-    last_line = None
-    for i in range(len(sidx)):
-        s = sidx[i]
-        ax, ay = P0[s]
-        ex, ey = P1[s, 0] - ax, P1[s, 1] - ay
-        p0 = np.array([ax + t0[i] * ex, ay + t0[i] * ey])
-        p1 = np.array([ax + t1[i] * ex, ay + t1[i] * ey])
-        ln = sline[s]
-        if current and ln == last_line and np.allclose(current[-1], p0):
-            current.append(p1)
+
+def _parse_once(ids, geoms, parse):
+    """Parse each distinct geometry of a batch once: (parsed list,
+    per-row codes into it).  ``ids``/``geoms`` are aligned arrays."""
+    _u, first, codes = np.unique(ids, return_index=True, return_inverse=True)
+    return [parse(bytes(geoms[int(i)])) for i in first], codes
+
+
+def _wkb_zones(pdf, rows):
+    return _parse_once(pdf["__zid"].to_numpy()[rows], pdf["__zgeom"].to_numpy()[rows],
+                       G.geometry_polygons)
+
+
+def _index_zones(zone_rings):
+    def zone_polys(pdf, rows):
+        u, codes = np.unique(pdf["__zid"].to_numpy()[rows], return_inverse=True)
+        return [zone_rings[z] for z in u], codes
+    return zone_polys
+
+
+def _edge_measures(geoms) -> np.ndarray:
+    """(measure, x0, y0, x1, y1) rows for a batch of line or polygon
+    WKBs, each parsed once.  Lines measure their length, polygon
+    subjects their area; the bbox spans the line vertices or the outer
+    rings."""
+    out = np.empty((len(geoms), 5))
+    for i, g in enumerate(geoms):
+        kind, data = G.parse_wkb(bytes(g))
+        if kind in ("polygon", "multipolygon"):
+            polys = [data] if kind == "polygon" else data
+            parts = [rings[0] for rings in polys]
+            m = sum(G.polygon_area(rings) for rings in polys)
         else:
-            if len(current) >= 2:
-                pieces.append(np.asarray(current))
-            current = [p0, p1]
-        last_line = ln
-    if len(current) >= 2:
-        pieces.append(np.asarray(current))
-    return pieces
+            parts = [data] if kind == "linestring" else data
+            m = sum(G.polyline_length(ln) for ln in parts)
+        c = np.concatenate(parts)
+        out[i] = (m, *c.min(axis=0), *c.max(axis=0))
+    return out
 
 
-def _exact_clip_edges_vs_zone(lines_per_edge, zpolys, keep_geometry):
-    """Batched exact clip of many edges' polylines against ONE zone
-    (list of polygons-with-holes).  Shared by the broadcast and
-    distributed paths so their floating-point accumulation is identical:
-    per-line subtotals accumulate in (seg, t) order, then sum per edge
-    in line order (the per-edge path's ``total += ln_in`` grouping).
+def _edge_bbox_batches(batches):
+    for pdf in batches:
+        yield pd.DataFrame(_edge_measures(pdf["geometry"])[:, 1:],
+                           columns=["x0", "y0", "x1", "y1"])
 
-    Returns (totals, pieces_per): raw (unrounded) inside length per edge
-    and, when keep_geometry, the reconstructed inside sub-polylines per
-    edge (None where empty)."""
-    n_edges = len(lines_per_edge)
-    p0s, p1s, rowidx, lineidx = [], [], [], []
-    line_row: list[int] = []  # global line ordinal → edge index
-    for cr, lines in enumerate(lines_per_edge):
-        for ln in lines:
-            if len(ln) < 2:
+
+def _edges_bbox(edges: DataFrame):
+    """The edge table's global bbox (x0, y0, x1, y1) from one min/max
+    aggregate over ``_edge_bbox_batches``; NaN for an empty table, which
+    no zone bbox overlaps."""
+    row = (
+        edges.select("geometry")
+        .mapInPandas(_edge_bbox_batches, schema="x0 double, y0 double, x1 double, y1 double")
+        .agg(F.min("x0").alias("x0"), F.min("y0").alias("y0"),
+             F.max("x1").alias("x1"), F.max("y1").alias("y1"))
+        .collect()[0]
+    )
+    return tuple(np.nan if v is None else v for v in row)
+
+
+def lines_kernel(names, out_names, keep_geometry, zone_polys):
+    """The lines operators' pair kernel: pair frame → output rows.
+
+    Contained pairs take the fast path (reference intersect.py:703-733:
+    proportion 1.0, zone length = edge length, the whole edge as piece).
+    The others are clipped in one ``geom_batch.clip_pairs_*`` call over
+    the frame, each distinct edge/zone parsed once, and dropped when the
+    2-dp inside length is 0 (boundary touch).  ``round_dp`` is
+    ``builtins.round`` bit for bit (banker's rounding on the decimal
+    repr, not np.round).  ``names``: (proportion, edge length, zone
+    length) columns."""
+    mp, me, mz = names
+
+    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
+        contained = pdf["__contained"].to_numpy()
+        elen = pdf["__elen"].to_numpy(np.float64)
+        egeoms = pdf["__egeom"].to_numpy()
+        n = len(pdf)
+        pend = np.nonzero(~contained)[0]
+        zone_len = np.where(contained, elen, 0.0)
+        pieces_per = []
+        if len(pend):
+            edge_lines, ec = _parse_once(
+                pdf["__eid"].to_numpy()[pend], egeoms[pend], G.geometry_lines
+            )
+            zpolys, zc = zone_polys(pdf, pend)
+            if keep_geometry:
+                zone_len[pend], pieces_per = GB.clip_pairs_pieces(
+                    edge_lines, ec, zpolys, zc
+                )
+            else:
+                zone_len[pend] = GB.clip_pairs_totals(edge_lines, ec, zpolys, zc)
+        zl = np.where(contained, elen, GB.round_dp(zone_len, 2))
+        keep = np.flatnonzero(contained | (zl > 0))
+        ck, ek, zk = contained[keep], elen[keep], zl[keep]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            ratio = GB.round_dp(np.where(ek > 0, zk / ek, 0.0), 4)
+        out = {mp: np.where(ck, (ek > 0).astype(np.float64), ratio), me: ek, mz: zk}
+        if keep_geometry:
+            pend_pos = np.zeros(n, dtype=np.int64)
+            pend_pos[pend] = np.arange(len(pend))
+            geov = []
+            for i in keep:
+                pieces = (
+                    G.geometry_lines(bytes(egeoms[i])) if contained[i]
+                    else pieces_per[pend_pos[i]] or []
+                )
+                geov.append(
+                    G.wkb_linestring(pieces[0])
+                    if len(pieces) == 1
+                    else G.wkb_multilinestring(pieces)
+                )
+            out["geometry"] = geov
+        return _with_base(out, pdf, keep, out_names)
+
+    return kern
+
+
+def polygons_kernel(names, out_names, keep_geometry, zone_polys):
+    """The polygon-subject operators' pair kernel: area-based proportions
+    (reference intersect.py:927-958; cascade :1023-1054).  proportion =
+    overlap area / subject area (0 when the subject area is 0); zone
+    length = ``__len`` × proportion when the frame carries ``__len``,
+    else the overlap area; surfaces 2 dp.  Contained pairs keep the
+    whole subject; the others sum ``geom.poly_poly_area`` over (zone
+    polygon, subject polygon) and are dropped when the 2-dp overlap is 0.
+    ``names``: ``_polygon_schema``'s five names."""
+    mp, me, mz, m_es, m_zs = names
+
+    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
+        contained = pdf["__contained"].to_numpy()
+        area = pdf["__elen"].to_numpy(np.float64)  # 2-dp subject areas
+        egeoms = pdf["__egeom"].to_numpy()
+        overlap = area.copy()
+        geov = [bytes(g) for g in egeoms] if keep_geometry else None
+        pend = np.nonzero(~contained)[0]
+        if len(pend):
+            subj, sc = _parse_once(pdf["__eid"].to_numpy()[pend], egeoms[pend],
+                                   G.geometry_polygons)
+            zpolys, zc = zone_polys(pdf, pend)
+            for k, i in enumerate(pend):
+                total, rings = 0.0, []
+                for zrings in zpolys[zc[k]]:
+                    for srings in subj[sc[k]]:
+                        total += G.poly_poly_area(srings, zrings)
+                        if keep_geometry:
+                            rings.extend(G.clip_poly_general(srings, zrings))
+                overlap[i] = total
+                if keep_geometry:
+                    geov[i] = (
+                        None if not rings
+                        else G.wkb_polygon([rings[0]]) if len(rings) == 1
+                        else G.wkb_multipolygon([[p] for p in rings])
+                    )
+            overlap[pend] = GB.round_dp(overlap[pend], 2)
+        keep = np.flatnonzero(contained | (overlap > 0))
+        ak, ok = area[keep], overlap[keep]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            prop = GB.round_dp(np.where(ak > 0, ok / ak, 0.0), 4)
+        out = {mp: prop, me: ak, mz: ok, m_es: ak, m_zs: ok}
+        if "__len" in pdf:
+            full_len = pdf["__len"].to_numpy(np.float64)[keep]
+            out[me], out[mz] = full_len, GB.round_dp(full_len * prop, 2)
+        if keep_geometry:
+            out["geometry"] = [geov[i] for i in keep]
+        return _with_base(out, pdf, keep, out_names)
+
+    return kern
+
+
+def touch_kernel(geometry_kind, zone_polys):
+    """The left joins' exact touch test: pair frame → its (``__eid``,
+    ``__zid``) pairs whose inside length (lines) or overlap area
+    (polygon subjects) is > 0."""
+    def kern(pdf: pd.DataFrame) -> pd.DataFrame:
+        eids, egeoms = pdf["__eid"].to_numpy(), pdf["__egeom"].to_numpy()
+        zpolys, zc = zone_polys(pdf, np.arange(len(pdf)))
+        if geometry_kind == "line":
+            edge_lines, ec = _parse_once(eids, egeoms, G.geometry_lines)
+            keep = GB.clip_pairs_totals(edge_lines, ec, zpolys, zc) > 0
+        else:
+            subj, sc = _parse_once(eids, egeoms, G.geometry_polygons)
+            keep = np.array([
+                any(G.poly_poly_area(srings, zrings) > 0
+                    for zrings in zpolys[zc[i]] for srings in subj[sc[i]])
+                for i in range(len(pdf))
+            ], dtype=bool)
+        return pdf.loc[keep, ["__eid", "__zid"]]
+
+    return kern
+
+
+def _with_base(out, pdf, keep, out_names):
+    """Output frame: the computed columns ``out`` plus every other output
+    column copied from the kept pair rows (edge/zone attrs, ``__zid``)."""
+    base = pdf.iloc[keep].reset_index(drop=True)
+    for c in out_names:
+        if c not in out:
+            out[c] = base[c]
+    return pd.DataFrame(out, columns=out_names)
+
+
+# -- the broadcast transport -----------------------------------------------------
+
+
+def _index_pairs(pdf, idx: ZoneIndex):
+    """One Arrow batch's pair frame from the broadcast index: ``__eid``
+    is the batch row, ``__zid`` the zone ordinal."""
+    geoms = pdf["geometry"].to_numpy()
+    m = _edge_measures(geoms)
+    row, zone, contained = idx.candidates_for_bboxes(*m[:, 1:].T)
+    return pd.DataFrame({"__eid": row, "__zid": zone, "__contained": contained,
+                         "__elen": GB.round_dp(m[row, 0], 2), "__egeom": geoms[row]})
+
+
+def _map_index_pairs(df, index, attrs, edge_cols, kernel, schema):
+    """Broadcast ``index`` and the renamed zone ``attrs`` once; per Arrow
+    batch of ``df``, the pair frame plus the edge columns ``edge_cols``
+    ((source, output name) pairs) and zone attrs goes to
+    ``kernel(zone_polys)``."""
+    sc = df.sparkSession.sparkContext
+    b_index, b_attrs = sc.broadcast(index), sc.broadcast(attrs)
+    src = [c for c, _ in edge_cols]
+    names = [a for _, a in edge_cols]
+
+    def compute(batches):
+        idx: ZoneIndex = b_index.value
+        kern = kernel(_index_zones(idx.zone_rings))
+        for pdf in batches:
+            pairs = _index_pairs(pdf, idx)
+            if not len(pairs):
                 continue
-            k = len(ln) - 1
-            p0s.append(ln[:-1])
-            p1s.append(ln[1:])
-            rowidx.append(np.full(k, cr, np.int64))
-            lineidx.append(np.full(k, len(line_row), np.int64))
-            line_row.append(cr)
-    if not p0s:
-        return np.zeros(n_edges), [None] * n_edges
-    P0 = np.vstack(p0s)
-    P1 = np.vstack(p1s)
-    srow = np.concatenate(rowidx)
-    sline = np.concatenate(lineidx)
-    seg_len = np.hypot(P1[:, 0] - P0[:, 0], P1[:, 1] - P0[:, 1])
-    line_tot = np.zeros(len(line_row))
-    per_poly_iv = []
-    for rings in zpolys:
-        sidx, t0, t1 = G.clip_segments_batch(P0, P1, rings)
-        per_poly_iv.append((sidx, t0, t1))
-        np.add.at(line_tot, sline[sidx], seg_len[sidx] * (t1 - t0))
-    totals = np.zeros(n_edges)
-    np.add.at(totals, np.asarray(line_row, np.int64), line_tot)
-    pieces_per: list = [None] * n_edges
-    if keep_geometry:
-        for cr in range(n_edges):
-            if totals[cr] <= 0:
-                continue
-            pieces = []
-            for sidx, t0, t1 in per_poly_iv:
-                m = srow[sidx] == cr
-                pieces.extend(_assemble_pieces(P0, P1, sline, sidx[m], t0[m], t1[m]))
-            pieces_per[cr] = pieces
-    return totals, pieces_per
+            e = pdf[src].iloc[pairs["__eid"].to_numpy()].set_axis(names, axis=1)
+            z = b_attrs.value.iloc[pairs["__zid"].to_numpy()]
+            yield kern(pd.concat([pairs, e.reset_index(drop=True),
+                                  z.reset_index(drop=True)], axis=1))
+
+    # fan_out: a tiny single-split fact scan would otherwise run the
+    # whole kernel on one core (per-edge results are batch-independent)
+    return fan_out(df).mapInPandas(compute, schema=schema)
 
 
 # -- the line × polygon operator ----------------------------------------------
@@ -332,17 +516,21 @@ def _exact_clip_edges_vs_zone(lines_per_edge, zpolys, keep_geometry):
 ZONE_BROADCAST_THRESHOLD = 2000
 
 
-def _maybe_collect_zones(zones_df: DataFrame,
+def _maybe_collect_zones(zones, zone_dispatch: str,
                          threshold: int = ZONE_BROADCAST_THRESHOLD):
-    """DataFrame zone table with ≤ ``threshold`` rows → driver-side
-    ``Zones`` for the broadcast-index path (which beats the cell
-    equi-join by the dist path's fixed job overhead at small zone
+    """Zone-table dispatch of every zone operator: a DataFrame zone
+    table with ≤ ``threshold`` rows and ``zone_dispatch="auto"`` →
+    driver-side ``Zones`` for the broadcast-index path (which beats the
+    cell equi-join by the dist path's fixed job overhead at small zone
     counts — the same small-input dispatch philosophy as
-    scc/vectorize_regions); larger → None, stay distributed.  One
-    bounded limit-probe collect decides (≤ threshold+1 rows)."""
-    probe = zones_df.limit(threshold + 1).collect()
+    scc/vectorize_regions); anything else is returned as given, so a
+    DataFrame result stays distributed.  One bounded limit-probe collect
+    decides (≤ threshold+1 rows)."""
+    if not isinstance(zones, DataFrame) or zone_dispatch != "auto":
+        return zones
+    probe = zones.limit(threshold + 1).collect()
     if len(probe) > threshold:
-        return None
+        return zones
     return Zones.from_records([r.asDict() for r in probe])
 
 
@@ -368,23 +556,20 @@ def intersect_lines_with_zones(
     onto the faster broadcast path — both paths are hash-parity-pinned,
     so the choice is invisible; ``"dist"`` forces the distributed
     cell-join path (operators.intersect_dist)."""
+    zones = _maybe_collect_zones(zones, zone_dispatch)
     if isinstance(zones, DataFrame):
-        small = _maybe_collect_zones(zones) if zone_dispatch == "auto" else None
-        if small is not None:
-            zones = small
-        else:
-            from osm_chordify_spark.operators.intersect_dist import (
-                intersect_lines_with_zones_dist,
-            )
+        from osm_chordify_spark.operators.intersect_dist import (
+            intersect_lines_with_zones_dist,
+        )
 
-            return intersect_lines_with_zones_dist(
-                edges, zones, zone_label=zone_label,
-                include_void_zones=include_void_zones, index_res=index_res,
-                keep_geometry=keep_geometry,
-            )
+        return intersect_lines_with_zones_dist(
+            edges, zones, zone_label=zone_label,
+            include_void_zones=include_void_zones, index_res=index_res,
+            keep_geometry=keep_geometry,
+        )
     metric_names = line_metric_names(zone_label)
-    schema, edge_renames, zone_renames, edge_attr_cols = _result_schema(
-        edges.schema, zones, metric_names, zone_label, keep_geometry
+    schema, edge_renames, zone_renames, edge_attr_cols = _assemble_schema(
+        edges.schema, _zone_fields(zones), metric_names, zone_label, keep_geometry
     )
     if include_void_zones:
         # hidden zone ordinal: void-row bookkeeping must key on the zone
@@ -392,150 +577,50 @@ def intersect_lines_with_zones(
         # distinct zones with identical attrs would otherwise conflate
         # (reference keys on zone index, intersect.py:847-859); dropped
         # before return
-        from pyspark.sql.types import IntegerType
-
-        schema = StructType(
-            list(schema.fields) + [StructField("__zone_ord", IntegerType(), True)]
-        )
-    spark = edges.sparkSession
+        schema = StructType(list(schema.fields) + [StructField("__zid", LongType(), True)])
     index = zones.index(res=index_res)
-    b_index = spark.sparkContext.broadcast(index)
-    b_attrs = spark.sparkContext.broadcast(zones.attrs)
-    mp, me, mz = (
-        metric_names["proportion"],
-        metric_names["edge_length"],
-        metric_names["zone_length"],
+    attrs = zones.attrs.rename(columns=zone_renames)
+    kernel = partial(
+        lines_kernel,
+        (metric_names["proportion"], metric_names["edge_length"],
+         metric_names["zone_length"]),
+        [f.name for f in schema.fields], keep_geometry,
     )
-
-    def compute(batches):
-        idx: ZoneIndex = b_index.value
-        zattrs: pd.DataFrame = b_attrs.value
-        zgeoms = idx.zone_rings  # the index's parsed zone polygons
-        zone_rows = zattrs.to_dict("records")  # cheap scalar access
-        out_cols = [f.name for f in schema.fields]
-        for pdf in batches:
-            out_rows = []
-            geoms = pdf["geometry"].tolist()
-            attr_vals = {c: pdf[c].tolist() for c in edge_attr_cols}
-            n_rows = len(pdf)
-            edge_lines: list = [None] * n_rows
-            edge_lens = np.zeros(n_rows)
-            pending: dict[int, list[int]] = {}  # zone -> edge rows to clip
-
-            def emit(r, z, prop, edge_len, zone_len, pieces):
-                row = {mp: prop, me: edge_len, mz: zone_len}
-                if include_void_zones:
-                    row["__zone_ord"] = int(z)
-                if keep_geometry:
-                    row["geometry"] = (
-                        G.wkb_linestring(pieces[0])
-                        if len(pieces) == 1
-                        else G.wkb_multilinestring(pieces)
-                    )
-                for cname in edge_attr_cols:
-                    row[edge_renames[cname]] = attr_vals[cname][r]
-                zrow = zone_rows[int(z)]
-                for cname in zattrs.columns:
-                    row[zone_renames[cname]] = zrow[cname]
-                out_rows.append(row)
-
-            for r in range(n_rows):
-                lines = G.geometry_lines(bytes(geoms[r]))
-                edge_lines[r] = lines
-                # covering cells of the whole edge at index res
-                xs = np.concatenate([ln[:, 0] for ln in lines])
-                ys = np.concatenate([ln[:, 1] for ln in lines])
-                zcand, full, ncells = idx.candidates_for_bbox(
-                    xs.min(), ys.min(), xs.max(), ys.max()
-                )
-                if len(zcand) == 0:
-                    continue
-                edge_len = round(sum(G.polyline_length(ln) for ln in lines), 2)
-                edge_lens[r] = edge_len
-                for z in np.unique(zcand):
-                    zmask = zcand == z
-                    if full[zmask].all() and zmask.sum() == ncells[zmask][0]:
-                        # fast path (reference intersect.py:703-733)
-                        emit(r, z, 1.0 if edge_len > 0 else 0.0,
-                             edge_len, edge_len, lines)
-                    else:
-                        pending.setdefault(int(z), []).append(r)
-
-            # exact clips batched per zone: one vectorized kernel call per
-            # (zone, polygon) over ALL candidate edges' segments at once —
-            # replaces the per-edge Python clip loop (~0.8 ms/edge of
-            # small-array overhead) with (segments × ring) NumPy passes
-            for z, rows_list in pending.items():
-                totals, pieces_per = _exact_clip_edges_vs_zone(
-                    [edge_lines[r] for r in rows_list], zgeoms[z], keep_geometry
-                )
-                for cr, r in enumerate(rows_list):
-                    zone_len = round(float(totals[cr]), 2)
-                    if zone_len <= 0:
-                        continue  # boundary touch / no overlap
-                    edge_len = edge_lens[r]
-                    prop = round(zone_len / edge_len, 4) if edge_len > 0 else 0.0
-                    emit(r, z, prop, edge_len, zone_len, pieces_per[cr] or [])
-            yield pd.DataFrame(out_rows, columns=out_cols)
-
-    # fan_out: a tiny single-split fact scan would otherwise run the
-    # whole kernel on one core (per-edge results are batch-independent)
-    result = fan_out(edges).mapInPandas(compute, schema=schema)
+    result = _map_index_pairs(edges, index, attrs,
+                              [(c, edge_renames[c]) for c in edge_attr_cols],
+                              kernel, schema)
     if include_void_zones:
-        result = _append_void_rows(result, edges, zones, schema, zone_renames)
-        result = result.drop("__zone_ord")
+        result = _append_void_rows(result, edges, index, attrs, schema).drop("__zid")
     return result
 
 
-def _append_void_rows(result, edges, zones, schema, zone_renames):
-    """Union one NULL-metric row per bbox-kept zone with no pieces
-    (reference intersect.py:347-382 + :847-859).
+def _append_void_rows(result, edges, index: ZoneIndex, attrs, schema):
+    """Union one NULL-metric row per zone that has a polygon whose bbox
+    overlaps the edge table's bbox but that has no pieces (reference
+    intersect.py:347-382 + :847-859).  The bbox test is one NumPy
+    compare on the index's stored polygon bboxes (``GB.zones_touching``).
 
-    Matched zones are keyed by the hidden ``__zone_ord`` ordinal carried
+    Matched zones are keyed by the hidden ``__zid`` ordinal carried
     through the kernel — NOT by the zone attribute tuple, which would
     conflate distinct zones with identical attrs and silently drop their
     void rows.  ``result`` is materialized ONCE (eager localCheckpoint)
     before the matched-ordinal probe, so the exact clip kernel never
     runs twice — the probe and all downstream consumption read the
     checkpointed blocks."""
-    # edge bbox via a tiny pandas agg over WKB (batch-local min/max)
-    @F.pandas_udf("x0 double, y0 double, x1 double, y1 double")
-    def _bbox(geom: pd.Series) -> pd.DataFrame:
-        arr = np.array(
-            [G.bbox(np.vstack(G.geometry_lines(bytes(g)))) for g in geom]
-        )
-        return pd.DataFrame(
-            {"x0": arr[:, 0], "y0": arr[:, 1], "x1": arr[:, 2], "y1": arr[:, 3]}
-        )
-
-    bb = (
-        edges.select(_bbox("geometry").alias("b"))
-        .select("b.x0", "b.y0", "b.x1", "b.y1")
-        .agg(
-            F.min("x0").alias("x0"),
-            F.min("y0").alias("y0"),
-            F.max("x1").alias("x1"),
-            F.max("y1").alias("y1"),
-        )
-        .collect()[0]
-    )
-    kept = zones.bbox_filter((bb.x0, bb.y0, bb.x1, bb.y1))
+    bb = _edges_bbox(edges)
+    kept = np.flatnonzero(GB.zones_touching(index.poly_zone, index.poly_bbox, bb,
+                                            len(index.zone_ids)))
     result = result.localCheckpoint(eager=True)
-    matched = {
-        int(r[0]) for r in result.select("__zone_ord").distinct().collect()
-    }
-    void = []
-    for z in kept:
-        if int(z) not in matched:
-            row = {name: None for name in [f.name for f in schema.fields]}
-            for cname, out in zone_renames.items():
-                row[out] = zones.attrs.iloc[int(z)][cname]
-            row["__zone_ord"] = int(z)
-            void.append(row)
+    matched = {int(r[0]) for r in result.select("__zid").distinct().collect()}
+    void = [int(z) for z in kept if int(z) not in matched]
     if not void:
         return result
-    void_pdf = pd.DataFrame(void, columns=[f.name for f in schema.fields])
-    void_df = result.sparkSession.createDataFrame(void_pdf, schema=schema)
+    void_pdf = attrs.iloc[void].reset_index(drop=True).assign(__zid=void)
+    names = [f.name for f in schema.fields]
+    for c in names:
+        if c not in void_pdf:
+            void_pdf[c] = None
+    void_df = result.sparkSession.createDataFrame(void_pdf[names], schema=schema)
     return result.unionByName(void_df)
 
 
@@ -562,116 +647,25 @@ def intersect_polygons_with_zones(
     A DataFrame ``zones`` dispatches like intersect_lines_with_zones:
     auto-collected onto the broadcast path when small, the distributed
     cell-join path otherwise (``zone_dispatch="dist"`` forces it)."""
+    zones = _maybe_collect_zones(zones, zone_dispatch)
     if isinstance(zones, DataFrame):
-        small = _maybe_collect_zones(zones) if zone_dispatch == "auto" else None
-        if small is not None:
-            zones = small
-        else:
-            from osm_chordify_spark.operators.intersect_dist import (
-                intersect_polygons_with_zones_dist,
-            )
-
-            return intersect_polygons_with_zones_dist(
-                polys, zones, zone_label=zone_label, length_col=length_col,
-                index_res=index_res, keep_geometry=keep_geometry, cascade=cascade,
-            )
-    metric_names = (
-        cascade_metric_names(zone_label) if cascade else polygon_metric_names(zone_label)
-    )
-    if cascade:
-        extra = (metric_names["piece_surface"], metric_names["zone_surface"])
-        mp, me, mz = (
-            metric_names["proportion"],
-            metric_names["piece_length"],
-            metric_names["zone_length"],
+        from osm_chordify_spark.operators.intersect_dist import (
+            intersect_polygons_with_zones_dist,
         )
-        m_es, m_zs = metric_names["piece_surface"], metric_names["zone_surface"]
-        base_names = {
-            "proportion": mp, "edge_length": me, "zone_length": mz,
-        }
-    else:
-        extra = (metric_names["edge_surface"], metric_names["zone_surface"])
-        mp, me, mz = (
-            metric_names["proportion"],
-            metric_names["edge_length"],
-            metric_names["zone_length"],
+
+        return intersect_polygons_with_zones_dist(
+            polys, zones, zone_label=zone_label, length_col=length_col,
+            index_res=index_res, keep_geometry=keep_geometry, cascade=cascade,
         )
-        m_es, m_zs = metric_names["edge_surface"], metric_names["zone_surface"]
-        base_names = metric_names
-    schema, edge_renames, zone_renames, edge_attr_cols = _result_schema(
-        polys.schema, zones, base_names, zone_label, keep_geometry, extra_metrics=extra
+    schema, zone_renames, edge_cols, names = _polygon_schema(
+        polys.schema, _zone_fields(zones), zone_label, keep_geometry, cascade,
+        length_col,
     )
-    spark = polys.sparkSession
-    index = zones.index(res=index_res)
-    b_index = spark.sparkContext.broadcast(index)
-    b_attrs = spark.sparkContext.broadcast(zones.attrs)
-
-    def compute(batches):
-        idx: ZoneIndex = b_index.value
-        zattrs: pd.DataFrame = b_attrs.value
-        zgeoms = idx.zone_rings  # the index's parsed zone polygons
-        zone_rows = zattrs.to_dict("records")
-        for pdf in batches:
-            out_rows = []
-            geoms = pdf["geometry"].tolist()
-            attr_vals = {c: pdf[c].tolist() for c in edge_attr_cols}
-            len_vals = (
-                pdf[length_col].tolist()
-                if length_col and length_col in pdf.columns
-                else None
-            )
-            for r in range(len(pdf)):
-                subj_polys = G.geometry_polygons(bytes(geoms[r]))
-                x0 = min(G.polygon_bbox(p)[0] for p in subj_polys)
-                y0 = min(G.polygon_bbox(p)[1] for p in subj_polys)
-                x1 = max(G.polygon_bbox(p)[2] for p in subj_polys)
-                y1 = max(G.polygon_bbox(p)[3] for p in subj_polys)
-                zcand, full, ncells = idx.candidates_for_bbox(x0, y0, x1, y1)
-                if len(zcand) == 0:
-                    continue
-                subj_area = round(sum(G.polygon_area(p) for p in subj_polys), 2)
-                full_len = float(len_vals[r]) if len_vals is not None else None
-                for z in np.unique(zcand):
-                    zmask = zcand == z
-                    contained = full[zmask].all() and zmask.sum() == ncells[zmask][0]
-                    if contained:
-                        overlap = subj_area
-                        pieces_wkb = bytes(geoms[r])
-                    else:
-                        overlap = 0.0
-                        piece_rings = []
-                        for zrings in zgeoms[z]:
-                            for srings in subj_polys:
-                                overlap += G.poly_poly_area(srings, zrings)
-                                piece_rings.extend(G.clip_poly_general(srings, zrings))
-                        overlap = round(overlap, 2)
-                        if overlap <= 0:
-                            continue  # boundary touch: dropped
-                        if not piece_rings:
-                            pieces_wkb = None
-                        elif len(piece_rings) == 1:
-                            pieces_wkb = G.wkb_polygon([piece_rings[0]])
-                        else:
-                            pieces_wkb = G.wkb_multipolygon([[p] for p in piece_rings])
-                    prop = round(overlap / subj_area, 4) if subj_area > 0 else 0.0
-                    row = {
-                        mp: prop,
-                        me: full_len if full_len is not None else subj_area,
-                        mz: round(full_len * prop, 2) if full_len is not None else overlap,
-                        m_es: subj_area,
-                        m_zs: overlap,
-                    }
-                    if keep_geometry:
-                        row["geometry"] = pieces_wkb
-                    for cname in edge_attr_cols:
-                        row[edge_renames[cname]] = attr_vals[cname][r]
-                    zrow = zone_rows[int(z)]
-                    for cname in zattrs.columns:
-                        row[zone_renames[cname]] = zrow[cname]
-                    out_rows.append(row)
-            yield pd.DataFrame(out_rows, columns=[f.name for f in schema.fields])
-
-    return fan_out(polys).mapInPandas(compute, schema=schema)
+    kernel = partial(polygons_kernel, names, [f.name for f in schema.fields],
+                     keep_geometry)
+    return _map_index_pairs(polys, zones.index(res=index_res),
+                            zones.attrs.rename(columns=zone_renames), edge_cols,
+                            kernel, schema)
 
 
 # -- spatial left join ----------------------------------------------------------
@@ -693,121 +687,34 @@ def spatial_left_join_with_zones(
     A DataFrame ``zones`` dispatches like intersect_lines_with_zones:
     auto-collected onto the broadcast path when small, the distributed
     cell-join path otherwise (``zone_dispatch="dist"`` forces it)."""
+    zones = _maybe_collect_zones(zones, zone_dispatch)
     if isinstance(zones, DataFrame):
-        small = _maybe_collect_zones(zones) if zone_dispatch == "auto" else None
-        if small is not None:
-            zones = small
-        else:
-            from osm_chordify_spark.operators.intersect_dist import (
-                spatial_left_join_with_zones_dist,
-            )
+        from osm_chordify_spark.operators.intersect_dist import (
+            spatial_left_join_with_zones_dist,
+        )
 
-            return spatial_left_join_with_zones_dist(
-                df, zones, zone_label=zone_label, index_res=index_res,
-                geometry_kind=geometry_kind,
-            )
-    spark = df.sparkSession
-    index = zones.index(res=index_res)
-    b_index = spark.sparkContext.broadcast(index)
-    b_attrs = spark.sparkContext.broadcast(zones.attrs)
-
-    existing = set(df.columns)
-    zone_renames = {}
-    fields = list(df.schema.fields)
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import from_arrow_type
-
-    for cname in zones.attrs.columns:
-        out = zone_output_name(cname, existing, prefix=_label(zone_label) or "zone")
-        zone_renames[cname] = out
-        pa_type = pa.Schema.from_pandas(zones.attrs[[cname]]).field(0).type
-        fields.append(StructField(out, from_arrow_type(pa_type), True))
-        existing.add(out)
-    schema = StructType(fields)
+        return spatial_left_join_with_zones_dist(
+            df, zones, zone_label=zone_label, index_res=index_res,
+            geometry_kind=geometry_kind,
+        )
+    schema, zone_renames = _left_join_schema(df.schema, _zone_fields(zones), zone_label)
+    sc = df.sparkSession.sparkContext
+    b_index = sc.broadcast(zones.index(res=index_res))
+    b_attrs = sc.broadcast(zones.attrs.rename(columns=zone_renames))
 
     def compute(batches):
         idx: ZoneIndex = b_index.value
-        zattrs: pd.DataFrame = b_attrs.value
-        zgeoms = idx.zone_rings  # the index's parsed zone polygons
-        zone_rows = zattrs.to_dict("records")
+        touch = touch_kernel(geometry_kind, _index_zones(idx.zone_rings))
         for pdf in batches:
-            out_rows = []
-            geoms = pdf["geometry"].tolist()
-            base_rows = pdf.to_dict("records")
-            n_rows = len(pdf)
-            hits: list[set] = [set() for _ in range(n_rows)]
-            pending: dict[int, list[int]] = {}
-            row_parts: list = [None] * n_rows
-            for r in range(n_rows):
-                if geometry_kind == "line":
-                    parts = G.geometry_lines(bytes(geoms[r]))
-                    xs = np.concatenate([p[:, 0] for p in parts])
-                    ys = np.concatenate([p[:, 1] for p in parts])
-                else:
-                    parts = G.geometry_polygons(bytes(geoms[r]))
-                    xs = np.concatenate([p[0][:, 0] for p in parts])
-                    ys = np.concatenate([p[0][:, 1] for p in parts])
-                row_parts[r] = parts
-                zcand, full, ncells = idx.candidates_for_bbox(
-                    xs.min(), ys.min(), xs.max(), ys.max()
-                )
-                for z in np.unique(zcand):
-                    zmask = zcand == z
-                    if full[zmask].all() and zmask.sum() == ncells[zmask][0]:
-                        hits[r].add(int(z))
-                    else:
-                        pending.setdefault(int(z), []).append(r)
-            # exact touch tests batched per zone (same shape as the
-            # intersect-lines kernel); polygons stay per-row (rare path)
-            for z, rows_list in pending.items():
-                if geometry_kind == "line":
-                    p0s, p1s, rowidx = [], [], []
-                    for cr, r in enumerate(rows_list):
-                        for ln in row_parts[r]:
-                            if len(ln) < 2:
-                                continue
-                            p0s.append(ln[:-1])
-                            p1s.append(ln[1:])
-                            rowidx.append(np.full(len(ln) - 1, cr, np.int64))
-                    if not p0s:
-                        continue
-                    P0 = np.vstack(p0s)
-                    P1 = np.vstack(p1s)
-                    srow = np.concatenate(rowidx)
-                    seg_len = np.hypot(P1[:, 0] - P0[:, 0], P1[:, 1] - P0[:, 1])
-                    totals = np.zeros(len(rows_list))
-                    for rings in zgeoms[z]:
-                        sidx, t0, t1 = G.clip_segments_batch(P0, P1, rings)
-                        np.add.at(totals, srow[sidx], seg_len[sidx] * (t1 - t0))
-                    for cr, r in enumerate(rows_list):
-                        if totals[cr] > 0:
-                            hits[r].add(z)
-                else:
-                    for r in rows_list:
-                        touched = False
-                        for rings in zgeoms[z]:
-                            for srings in row_parts[r]:
-                                if G.poly_poly_area(srings, rings) > 0:
-                                    touched = True
-                                    break
-                            if touched:
-                                break
-                        if touched:
-                            hits[r].add(z)
-            for r in range(n_rows):
-                base = base_rows[r]
-                if not hits[r]:
-                    row = dict(base)
-                    for cname in zattrs.columns:
-                        row[zone_renames[cname]] = None
-                    out_rows.append(row)
-                else:
-                    for z in sorted(hits[r]):
-                        row = dict(base)
-                        zrow = zone_rows[int(z)]
-                        for cname in zattrs.columns:
-                            row[zone_renames[cname]] = zrow[cname]
-                        out_rows.append(row)
-            yield pd.DataFrame(out_rows, columns=[f.name for f in schema.fields])
+            pairs = _index_pairs(pdf, idx)
+            inside = pairs["__contained"].to_numpy()
+            hits = pd.concat([pairs.loc[inside, ["__eid", "__zid"]],
+                              touch(pairs[~inside])]).sort_values(["__eid", "__zid"])
+            z = b_attrs.value.iloc[hits["__zid"].to_numpy()]
+            # left join on the batch row: unmatched rows get NULL zone
+            # attrs, k matching zones give k rows in zone order
+            yield pdf.reset_index(drop=True).join(
+                z.set_axis(hits["__eid"].to_numpy()), how="left"
+            )
 
     return fan_out(df).mapInPandas(compute, schema=schema)

@@ -9,21 +9,22 @@ intersect.py:586-884) as a pure DataFrame program:
 
 1. zones explode to (cell, zone, full) rows at the effective index
    resolution — the broadcast index's rows, as a table
-   (``zoneindex.zone_cover_cells`` is shared, so the candidate sets are
-   byte-identical by construction);
+   (``geom_batch.zone_cover_cells_batch`` is shared, so the candidate
+   sets are byte-identical by construction);
 2. edges explode to (edge, cell) cover rows;
 3. candidates come from a plain **cell equi-join** + groupBy(edge, zone)
    — Catalyst plans it as a shuffled hash join AQE can skew-split;
    the containment fast path is the aggregate test
    ``every cover cell of the edge is a full cell of the zone``
-   (reference intersect.py:703-733);
+   (reference intersect.py:703-733) — the same pair frame the broadcast
+   path gets from ``ZoneIndex.candidates_for_bboxes``;
 4. zone geometry reaches the candidate pairs by one of two transports,
-   and ONE batched pair kernel per operator runs over whole Arrow
-   batches (``geom_batch.clip_pairs_totals`` / ``clip_pairs_pieces`` —
-   totals float-accumulation-order identical and pieces byte-identical
-   to ``intersect._exact_clip_edges_vs_zone``).  Every (edge, zone)
-   pair is independent and the kernel parses each distinct edge/zone
-   WKB once per batch, so no regroup exchange is needed:
+   and the pair kernel the broadcast operators also run
+   (``intersect.lines_kernel`` / ``polygons_kernel`` / ``touch_kernel``,
+   exact clips in ``geom_batch.clip_pairs_*``) maps whole Arrow batches
+   of the pair frame.  Every (edge, zone) pair is independent and the
+   kernel parses each distinct edge/zone WKB once per batch, so no
+   regroup exchange is needed:
 
    * **join** (the default): the zone and edge payloads equi-join onto
      the candidate set and ``mapInPandas`` runs straight off the joins;
@@ -35,7 +36,7 @@ intersect.py:586-884) as a pure DataFrame program:
 
 Output is row-for-row and value-identical to
 ``intersect.intersect_lines_with_zones`` (schema from the same
-``_assemble_schema``, rounding from the same kernels) — pytest asserts
+``_assemble_schema``, rows from the same kernels) — pytest asserts
 hash-parity between the two paths.
 
 Scale shape: no broadcast is forced; the only driver-side values are
@@ -73,11 +74,19 @@ from osm_chordify_spark import cellindex as ci
 from osm_chordify_spark import geom as G
 from osm_chordify_spark import geom_batch as GB
 from osm_chordify_spark.functions.skew import fan_out
-from osm_chordify_spark.operators import zoneindex as ZI
 from osm_chordify_spark.operators.intersect import (
     Zones,
     _assemble_schema,
+    _edge_measures,
+    _edges_bbox,
+    _left_join_schema,
+    _parse_once,
+    _polygon_schema,
+    _wkb_zones,
     line_metric_names,
+    lines_kernel,
+    polygons_kernel,
+    touch_kernel,
 )
 
 
@@ -117,13 +126,6 @@ def _map_batches(df: DataFrame, fn, schema) -> DataFrame:
                 yield fn(pdf)
 
     return df.mapInPandas(run, schema=schema)
-
-
-def _parse_once(ids, geoms, parse):
-    """Parse each distinct geometry of a batch once: (parsed list,
-    per-row codes into it).  ``ids``/``geoms`` are aligned arrays."""
-    _u, first, codes = np.unique(ids, return_index=True, return_inverse=True)
-    return [parse(bytes(geoms[int(i)])) for i in first], codes
 
 
 def _cogroup_key(salt):
@@ -179,26 +181,6 @@ def _zone_cover_stats(zcells: DataFrame, cell_col: str = "cell"):
     return sorted(int(r.r) for r in rows), (sum(r.b for r in rows) / n if n else 0.0)
 
 
-def _edge_measures(geoms) -> np.ndarray:
-    """(measure, x0, y0, x1, y1) rows for a batch of line or polygon
-    WKBs, each parsed once.  Lines measure their length, polygon
-    subjects their area (the broadcast op's subj_area); the bbox spans
-    the line vertices or the outer rings."""
-    out = np.empty((len(geoms), 5))
-    for i, g in enumerate(geoms):
-        kind, data = G.parse_wkb(bytes(g))
-        if kind in ("polygon", "multipolygon"):
-            polys = [data] if kind == "polygon" else data
-            parts = [rings[0] for rings in polys]
-            m = sum(G.polygon_area(rings) for rings in polys)
-        else:
-            parts = [data] if kind == "linestring" else data
-            m = sum(G.polyline_length(ln) for ln in parts)
-        c = np.concatenate(parts)
-        out[i] = (m, *c.min(axis=0), *c.max(axis=0))
-    return out
-
-
 def _edge_cover_rows(pdf: pd.DataFrame, res_list, world) -> pd.DataFrame:
     """Batch-wide edge covers: one (__eid, cell, n_cells, __elen, bbox)
     row per bbox cover cell of every edge at every resolution of
@@ -211,16 +193,19 @@ def _edge_cover_rows(pdf: pd.DataFrame, res_list, world) -> pd.DataFrame:
                          "__ex0": x0[row], "__ey0": y0[row], "__ex1": x1[row], "__ey1": y1[row]})
 
 
-def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_renames,
-                      edge_attr_cols, geometry_col, index_res, world,
-                      max_cells_per_zone):
+def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_cols,
+                      geometry_col, index_res, world, max_cells_per_zone,
+                      void_bounds=None):
     """Shared candidate machinery for the distributed operators:
-    frozen-id zone payload, zone/edge cell tables, and the
+    frozen-id zone payload, zone/edge cell tables, the edge payload
+    (``__egeom`` plus the ``edge_cols`` (source, alias) columns), and the
     (edge, zone, contained, edge_len) candidate set from the cell
-    equi-join + containment aggregate.
+    equi-join + containment aggregate.  The zone cell table flags
+    (``__zvoid``) every row of a zone with a polygon whose bbox overlaps
+    ``void_bounds`` (``GB.zones_touching``; none when not given).
 
     Mixed-resolution covers (round 4): each zone's cover lives at its
-    OWN over-cover-guarded resolution (``ZI.zone_min_res`` per zone —
+    OWN over-cover-guarded resolution (``zoneindex.zone_min_res`` per zone —
     the same per-zone classification ``ZoneIndex.build`` uses, so the
     two paths stay candidate-identical).  The edge side explodes its
     bbox cover once per OCCUPIED resolution; since the equi-join key
@@ -252,10 +237,13 @@ def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_renames,
         # {cell: full} maps by the geom_batch parity contract
         for pdf in batches:
             polys_list = [G.geometry_polygons(bytes(g)) for g in pdf["__zgeom"]]
-            zidx, cells, fulls, (zx0, zy0, zx1, zy1) = GB.zone_cover_cells_batch(
+            zidx, cells, fulls, (zbox, pzone, pbox) = GB.zone_cover_cells_batch(
                 polys_list, index_res, world, max_cells_per_zone,
                 return_bbox=True,
             )
+            zvoid = (GB.zones_touching(pzone, pbox, void_bounds, len(polys_list))
+                     if void_bounds is not None else np.zeros(len(polys_list), bool))
+            zb = zbox[zidx]
             # each zone's WKB length on its first cover row (zidx is
             # zone-sorted) feeds the cogroup switch via _zone_cover_stats
             zwkb = np.where(np.diff(zidx, prepend=-1) != 0,
@@ -264,15 +252,16 @@ def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_renames,
                 {"__zid": pdf["__zid"].to_numpy()[zidx],
                  "cell": pd.Series(cells, dtype="int64"),
                  "full": pd.Series(fulls, dtype="bool"),
-                 "__zx0": zx0[zidx], "__zy0": zy0[zidx],
-                 "__zx1": zx1[zidx], "__zy1": zy1[zidx], "__zwkb": zwkb}
+                 "__zx0": zb[:, 0], "__zy0": zb[:, 1], "__zx1": zb[:, 2],
+                 "__zy1": zb[:, 3], "__zwkb": zwkb, "__zvoid": zvoid[zidx]}
             )
 
     # materialized once: read twice (res-list collect + the equi-join)
     zcells = zindexed.select("__zid", "__zgeom").mapInPandas(
         zone_cells,
         schema="__zid long, cell long, full boolean, __zx0 double, "
-               "__zy0 double, __zx1 double, __zy1 double, __zwkb long",
+               "__zy0 double, __zx1 double, __zy1 double, __zwkb long, "
+               "__zvoid boolean",
     ).localCheckpoint(eager=False)
     res_list, zwkb_mean = _zone_cover_stats(zcells)
     res_list = res_list or [index_res]
@@ -287,7 +276,7 @@ def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_renames,
     epay = e.select(
         "__eid",
         F.col("geometry").alias("__egeom"),
-        *[F.col(c).alias(edge_renames[c]) for c in edge_attr_cols],
+        *[F.col(c).alias(a) for c, a in edge_cols],
     )
     ecells = fan_out(e.select("__eid", "geometry")).mapInPandas(
         lambda batches: (_edge_cover_rows(pdf, res_list, world) for pdf in batches),
@@ -333,7 +322,7 @@ def _build_candidates(edges, zones_df, zone_fields, zone_renames, edge_renames,
         # stay in one task, so its WKB is parsed once
         .repartition(edges.sparkSession.sparkContext.defaultParallelism, "__eid")
     )
-    return e, epay, zindexed, cand, zwkb_mean
+    return e, epay, zindexed, zcells, cand, zwkb_mean
 
 
 def intersect_lines_with_zones_dist(
@@ -366,75 +355,18 @@ def intersect_lines_with_zones_dist(
         out_fields = out_fields + [StructField("__zid", LongType(), True)]
     kern_schema = StructType(out_fields)
 
-    e, epay, zindexed, cand, zwkb_mean = _build_candidates(
-        edges, zones_df, zone_fields, zone_renames, edge_renames,
-        edge_attr_cols, geometry_col, index_res, world, max_cells_per_zone,
+    _, epay, zindexed, zcells, cand, zwkb_mean = _build_candidates(
+        edges, zones_df, zone_fields, zone_renames,
+        [(c, edge_renames[c]) for c in edge_attr_cols], geometry_col,
+        index_res, world, max_cells_per_zone,
+        void_bounds=_edges_bbox(edges) if include_void_zones else None,
     )
 
-    mp, me, mz = (metric_names["proportion"], metric_names["edge_length"],
-                  metric_names["zone_length"])
-    out_names = [f.name for f in kern_schema.fields]
-    attr_names = [edge_renames[c] for c in edge_attr_cols] + [
-        zone_renames[zf.name] for zf in zone_fields
-    ]
-
-    def kern_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        """Whole-batch clip kernel: every (edge, zone) pair of the batch
-        in one geom_batch pass — each distinct edge/zone WKB parsed
-        once, totals accumulation-order-identical and pieces
-        byte-identical to _exact_clip_edges_vs_zone (geom_batch parity
-        contract)."""
-        contained = pdf["__contained"].to_numpy()
-        elen = pdf["__elen"].to_numpy(np.float64)
-        egeoms = pdf["__egeom"].to_numpy()
-        n = len(pdf)
-        pend = np.nonzero(~contained)[0]
-        zone_len = np.where(contained, elen, 0.0)
-        pieces_per = []
-        if len(pend):
-            edge_lines, ec = _parse_once(
-                pdf["__eid"].to_numpy()[pend], egeoms[pend], G.geometry_lines
-            )
-            zone_polys, zc = _parse_once(
-                pdf["__zid"].to_numpy()[pend], pdf["__zgeom"].to_numpy()[pend],
-                G.geometry_polygons,
-            )
-            if keep_geometry:
-                zone_len[pend], pieces_per = GB.clip_pairs_pieces(
-                    edge_lines, ec, zone_polys, zc
-                )
-            else:
-                zone_len[pend] = GB.clip_pairs_totals(edge_lines, ec, zone_polys, zc)
-        # round_dp is builtins.round bit for bit — the exact idiom of the
-        # broadcast kernel (banker's rounding on the decimal repr, not
-        # np.round)
-        zl = np.where(contained, elen, GB.round_dp(zone_len, 2))
-        keep = np.flatnonzero(contained | (zl > 0))
-        ck, ek, zk = contained[keep], elen[keep], zl[keep]
-        with np.errstate(divide="ignore", invalid="ignore"):
-            ratio = GB.round_dp(np.where(ek > 0, zk / ek, 0.0), 4)
-        base = pdf.iloc[keep].reset_index(drop=True)
-        out = {mp: np.where(ck, (ek > 0).astype(np.float64), ratio), me: ek, mz: zk}
-        if keep_geometry:
-            pend_pos = np.zeros(n, dtype=np.int64)
-            pend_pos[pend] = np.arange(len(pend))
-            geov = []
-            for i in keep:
-                pieces = (
-                    G.geometry_lines(bytes(egeoms[i])) if contained[i]
-                    else pieces_per[pend_pos[i]] or []
-                )
-                geov.append(
-                    G.wkb_linestring(pieces[0])
-                    if len(pieces) == 1
-                    else G.wkb_multilinestring(pieces)
-                )
-            out["geometry"] = geov
-        for c in attr_names:
-            out[c] = base[c]
-        if include_void_zones:
-            out["__zid"] = base["__zid"]
-        return pd.DataFrame(out, columns=out_names)
+    kern_batch = lines_kernel(
+        (metric_names["proportion"], metric_names["edge_length"],
+         metric_names["zone_length"]),
+        [f.name for f in kern_schema.fields], keep_geometry, _wkb_zones,
+    )
 
     if zwkb_mean >= COGROUP_WKB_BYTES:
         result = _cogroup_reattach(
@@ -448,12 +380,12 @@ def intersect_lines_with_zones_dist(
 
     if include_void_zones:
         result = _append_void_rows_dist(
-            result, e, zindexed, zone_fields, zone_renames, kern_schema
+            result, zcells, zindexed, zone_fields, zone_renames, kern_schema
         ).drop("__zid")
     return result
 
 
-def _append_void_rows_dist(result, e, zindexed, zone_fields, zone_renames,
+def _append_void_rows_dist(result, zcells, zindexed, zone_fields, zone_renames,
                            kern_schema):
     """Void rows, all-DataFrame: bbox-kept zones minus matched zones via
     left-anti join on the frozen zone id — no collects of zone attrs, no
@@ -461,29 +393,11 @@ def _append_void_rows_dist(result, e, zindexed, zone_fields, zone_renames,
     ``result`` is materialized once (eager localCheckpoint — the same
     discipline as the broadcast path's ``_append_void_rows``) because
     its plan is consumed twice (matched probe + union); checkpoint
-    blocks release with the DataFrame, unlike an unpaired persist()."""
-    bb = (
-        e.select("geometry")
-        .mapInPandas(_edge_bbox_batches, schema="x0 double, y0 double, x1 double, y1 double")
-        .agg(F.min("x0").alias("x0"), F.min("y0").alias("y0"),
-             F.max("x1").alias("x1"), F.max("y1").alias("y1"))
-        .collect()[0]
-    )
-
-    def zone_kept(batches):
-        for pdf in batches:
-            keep = []
-            for zid, g in zip(pdf["__zid"], pdf["__zgeom"]):
-                for rings in G.geometry_polygons(bytes(g)):
-                    zx0, zy0, zx1, zy1 = G.polygon_bbox(rings)
-                    if zx0 <= bb.x1 and zx1 >= bb.x0 and zy0 <= bb.y1 and zy1 >= bb.y0:
-                        keep.append(zid)
-                        break
-            yield pd.DataFrame({"__zid": pd.Series(keep, dtype="int64")})
-
-    kept = zindexed.select("__zid", "__zgeom").mapInPandas(
-        zone_kept, schema="__zid long"
-    ).join(zindexed.drop("__zgeom"), "__zid")
+    blocks release with the DataFrame, unlike an unpaired persist().
+    The kept zones are the ``__zvoid`` rows of the zone cell table: the
+    per-polygon bbox rule the broadcast path reads off its index."""
+    kept = (zcells.filter("__zvoid").select("__zid").distinct()
+            .join(zindexed.drop("__zgeom"), "__zid"))
 
     result = result.localCheckpoint(eager=True)
     matched = result.select("__zid").distinct()
@@ -496,12 +410,6 @@ def _append_void_rows_dist(result, e, zindexed, zone_fields, zone_renames,
         ]
     )
     return result.unionByName(void)
-
-
-def _edge_bbox_batches(batches):
-    for pdf in batches:
-        yield pd.DataFrame(_edge_measures(pdf["geometry"])[:, 1:],
-                           columns=["x0", "y0", "x1", "y1"])
 
 
 def spatial_left_join_with_zones_dist(
@@ -526,18 +434,11 @@ def spatial_left_join_with_zones_dist(
     pairs, and the final shape is one LEFT equi-join of the input
     against the matched (row, zone) pairs carrying the renamed zone
     attributes."""
-    from osm_chordify_spark.operators.intersect import zone_output_name, _label
-
-    existing = set(df.columns)
     zone_fields = [f for f in zones_df.schema.fields if f.name != geometry_col]
-    zone_renames = {}
-    for zf in zone_fields:
-        out = zone_output_name(zf.name, existing, prefix=_label(zone_label) or "zone")
-        zone_renames[zf.name] = out
-        existing.add(out)
-    e, epay, zindexed, cand, _ = _build_candidates(
-        df, zones_df, zone_fields, zone_renames, {}, [],
-        geometry_col, index_res, world, max_cells_per_zone,
+    _schema, zone_renames = _left_join_schema(df.schema, zone_fields, zone_label)
+    e, epay, zindexed, _, cand, _ = _build_candidates(
+        df, zones_df, zone_fields, zone_renames, [], geometry_col, index_res,
+        world, max_cells_per_zone,
     )
     pend = (
         cand.filter(~F.col("__contained"))
@@ -546,28 +447,8 @@ def spatial_left_join_with_zones_dist(
         .join(epay.select("__eid", "__egeom"), "__eid")
     )
 
-    def touch_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        egeoms = pdf["__egeom"].to_numpy()
-        zone_polys, zc = _parse_once(
-            pdf["__zid"].to_numpy(), pdf["__zgeom"].to_numpy(), G.geometry_polygons
-        )
-        if geometry_kind == "line":
-            edge_lines, ec = _parse_once(
-                pdf["__eid"].to_numpy(), egeoms, G.geometry_lines
-            )
-            keep = GB.clip_pairs_totals(edge_lines, ec, zone_polys, zc) > 0
-        else:
-            keep = np.array([
-                any(
-                    G.poly_poly_area(srings, zrings) > 0
-                    for zrings in zone_polys[zc[i]]
-                    for srings in G.geometry_polygons(bytes(egeoms[i]))
-                )
-                for i in range(len(pdf))
-            ], dtype=bool)
-        return pdf.loc[keep, ["__eid", "__zid"]]
-
-    touched = _map_batches(pend, touch_batch, "__eid long, __zid long")
+    touched = _map_batches(pend, touch_kernel(geometry_kind, _wkb_zones),
+                           "__eid long, __zid long")
     hits = (
         cand.filter(F.col("__contained")).select("__eid", "__zid")
         .unionByName(touched)
@@ -595,96 +476,18 @@ def intersect_polygons_with_zones_dist(
     broadcast.  Completes the distributed family: lines, left join, and
     polygon subjects all run off the shared candidate machinery, each
     with one batch kernel over the joined pairs."""
-    from osm_chordify_spark.operators.intersect import (
-        cascade_metric_names,
-        polygon_metric_names,
-    )
-
-    metric_names = (
-        cascade_metric_names(zone_label) if cascade else polygon_metric_names(zone_label)
-    )
-    if cascade:
-        extra = (metric_names["piece_surface"], metric_names["zone_surface"])
-        mp, me, mz = (metric_names["proportion"], metric_names["piece_length"],
-                      metric_names["zone_length"])
-        m_es, m_zs = metric_names["piece_surface"], metric_names["zone_surface"]
-        base_names = {"proportion": mp, "edge_length": me, "zone_length": mz}
-    else:
-        extra = (metric_names["edge_surface"], metric_names["zone_surface"])
-        mp, me, mz = (metric_names["proportion"], metric_names["edge_length"],
-                      metric_names["zone_length"])
-        m_es, m_zs = metric_names["edge_surface"], metric_names["zone_surface"]
-        base_names = metric_names
     zone_fields = [f for f in zones_df.schema.fields if f.name != geometry_col]
-    schema, edge_renames, zone_renames, edge_attr_cols = _assemble_schema(
-        polys.schema, zone_fields, base_names, zone_label, keep_geometry,
-        extra_metrics=extra,
+    schema, zone_renames, edge_cols, names = _polygon_schema(
+        polys.schema, zone_fields, zone_label, keep_geometry, cascade, length_col
     )
-    e, epay, zindexed, cand, _ = _build_candidates(
-        polys, zones_df, zone_fields, zone_renames, edge_renames,
-        edge_attr_cols, geometry_col, index_res, world, max_cells_per_zone,
+    e, epay, zindexed, _, cand, _ = _build_candidates(
+        polys, zones_df, zone_fields, zone_renames, edge_cols, geometry_col,
+        index_res, world, max_cells_per_zone,
     )
-    work = cand.join(zindexed, "__zid").join(epay, "__eid")
-    out_names = [f.name for f in schema.fields]
-    attr_names = [edge_renames[c] for c in edge_attr_cols] + [
-        zone_renames[zf.name] for zf in zone_fields
-    ]
-    len_attr = edge_renames.get(length_col) if length_col else None
-
-    def kern_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        zone_polys, zc = _parse_once(
-            pdf["__zid"].to_numpy(), pdf["__zgeom"].to_numpy(), G.geometry_polygons
-        )
-        egeoms = pdf["__egeom"].to_numpy()
-        contained = pdf["__contained"].to_numpy()
-        areas = pdf["__elen"].to_numpy()  # rounded subject areas
-        len_vals = pdf[len_attr].to_numpy() if len_attr and len_attr in pdf else None
-        keep = []
-        rows = {mp: [], me: [], mz: [], m_es: [], m_zs: []}
-        geov = []
-        for i in range(len(pdf)):
-            subj_area = float(areas[i])
-            subj = G.geometry_polygons(bytes(egeoms[i]))
-            if contained[i]:
-                overlap = subj_area
-                pieces_wkb = bytes(egeoms[i])
-            else:
-                overlap = 0.0
-                piece_rings = []
-                for zrings in zone_polys[zc[i]]:
-                    for srings in subj:
-                        overlap += G.poly_poly_area(srings, zrings)
-                        piece_rings.extend(G.clip_poly_general(srings, zrings))
-                overlap = round(overlap, 2)
-                if overlap <= 0:
-                    continue  # boundary touch: dropped
-                if not piece_rings:
-                    pieces_wkb = None
-                elif len(piece_rings) == 1:
-                    pieces_wkb = G.wkb_polygon([piece_rings[0]])
-                else:
-                    pieces_wkb = G.wkb_multipolygon([[p] for p in piece_rings])
-            prop = round(overlap / subj_area, 4) if subj_area > 0 else 0.0
-            full_len = float(len_vals[i]) if len_vals is not None else None
-            keep.append(i)
-            rows[mp].append(prop)
-            rows[me].append(full_len if full_len is not None else subj_area)
-            rows[mz].append(
-                round(full_len * prop, 2) if full_len is not None else overlap
-            )
-            rows[m_es].append(subj_area)
-            rows[m_zs].append(overlap)
-            if keep_geometry:
-                geov.append(pieces_wkb)
-        base = pdf.iloc[keep].reset_index(drop=True)
-        out = dict(rows)
-        if keep_geometry:
-            out["geometry"] = geov
-        for c in attr_names:
-            out[c] = base[c]
-        return pd.DataFrame(out, columns=out_names)
-
-    return _map_batches(work, kern_batch, schema)
+    kern_batch = polygons_kernel(names, [f.name for f in schema.fields],
+                                 keep_geometry, _wkb_zones)
+    return _map_batches(cand.join(zindexed, "__zid").join(epay, "__eid"),
+                        kern_batch, schema)
 
 
 def nearest_zone_dist(

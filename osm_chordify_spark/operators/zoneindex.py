@@ -26,6 +26,7 @@ import numpy as np
 
 from osm_chordify_spark import cellindex as ci
 from osm_chordify_spark import geom as G
+from osm_chordify_spark import geom_batch as GB
 
 
 def parse_zone_polys(geom_):
@@ -131,6 +132,11 @@ class ZoneIndex:
     zone_rings: list = field(repr=False)  # ordinal → list[rings]
     res_list: np.ndarray = None  # sorted unique occupied resolutions
     zone_res: np.ndarray = None  # ordinal → that zone's cover resolution
+    # ordinal → (x0, y0, x1, y1) over the zone's outer rings (inf if empty)
+    zone_bbox: np.ndarray = None
+    # per polygon: its zone ordinal and outer-ring bbox (void-row filter)
+    poly_zone: np.ndarray = None
+    poly_bbox: np.ndarray = None
 
     def __post_init__(self):
         if self.res_list is None:
@@ -155,10 +161,9 @@ class ZoneIndex:
         # ring segment meets only the cells of its own bbox (crossing)
         # and the cell rows it straddles (full).  Per-zone {cell: full}
         # content is pinned identical to zone_min_res + zone_cover_cells
-        from osm_chordify_spark import geom_batch as GB
-
-        zone_arr32, cell_arr, full_arr, zres = GB.zone_cover_cells_batch(
-            zone_rings, res, world, max_cells_per_zone, return_res=True
+        zone_arr32, cell_arr, full_arr, (zbox, pzone, pbox), zres = GB.zone_cover_cells_batch(
+            zone_rings, res, world, max_cells_per_zone, return_bbox=True,
+            return_res=True,
         )
 
         order = np.argsort(cell_arr, kind="stable")
@@ -179,6 +184,9 @@ class ZoneIndex:
             zone_rings=zone_rings,
             res_list=np.unique(zone_res) if len(zone_res) else np.array([res], dtype=np.int64),
             zone_res=zone_res,
+            zone_bbox=zbox,
+            poly_zone=pzone,
+            poly_bbox=pbox,
         )
 
     # -- probes ------------------------------------------------------------
@@ -252,35 +260,50 @@ class ZoneIndex:
         zone_ordinal, full) — matches only zones indexed at the cells'
         own resolution (exact-id lookup); callers probing a
         mixed-resolution index should loop ``res_list`` or use
-        :meth:`candidates_for_bbox`."""
+        :meth:`candidates_for_bboxes`."""
         out_i, flat = self._expand(np.asarray(cells, dtype=np.int64))
         if len(out_i) == 0:
             empty = np.empty(0, dtype=np.int64)
             return empty, empty.astype(np.int32), empty.astype(bool)
         return out_i, self.cand_zone[flat], self.cand_full[flat]
 
-    def candidates_for_bbox(self, x0, y0, x1, y1, max_cells: int = 1 << 20):
-        """Geometry-bbox probe: the bbox cover is computed at EACH
-        occupied resolution and looked up; returns flat (zone_ordinal,
-        full, n_cells) candidate entries where ``n_cells`` is the size of
-        the bbox cover at the matched zone's resolution — the
-        denominator of the containment fast-path test (``all entries of
-        a zone full AND hit count == n_cells``).  All entries of one
-        zone share one resolution, hence one n_cells."""
-        zs, fl, ns = [], [], []
-        for rr in self.res_list:
-            cover = np.sort(ci.cover_bbox(x0, y0, x1, y1, int(rr), self.world,
-                                          max_cells=max_cells))
-            _, zcand, full = self.candidates_for_cells(cover)
-            if len(zcand):
-                zs.append(zcand)
-                fl.append(full)
-                ns.append(np.full(len(zcand), len(cover), dtype=np.int64))
-        if not zs:
-            empty = np.empty(0, dtype=np.int64)
-            return empty.astype(np.int32), empty.astype(bool), empty
-        return np.concatenate(zs), np.concatenate(fl), np.concatenate(ns)
+    def candidates_for_bboxes(self, x0, y0, x1, y1, max_cells: int = 1 << 20):
+        """Batch geometry-bbox probe: bbox arrays → (row, zone_ordinal,
+        contained) per candidate pair, sorted by (row, zone).  Each bbox
+        is covered at every occupied resolution (``ci.cover_bboxes``) and
+        looked up; pairs whose bboxes do not overlap are dropped (the
+        dist path's exact prefilter: no overlap, no intersection).  A
+        pair is contained — the fast path — when every cell of the
+        bbox's cover at the zone's resolution is a full cell of the
+        zone: hits == cover size and all hits full.  The bboxes are
+        probed in slices of at most ``max_cells`` cover cells (one bbox's
+        own cap), so a batch of large bboxes never holds all its covers
+        at once."""
+        b = np.column_stack([np.asarray(v, dtype=np.float64) for v in (x0, y0, x1, y1)])
+        ncells = ci.cover_grid(*b.T, self.res_list, self.world)[-1].sum(axis=1)
+        parts = [self._bbox_pairs(b[s:e], s, max_cells)
+                 for s, e in GB._csr_chunks(ncells, max_cells)]
+        return tuple(np.concatenate(p) for p in zip(*parts or [self._bbox_pairs(b, 0, max_cells)]))
 
+    def _bbox_pairs(self, b, row0: int, max_cells: int):
+        """``candidates_for_bboxes`` of one slice of bboxes (rows offset
+        by ``row0``)."""
+        row, cells, ncells = ci.cover_bboxes(*b.T, self.res_list, self.world,
+                                             max_cells=max_cells)
+        key, flat = self._expand(cells)
+        row, zone = row[key], self.cand_zone[flat].astype(np.int64)
+        eb, zb = b[row], self.zone_bbox[zone]
+        ok = ((eb[:, 0] <= zb[:, 2]) & (eb[:, 2] >= zb[:, 0])
+              & (eb[:, 1] <= zb[:, 3]) & (eb[:, 3] >= zb[:, 1]))
+        nz = len(self.zone_ids)
+        pair, inv, hits = np.unique(row[ok] * nz + zone[ok], return_inverse=True,
+                                    return_counts=True)
+        nfull = np.bincount(inv, weights=self.cand_full[flat][ok], minlength=len(pair))
+        # every hit of a pair is at the zone's one resolution: one cover size
+        cover = np.zeros(len(pair), dtype=np.int64)
+        cover[inv] = ncells[key][ok]
+        return (row0 + pair // nz, (pair % nz).astype(np.int32),
+                (hits == cover) & (nfull == hits))
 
     def assign_points_nearest(self, x: np.ndarray, y: np.ndarray,
                               max_ring: int = 64):

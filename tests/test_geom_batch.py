@@ -184,9 +184,68 @@ def _piece_bytes(pieces):
     return None if pieces is None else [np.asarray(p).tobytes() for p in pieces]
 
 
-def test_clip_pairs_totals_bit_parity(zones):
-    from osm_chordify_spark.operators.intersect import _exact_clip_edges_vs_zone
+def _clip_edges_vs_zone(lines_per_edge, zpolys, keep_geometry):
+    """The per-zone reference clip: every edge's segments against each
+    polygon of ONE zone with ``geom.clip_segments_batch``; line subtotals
+    in (segment, t) order, edge totals in line order."""
+    n_edges = len(lines_per_edge)
+    p0s, p1s, rowidx, lineidx = [], [], [], []
+    line_row: list[int] = []
+    for cr, lines in enumerate(lines_per_edge):
+        for ln in lines:
+            if len(ln) < 2:
+                continue
+            k = len(ln) - 1
+            p0s.append(ln[:-1])
+            p1s.append(ln[1:])
+            rowidx.append(np.full(k, cr, np.int64))
+            lineidx.append(np.full(k, len(line_row), np.int64))
+            line_row.append(cr)
+    if not p0s:
+        return np.zeros(n_edges), [None] * n_edges
+    P0, P1 = np.vstack(p0s), np.vstack(p1s)
+    srow, sline = np.concatenate(rowidx), np.concatenate(lineidx)
+    seg_len = np.hypot(P1[:, 0] - P0[:, 0], P1[:, 1] - P0[:, 1])
+    line_tot = np.zeros(len(line_row))
+    per_poly_iv = []
+    for rings in zpolys:
+        sidx, t0, t1 = G.clip_segments_batch(P0, P1, rings)
+        per_poly_iv.append((sidx, t0, t1))
+        np.add.at(line_tot, sline[sidx], seg_len[sidx] * (t1 - t0))
+    totals = np.zeros(n_edges)
+    np.add.at(totals, np.asarray(line_row, np.int64), line_tot)
+    pieces_per: list = [None] * n_edges
+    if keep_geometry:
+        for cr in range(n_edges):
+            if totals[cr] <= 0:
+                continue
+            pieces = []
+            for sidx, t0, t1 in per_poly_iv:
+                m = srow[sidx] == cr
+                pieces.extend(GB._assemble_pieces(P0, P1, sline, sidx[m], t0[m], t1[m]))
+            pieces_per[cr] = pieces
+    return totals, pieces_per
 
+
+def test_clip_pairs_totals_bit_parity(zones, monkeypatch):
+    """Both clip branches against the per-zone reference.  As is, the
+    big-ring zone goes zone by zone and the rest flat in one call; with
+    the cutoff at 1 every zone goes zone by zone, at 10⁹ every zone
+    goes flat."""
+    for cutoff in (GB.BIG_ZONE_SEGMENTS, 1, 10**9):
+        monkeypatch.setattr(GB, "BIG_ZONE_SEGMENTS", cutoff)
+        _check_clip_parity(zones)
+
+
+def _check_clip_parity(zones):
+    # a holed ring of 400 wiggly vertices: over the ring-size cutoff
+    ang = np.linspace(0, 2 * np.pi, 400, endpoint=False)
+    rad = 12 + 0.8 * np.sin(23 * ang)
+    big = [np.stack([-70 + rad * np.cos(ang), 70 + rad * np.sin(ang)], axis=1),
+           np.array([[-72.0, 68.0], [-68.0, 68.0], [-68.0, 72.0], [-72.0, 72.0]])]
+    zones = zones + [[big]]
+    zbig = len(zones) - 1
+    rng = np.random.RandomState(11)  # local: the module stream stays as is
     # edges: random polylines (1-3 segments)
     edges = []
     for _ in range(120):
@@ -221,6 +280,17 @@ def test_clip_pairs_totals_bit_parity(zones):
         zcodes = np.append(zcodes, u)
     # touch-only pairs: an edge along a square zone's top and right
     # borders (boundary points there classify outside) plus a corner touch
+    # the big zone: crossing, contained (in the ring, off the hole) and
+    # far-off edges
+    for _ in range(40):
+        c = np.array([-70.0, 70.0]) + rng.uniform(-16, 16, 2)
+        edges.append([np.cumsum(rng.uniform(-4, 4, (rng.randint(2, 6), 2)), axis=0) + c])
+        ecodes = np.append(ecodes, len(edges) - 1)
+        zcodes = np.append(zcodes, zbig)
+    edges.append([np.array([[-78.0, 70.0], [-75.0, 71.0]])])
+    edges.append([np.array([[-90.0, 90.0], [-89.0, 91.0]])])
+    ecodes = np.append(ecodes, [len(edges) - 2, len(edges) - 1])
+    zcodes = np.append(zcodes, [zbig, zbig])
     for u in range(3, 53, 5):
         (x0, y0), (x1, _y), _c, (_x, y1) = zones[u][0][0]
         edges.append([np.array([[x0 - 1.0, y1], [x1 + 1.0, y1]]),
@@ -235,9 +305,9 @@ def test_clip_pairs_totals_bit_parity(zones):
     for z in np.unique(zcodes):
         m = zcodes == z
         lines = [edges[e] for e in ecodes[m]]
-        ref, _ = _exact_clip_edges_vs_zone(lines, zones[z], False)
+        ref, _ = _clip_edges_vs_zone(lines, zones[z], False)
         assert np.array_equal(totals[m], ref), f"zone {z}"
-        ref_t, ref_pieces = _exact_clip_edges_vs_zone(lines, zones[z], True)
+        ref_t, ref_pieces = _clip_edges_vs_zone(lines, zones[z], True)
         assert np.array_equal(ref_t, ref)
         got = [_piece_bytes(pieces[i]) for i in np.nonzero(m)[0]]
         assert got == [_piece_bytes(p) for p in ref_pieces], f"zone {z}"
@@ -247,6 +317,9 @@ def test_clip_pairs_totals_bit_parity(zones):
                for i, z in enumerate(zcodes) if zones[z])
     assert any(len(edges[e]) > 1 and totals[i] > 0 for i, e in enumerate(ecodes))
     assert all(totals[-10:] == 0) and all(p is None for p in pieces[-10:])
+    assert sum(len(r) for r in big) >= 256
+    assert (totals[zcodes == zbig] > 0).sum() > 10
+    assert totals[-12] == pytest.approx(np.hypot(3.0, 1.0)) and totals[-11] == 0
 
 
 def test_zone_cover_cells_batch_dedupes_after_empty_zone():

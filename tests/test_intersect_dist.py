@@ -27,6 +27,15 @@ def _grid_zones(n=6):
     ]
 
 
+def _wiggly_zone():
+    """A 300-vertex zone over the grid: its pairs take the zone-by-zone
+    clip branch (``geom_batch.BIG_ZONE_SEGMENTS``)."""
+    ang = np.linspace(0, 2 * np.pi, 300, endpoint=False)
+    rad = 2.0 + 0.2 * np.sin(17 * ang)
+    return {"zone_id": "WIGGLY",
+            "geometry": [np.stack([3.05 + rad * np.cos(ang), 2.95 + rad * np.sin(ang)], axis=1)]}
+
+
 def _edges(spark, n=300):
     base = spark.range(0, n, 1, 4).select(
         F.col("id").alias("osm_id"),
@@ -56,11 +65,12 @@ def test_dist_path_hash_parity_with_broadcast(spark):
     byte-identical piece geometry (they share the clip kernel and the
     cell classification by construction — this pins it).  The empty
     zone has no cover cells, so it is never a candidate on either path
-    (the broadcast kernels read the index's parsed zone rings)."""
+    (the broadcast kernels read the index's parsed zone rings); the
+    many-vertex zone's pairs take the zone-by-zone clip branch."""
     edges = _edges(spark)
     empty = {"zone_id": "EMPTY", "geometry": G.wkb_multipolygon([])}
-    zones = I.Zones.from_records(_grid_zones() + [empty])
-    assert zones.geoms[-1] == []
+    zones = I.Zones.from_records(_grid_zones() + [empty, _wiggly_zone()])
+    assert zones.geoms[-2] == []
     zdf = ID.zones_to_df(spark, zones)
     a = (
         I.intersect_lines_with_zones(edges, zones)
@@ -75,6 +85,8 @@ def test_dist_path_hash_parity_with_broadcast(spark):
     assert len(a) == len(b) > 0
     pd.testing.assert_frame_equal(a[METRIC_COLS], b[METRIC_COLS])
     assert all(bytes(x) == bytes(y) for x, y in zip(a["geometry"], b["geometry"]))
+    wig = a["zone_zone_id"] == "WIGGLY"
+    assert wig.sum() > 10 and (a.loc[wig, "zone_edge_proportion"] < 1).any()
 
 
 def test_dist_contained_fast_path_and_labels(spark):
@@ -199,7 +211,7 @@ def test_dist_polygon_subjects_parity(spark):
     polys = base.select(
         "osm_id", F.lit(6.0).alias("edge_length"), mk_rect("xs", "ys").alias("geometry")
     )
-    zones = I.Zones.from_records(_grid_zones())
+    zones = I.Zones.from_records(_grid_zones() + [_wiggly_zone()])
     zdf = ID.zones_to_df(spark, zones)
     cols = ["edge_osm_id", "zone_zone_id", "zone_edge_proportion",
             "edge_surface_m2", "zone_surface_m2", "zone_link_length_m"]
@@ -215,6 +227,7 @@ def test_dist_polygon_subjects_parity(spark):
     )
     assert len(a) == len(b) > 0
     pd.testing.assert_frame_equal(a, b)
+    assert (a["zone_zone_id"] == "WIGGLY").sum() > 10
 
 
 def test_dist_empty_zone_table_and_no_candidates(spark):
@@ -314,7 +327,7 @@ def test_cogroup_reattach_parity_with_join_on_high_vertex_zone(spark, monkeypatc
     )
     zone_fields = [f for f in zdf.schema.fields if f.name != "geometry"]
     *_, zwkb_mean = ID._build_candidates(
-        edges, zdf, zone_fields, {"zone_id": "zone_zone_id"}, {}, [],
+        edges, zdf, zone_fields, {"zone_id": "zone_zone_id"}, [],
         "geometry", 9, ID.ci.WORLD, 4096)
     assert zwkb_mean >= ID.COGROUP_WKB_BYTES
     outs = {}
@@ -482,6 +495,40 @@ def test_batch_edge_covers_equal_per_edge_loop():
     assert len(got) == len(exp) > len(geoms) * len(res_list)
 
     lines = pdf.iloc[:7]
-    (bb,) = ID._edge_bbox_batches([lines])
+    (bb,) = I._edge_bbox_batches([lines])
     exp_bb = [G.bbox(np.vstack(G.geometry_lines(bytes(g)))) for g in lines["geometry"]]
     assert [tuple(r) for r in bb.itertuples(index=False)] == exp_bb
+
+
+def test_void_rows_use_polygon_bboxes_on_both_paths(spark):
+    """The void-row prefilter keeps a zone when one of its polygons'
+    bboxes overlaps the edge bbox (``GB.zones_touching``; reference
+    intersect.py:447-486 keeps only zones that meet it): a two-part zone
+    whose parts each miss the edge bbox, though its whole bbox overlaps
+    it, gets no row on either transport; a zone inside the edge bbox that
+    the edge misses gets a void row; a far zone gets none.  An empty edge
+    table has no bbox: no zone is kept and no row is returned."""
+    bent = G.wkb_linestring([[0.0, 0.0], [10.0, 0.0], [10.0, 2.0]])
+    edges = spark.createDataFrame(pd.DataFrame({"osm_id": [2], "geometry": [bent]}))
+    straddle = {"zone_id": "straddle", "geometry": G.wkb_multipolygon([
+        [[[1.0, 3.0], [2.0, 3.0], [2.0, 4.0], [1.0, 4.0]]],      # above the edges
+        [[[3.0, -4.0], [4.0, -4.0], [4.0, -3.0], [3.0, -3.0]]],  # below them
+    ])}
+    hit = {"zone_id": "hit",
+           "geometry": [np.array([[4.0, -1.0], [6.0, -1.0], [6.0, 1.0], [4.0, 1.0]])]}
+    near = {"zone_id": "near",
+            "geometry": [np.array([[1.0, 1.0], [2.0, 1.0], [2.0, 1.9], [1.0, 1.9]])]}
+    far = {"zone_id": "far",
+           "geometry": [np.array([[50.0, 50.0], [60.0, 50.0], [60.0, 60.0], [50.0, 60.0]])]}
+    zones = I.Zones.from_records([straddle, hit, near, far])
+    for z in (zones, ID.zones_to_df(spark, zones)):
+        out = I.intersect_lines_with_zones(
+            edges, z, include_void_zones=True, zone_dispatch="dist"
+        ).toPandas()
+        got = {(r.zone_zone_id, pd.isna(r.zone_edge_proportion))
+               for r in out.itertuples()}
+        assert got == {("near", True), ("hit", False)}, type(z)
+        assert len(out) == 2
+        none = edges.limit(0)
+        assert I.intersect_lines_with_zones(
+            none, z, include_void_zones=True, zone_dispatch="dist").count() == 0

@@ -288,7 +288,7 @@ def test_void_rows_keyed_by_zone_ordinal_not_attrs(spark):
     out = I.intersect_lines_with_zones(
         edges, zones, include_void_zones=True
     ).toPandas()
-    assert "__zone_ord" not in out.columns  # hidden key dropped before return
+    assert "__zid" not in out.columns  # hidden key dropped before return
     dup = out[out["zone_zone_id"] == "dup"]
     assert len(dup) == 2
     real = dup[dup["zone_edge_proportion"].notna()]

@@ -235,3 +235,58 @@ def test_mixed_res_zonal_stats_parity(spark):
     b = zonal_stats_dist(tiles, grid, zdf, res=9).toPandas() \
         .sort_values("zone_id", ignore_index=True)
     pd.testing.assert_frame_equal(a, b, check_dtype=False)
+
+
+def test_candidates_for_bboxes_equals_per_edge_probe():
+    """The batch bbox probe of the broadcast operators equals a per-edge
+    loop: ``ci.cover_bbox`` at each occupied resolution, then
+    ``candidates_for_cells``, bbox misses dropped, contained = every hit
+    full and hits == cover size.  Mixed-resolution index (the continent
+    at res 7, 0.1° zones at res 9), with a bbox that shares a cover cell
+    with zones it misses, a zero-length edge and a contained edge."""
+    from osm_chordify_spark import cellindex as ci
+
+    recs = [_continental()] + _small_zones(n_side=8)
+    idx = ZoneIndex.build(_zone_tuples(recs), res=9)
+    assert len(idx.res_list) == 2
+    zbb = [G.polygon_bbox(polys[0]) for polys in idx.zone_rings]  # one polygon each
+    boxes = np.array([
+        (0.05, 0.05, 0.75, 0.35),      # many small zones + the continent
+        (0.31, 0.31, 0.31, 0.31),      # zero-length edge
+        (1.0, 0.05, 1.2, 0.3),         # shares a res-9 cell with S07_*, misses them
+        (10.0, 10.0, 12.0, 11.0),      # deep inside the continent
+        (100.0, 60.0, 101.0, 61.0),    # no zone at all
+    ])
+
+    def per_edge(b):
+        out = {}
+        for rr in idx.res_list:
+            cover = ci.cover_bbox(*b, int(rr), idx.world, max_cells=1 << 20)
+            _, zs, full = idx.candidates_for_cells(np.sort(cover))
+            for z in np.unique(zs):
+                zx0, zy0, zx1, zy1 = zbb[z]
+                if b[0] <= zx1 and b[2] >= zx0 and b[1] <= zy1 and b[3] >= zy0:
+                    m = zs == z
+                    out[int(z)] = bool(full[m].all() and m.sum() == len(cover))
+        return out
+
+    row, zone, contained = idx.candidates_for_bboxes(*boxes.T)
+    # a cell budget of the largest single cover probes box by box
+    budget = int(ci.cover_grid(*boxes.T, idx.res_list, idx.world)[-1].sum(axis=1).max())
+    for a, b in zip(idx.candidates_for_bboxes(*boxes.T, max_cells=budget),
+                    (row, zone, contained)):
+        np.testing.assert_array_equal(a, b)
+    keys = list(zip(row.tolist(), zone.tolist()))
+    assert keys == sorted(keys) and len(set(keys)) == len(keys)
+    got = [{} for _ in boxes]
+    for r, z, c in zip(row, zone, contained):
+        got[r][int(z)] = bool(c)
+    assert got == [per_edge(b) for b in boxes]
+    ids = [{idx.zone_ids[z]: c for z, c in g.items()} for g in got]
+    assert ids[1] == {"CONTINENT": True, "S03_03": False}
+    assert ids[2] == {"CONTINENT": True}  # the S07_* cell-mates are dropped
+    _, cellmates, _ = idx.candidates_for_cells(
+        ci.cover_bbox(*boxes[2], 9, idx.world))
+    assert len(set(cellmates.tolist())) > 1
+    assert ids[3] == {"CONTINENT": True} and ids[4] == {}
+    assert not all(ids[0].values()) and ids[0]["CONTINENT"]
