@@ -164,18 +164,20 @@ def cover_bbox(x0, y0, x1, y1, res: int, world=WORLD, max_cells: int = 4096):
 def cover_grid(x0, y0, x1, y1, res_list, world=WORLD):
     """(res, fx0, fy0, nx, cnt) of each (bbox, resolution) cover, shape
     (n_bbox, n_res): ``cover_bbox``'s floor/clamp arithmetic without the
-    cells — ``cnt`` is the cover size."""
+    cells — ``cnt`` is the cover size.  A bbox with a NaN bound (an
+    empty geometry's) covers no cell."""
     wx0, wy0, wx1, wy1 = world
     res = np.asarray(res_list, dtype=np.int64)[None, :]
     n = np.int64(1) << res
+    nan = np.isnan([_as_np(v, np.float64) for v in (x0, y0, x1, y1)]).any(axis=0)[:, None]
 
     def floor_at(v, w0, w1):
         f = np.floor((_as_np(v, np.float64)[:, None] - w0) / (w1 - w0) * n)
-        return np.clip(f, 0, n - 1).astype(np.int64)
+        return np.clip(np.where(nan, 0, f), 0, n - 1).astype(np.int64)
 
     fx0, fy0 = floor_at(x0, wx0, wx1), floor_at(y0, wy0, wy1)
     nx = floor_at(x1, wx0, wx1) - fx0 + 1
-    return res, fx0, fy0, nx, nx * (floor_at(y1, wy0, wy1) - fy0 + 1)
+    return res, fx0, fy0, nx, np.where(nan, 0, nx * (floor_at(y1, wy0, wy1) - fy0 + 1))
 
 
 def cover_bboxes(x0, y0, x1, y1, res_list, world=WORLD, max_cells: int = 4096):

@@ -292,19 +292,20 @@ def _edge_measures(geoms) -> np.ndarray:
     """(measure, x0, y0, x1, y1) rows for a batch of line or polygon
     WKBs, each parsed once.  Lines measure their length, polygon
     subjects their area; the bbox spans the line vertices or the outer
-    rings."""
+    rings.  An empty geometry measures 0 with a NaN bbox, which covers
+    no cell and overlaps no zone."""
     out = np.empty((len(geoms), 5))
     for i, g in enumerate(geoms):
         kind, data = G.parse_wkb(bytes(g))
         if kind in ("polygon", "multipolygon"):
             polys = [data] if kind == "polygon" else data
-            parts = [rings[0] for rings in polys]
-            m = sum(G.polygon_area(rings) for rings in polys)
+            parts = [rings[0] for rings in polys if rings]
+            m = sum(G.polygon_area(rings) for rings in polys if rings)
         else:
             parts = [data] if kind == "linestring" else data
-            m = sum(G.polyline_length(ln) for ln in parts)
-        c = np.concatenate(parts)
-        out[i] = (m, *c.min(axis=0), *c.max(axis=0))
+            m = sum(G.polyline_length(ln) for ln in parts if len(ln))
+        c = np.concatenate(parts or [np.empty((0, 2))])
+        out[i] = (m, *c.min(axis=0), *c.max(axis=0)) if len(c) else (m, *[np.nan] * 4)
     return out
 
 

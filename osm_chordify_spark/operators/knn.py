@@ -6,36 +6,33 @@ The reference specs this API but never implements it
 north_star requires it for real: match page points to chordified
 segment midpoints with an R-tree-free expanding cell-ring search.
 
-Algorithm (exact kNN, not approximate):
-1. segments → midpoint cell at resolution ``res`` (pure column math);
-2. round r = 1, 2, 4, …: unresolved points explode to the NEW annulus
-   only — cells with Chebyshev distance in (r_prev, r] — and equi-join
-   on cell (Catalyst hash join; AQE handles skewed cells).  Previously
-   found candidates are carried forward as a top-k set per point, so no
-   cell is ever probed twice (round 1 re-probed the full (2r+1)² disk
-   every round: 1,089 cells/point at r=16);
-3. per point, the union of carried + new candidates is ranked by
-   (distance, segment id); a point finalizes when it has ≥ k candidates
-   AND its kth distance ≤ r·min(cell_w, cell_h): any unseen midpoint
-   lies in a cell at Chebyshev distance > r, hence ≥ r·cell_min away —
-   the kth result can no longer change (SURVEY §7.2 step 6);
-4. points still unresolved at ``max_ring`` recurse at a coarser
-   resolution (res − 3 ⇒ 8× fewer ring cells) instead of cross-joining
-   against all segments; at res 0 the single world cell makes the ring
-   search itself exhaustive, so the recursion terminates exactly.
+Algorithm (exact kNN, not approximate), two rounds and a fallback:
+1. segments → the cells they index under at resolution ``res`` (pure
+   column math);
+2. round 1: every point probes ring 1 (its 3×3 cell disk) with a LEFT
+   join, so points without a candidate stay in the ranked set, and is
+   ranked by (distance, id) in one exchange on the point id: a rank ≤ k
+   filter (``dense_rank`` for segments, so a duplicate pair takes one
+   rank) is cut to k rows map-side, then a ``groupBy`` on the same
+   partitioning folds them into ``slice(array_sort(collect(struct(dist,
+   id))), 1, k)``.  A point finalizes when it has ≥ k candidates AND its
+   kth distance ≤ r·cell_min: every unseen target lies in a cell at
+   Chebyshev distance > r, hence ≥ r·cell_min away (SURVEY §7.2 step 6);
+3. round 2: each survivor probes the annulus (1, R] with its own R from
+   an upper bound on its kth distance (:func:`_ring_search`) and is
+   re-ranked with its carried candidates under the same test at R;
+4. points with no R ≤ ``max_ring``, or not final after round 2, recurse
+   at a coarser resolution (res − 3 ⇒ 8× fewer ring cells) instead of
+   cross-joining against all segments; at res 0 the single world cell
+   makes ring 1 itself exhaustive, so the recursion terminates exactly.
 
-Job economy: each round materializes its candidate set and its
-still-unresolved point set with the persist → count → eager
-localCheckpoint → unpersist sequence (see graph._min_label_prop for
-why this exact order: checkpointing an unmaterialized join tree
-carries double-exponentially-growing estimated stats, and lazy
-persists recompute the whole history under AQE); done/undone
-classification is a window over the same shuffle as the ranking, so
-no large id set is ever broadcast.
-
-Scale: the fact side (points) is never shuffled except by the ranking
-window within each round, and each round only reprocesses the
-shrinking unresolved set against its new annulus.
+Job economy: each round is one eager localCheckpoint of a plan with one
+hash exchange on the point id (round 2 repartitions its survivors by
+number, which AQE never coalesces into one task for the probe after
+it), then one emptiness probe of its unfinished points: no anti-join,
+no per-pair dedupe exchange.  A warm call on the ``osm_pipeline`` bench
+shape runs 13 jobs (35 for the doubling loop this replaced,
+``BENCH/knn_two_rounds.md``).
 """
 
 from __future__ import annotations
@@ -47,14 +44,15 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm_chordify_spark.cellindex import WORLD
-from osm_chordify_spark.functions.cells import cell_expr
+from osm_chordify_spark.functions.cells import cell_expr, cell_parent_expr
 
 _MASK = (1 << 29) - 1
 
 
 def _annulus_cells(cell, r_in: int, r_out: int, res: int):
     """Array column of cells with Chebyshev distance in (r_in, r_out]
-    from ``cell`` (clipped at the world edge).  r_in = -1 ⇒ full disk."""
+    from ``cell`` (clipped at the world edge).  r_in = -1 ⇒ full disk;
+    ``r_out`` may be a per-row Column."""
     n = 1 << res
     ix = F.shiftright(cell, 29).bitwiseAND(F.lit(_MASK).cast("long"))
     iy = cell.bitwiseAND(F.lit(_MASK).cast("long"))
@@ -85,95 +83,143 @@ def _annulus_cells(cell, r_in: int, r_out: int, res: int):
 def _ring_search(
     unresolved: DataFrame,
     segs: DataFrame,
+    anchors: DataFrame,
     dist,
     k: int,
     res: int,
     max_ring: int,
-    cell_min: float,
+    world,
     dedupe_pairs: bool,
     coarsen,
 ) -> DataFrame:
-    """The shared expanding-annulus k-nearest loop behind knn_match
-    (point targets) and knn_match_segments (segment targets).
+    """The shared two-round k-nearest search behind knn_match (point
+    targets) and knn_match_segments (segment targets).
 
-    ``segs`` carries (__sid, __cell, payload…); ``dist`` is the
-    candidate-distance Column over the joined row; ``dedupe_pairs``
-    collapses (point, target) duplicates before ranking (targets
-    indexed under several cells); ``coarsen(unresolved)`` finishes the
-    sparse leftovers at a coarser resolution.  The materialization
-    discipline per round (eager checkpoint of the ranked set, anti-join
-    + count + checkpoint of the survivors) is THE scale invariant — it
-    lives only here now, so both operators stay in lock-step."""
-    wp = Window.partitionBy("__pid")
-    w = wp.orderBy(F.col("__dist"), F.col("__sid"))
+    ``unresolved`` carries (__pid, __px, __py, __pcell); ``segs``
+    carries (__sid, __cell, payload…); ``dist`` is the candidate-distance
+    Column over the joined row; ``anchors`` (__ax, __ay) holds one
+    point ON each target, one row per target; ``dedupe_pairs``
+    ranks each (point, target) pair once (targets indexed under several
+    cells); ``coarsen(unresolved)`` finishes the leftovers at a coarser
+    resolution.  Returns (__pid, __sid, __dist, __rank).
 
-    finished_parts: list[DataFrame] = []
-    best = None  # carried top-k candidates of still-unresolved points
-    r_prev, r = -1, 1
-    n_unres = 1
-    while r <= max_ring:
-        probe = unresolved.withColumn(
-            "__cell", F.explode(_annulus_cells(F.col("__pcell"), r_prev, r, res))
-        )
-        cand = (
-            probe.join(segs, "__cell")
-            .withColumn("__dist", dist)
-            .select("__pid", "__px", "__py", "__sid", "__dist")
-        )
-        allc = cand if best is None else cand.unionByName(best)
-        if dedupe_pairs:
-            # a target reached via several cells yields duplicate pairs —
-            # collapse before ranking or one target eats two ranks
-            allc = allc.groupBy("__pid", "__sid").agg(
-                F.first("__px").alias("__px"),
-                F.first("__py").alias("__py"),
-                F.min("__dist").alias("__dist"),
-            )
-        bound = float(r) * cell_min
-        ranked = (
-            allc.withColumn("__rank", F.row_number().over(w))
-            .filter(F.col("__rank") <= k)
-            .withColumn(
-                "__done",
-                (F.count("*").over(wp) >= k)
-                & (F.max("__dist").over(wp) <= F.lit(bound)),
-            )
-        )
-        # direct eager checkpoint: each round's inputs are an RDD (real
-        # carried stats) and the source-backed segs projection, so stats
-        # cannot compound round-over-round
-        ranked_ck = ranked.localCheckpoint(eager=True)
-        finished_parts.append(
-            ranked_ck.filter(F.col("__done")).select(
-                "__pid", "__sid", "__dist", "__rank"
-            )
-        )
-        done_ids = ranked_ck.filter(F.col("__done")).select("__pid").distinct()
-        nxt = unresolved.join(done_ids, "__pid", "left_anti").persist()
-        n_unres = nxt.count()
-        unresolved = nxt.localCheckpoint(eager=True)
-        nxt.unpersist()
-        if n_unres == 0:
-            break
-        best = ranked_ck.filter(~F.col("__done")).select(
-            "__pid", "__px", "__py", "__sid", "__dist"
-        )
-        r_prev, r = r, r * 2
+    Round 1 probes ring 1 and finalizes at bound cell_min.  A survivor's
+    round-2 radius R = ⌊u / cell_min⌋ + 1 comes from an upper bound u on
+    its kth distance: its carried kth distance when it has k candidates,
+    else the smallest maxdist(p, B) over the 3×3 neighbourhoods of its
+    parent cells C, 1…J levels up, that hold ≥ k anchors, B the bbox of
+    C's anchors (one aggregate over ``anchors``, all levels at once).
+    Exactness: some k targets lie within u of p (the carried ones, or
+    the k anchors' targets, each ≤ |p − anchor| ≤ maxdist(p, B) away).
+    A target at distance D ≤ u has a point in a cell at Chebyshev
+    distance d with (d − 1)·cell_min ≤ D, so d ≤ R and the disk R finds
+    it: the kth found distance is ≤ u < R·cell_min, and every target
+    not found is ≥ R·cell_min away.
+    The finalize test is re-checked at R anyway, so float rounding, a
+    duplicated id or an anchor clamped at the world edge can only send a
+    point to ``coarsen``, never give a wrong answer.  Points with no
+    finite R ≤ max_ring skip the probe and go to ``coarsen`` too."""
+    x0, y0, x1, y1 = world
+    cell_min = min(x1 - x0, y1 - y0) / (1 << res)
+    collect = F.collect_set if dedupe_pairs else F.collect_list
+    # a rank filter, unlike collect alone, is cut to k map-side; the
+    # collect_set then drops a duplicate pair's second row
+    rank = (F.dense_rank() if dedupe_pairs else F.row_number()).over(
+        Window.partitionBy("__pid").orderBy(F.col("__dist").asc_nulls_last(), "__sid"))
+    top = F.col("__top")
+    kth = F.try_element_at(top, F.lit(k))["__dist"]  # null below k candidates
 
-    if n_unres > 0:
-        if res == 0:
-            # the single world cell was probed: best-so-far IS exact
-            finished_parts.append(
-                best.withColumn("__rank", F.row_number().over(w)).select(
-                    "__pid", "__sid", "__dist", "__rank"
-                )
-            )
-        else:
-            finished_parts.append(coarsen(unresolved))
+    def ranked(cand, bound, carried=None):
+        """Per point, the sorted top-k (dist, sid) structs (merged with
+        ``carried`` ones) and the finalize flag: at most one exchange,
+        the window's, which the aggregate reuses."""
+        new = collect(
+            F.when(F.col("__sid").isNotNull(), F.struct("__dist", "__sid"))
+        )
+        if carried is not None:
+            merged = F.concat(F.first(carried), new)
+            new = F.array_distinct(merged) if dedupe_pairs else merged
+        out = cand.withColumn("__rk", rank).filter(F.col("__rk") <= k).groupBy("__pid").agg(
+            *[F.first(c).alias(c) for c in ("__px", "__py", "__pcell")],
+            F.slice(F.array_sort(new), 1, k).alias("__top"),
+            F.first(bound).alias("__bound"),
+        )
+        done = F.coalesce(kth <= F.col("__bound"), F.lit(False))
+        return out.withColumn("__done", done).localCheckpoint(eager=True)
 
-    results = finished_parts[0]
-    for part in finished_parts[1:]:
-        results = results.unionByName(part)
+    def finished(rk):
+        return rk.filter("__done").select("__pid", F.posexplode(top)).select(
+            "__pid", "col.__sid", "col.__dist", (F.col("pos") + 1).alias("__rank"))
+
+    probe = unresolved.withColumn(
+        "__cell", F.explode(_annulus_cells(F.col("__pcell"), -1, 1, res))
+    )
+    r1 = ranked(probe.join(segs, "__cell", "left").withColumn("__dist", dist),
+                F.lit(cell_min))
+    surv = r1.filter(~F.col("__done"))
+    if surv.isEmpty():
+        return finished(r1)
+    if res == 0:
+        # ring 1 is the single world cell: best-so-far IS exact
+        return finished(r1).unionByName(
+            finished(surv.withColumn("__done", F.lit(True)))
+        )
+
+    # a parent 2^j cells wide bounds u no lower than ~2^j·cell_min: past
+    # j = log2(max_ring) − 1 it cannot give R ≤ max_ring
+    levels = range(1, min(res, max(max_ring.bit_length() - 2, 1)) + 1)
+    acell = cell_expr(F.col("__ax"), F.col("__ay"), res, world)
+    occupied = (
+        anchors.select("__ax", "__ay", F.explode(F.array(*[
+            cell_parent_expr(acell, j) for j in levels
+        ])).alias("__cell"))
+        .groupBy("__cell").agg(
+            F.count("*").alias("__n"),
+            *[f(c).alias(f"{f.__name__}{c}") for f in (F.min, F.max) for c in ("__ax", "__ay")],
+        )
+        .filter(F.col("__n") >= k)
+    )
+    near = F.flatten(F.array(*[
+        _annulus_cells(cell_parent_expr(F.col("__pcell"), j), -1, 1, res - j)
+        for j in levels
+    ]))
+    # maxdist from the point to the bbox of a coarse cell's anchors
+    mx = F.greatest(F.abs(F.col("__px") - F.col("min__ax")),
+                    F.abs(F.col("__px") - F.col("max__ax")))
+    my = F.greatest(F.abs(F.col("__py") - F.col("min__ay")),
+                    F.abs(F.col("__py") - F.col("max__ay")))
+    # round 2's one exchange: survivors hashed on __pid BY NUMBER, which
+    # AQE never coalesces (the probe below runs after it and can be far
+    # larger than the few survivor rows); the bound aggregate and the
+    # ranking reuse that partitioning
+    parts = int(surv.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    surv = (
+        surv.repartition(parts, "__pid")
+        .select("__pid", "__px", "__py", "__pcell", "__top", F.explode_outer(
+            F.when(F.size(top) < k, near)).alias("__cell"))
+        .join(occupied, "__cell", "left")
+        .groupBy("__pid").agg(
+            *[F.first(c).alias(c) for c in ("__px", "__py", "__pcell", "__top")],
+            F.min(F.when(F.col("__n") >= k, F.sqrt(mx * mx + my * my))).alias("__u"),
+        )
+    )
+    u = F.coalesce(kth, F.col("__u"))
+    r_out = F.when(
+        u < F.lit(max_ring * cell_min),
+        F.least(F.floor(u / F.lit(cell_min)) + 1, F.lit(max_ring)),
+    )
+    surv = surv.withColumn("__R", r_out)
+    probe = surv.withColumn(
+        "__cell", F.explode_outer(_annulus_cells(F.col("__pcell"), 1, F.col("__R"), res))
+    )
+    r2 = ranked(
+        probe.join(segs, "__cell", "left").withColumn("__dist", dist),
+        F.col("__R") * F.lit(cell_min), carried=top,
+    )
+    results = finished(r1).unionByName(finished(r2))
+    left = r2.filter(~F.col("__done"))
+    if not left.isEmpty():
+        results = results.unionByName(coarsen(left))
     return results
 
 
@@ -196,11 +242,6 @@ def knn_match(
     reproducible under any partitioning."""
     px, py = point_xy
     sx, sy = seg_xy
-    x0, y0, x1, y1 = world
-    cell_w = (x1 - x0) / (1 << res)
-    cell_h = (y1 - y0) / (1 << res)
-    cell_min = min(cell_w, cell_h)
-
     segs = segments.select(
         F.col(seg_id).alias("__sid"),
         F.col(sx).alias("__sx"),
@@ -240,8 +281,8 @@ def knn_match(
         )
 
     results = _ring_search(
-        unresolved, segs, dist, k, res, max_ring, cell_min,
-        dedupe_pairs=False, coarsen=coarsen,
+        unresolved, segs, segs.select(F.col("__sx").alias("__ax"), F.col("__sy").alias("__ay")),
+        dist, k, res, max_ring, world, dedupe_pairs=False, coarsen=coarsen,
     )
     return results.select(
         F.col("__pid").alias(point_id),
@@ -376,7 +417,6 @@ def knn_match_segments(
     x0, y0, x1, y1 = world
     cell_w = (x1 - x0) / (1 << res)
     cell_h = (y1 - y0) / (1 << res)
-    cell_min = min(cell_w, cell_h)
 
     ca = cell_expr(F.col(ax), F.col(ay), res, world)
     cb = cell_expr(F.col(bx), F.col(by), res, world)
@@ -477,8 +517,10 @@ def knn_match_segments(
             F.col("rank").alias("__rank"),
         )
 
+    # anchor: endpoint a, a point on the segment (see _ring_search)
+    anchors = segments.select(F.col(ax).alias("__ax"), F.col(ay).alias("__ay"))
     results = _ring_search(
-        unresolved, segs, dist, k, res, max_ring, cell_min,
+        unresolved, segs, anchors, dist, k, res, max_ring, world,
         dedupe_pairs=True, coarsen=coarsen,
     )
     return results.select(

@@ -70,6 +70,18 @@ def test_cover_bbox():
     assert set(pc.tolist()) <= set(cells.tolist())
 
 
+def test_cover_bboxes_nan_bbox_covers_nothing():
+    """An empty geometry's NaN bbox gets no cell; the bboxes around it
+    keep their ``cover_bbox`` covers."""
+    nan = float("nan")
+    row, cells, n = ci.cover_bboxes([-1.0, nan, 0.0], [-1.0, 0.0, 0.0],
+                                    [1.0, 1.0, nan], [1.0, 1.0, 0.5], [5, 7])
+    assert set(row.tolist()) == {0}
+    assert cells.tolist() == (ci.cover_bbox(-1.0, -1.0, 1.0, 1.0, 5).tolist()
+                              + ci.cover_bbox(-1.0, -1.0, 1.0, 1.0, 7).tolist())
+    assert ci.cover_grid([nan], [0.0], [1.0], [1.0], [5])[-1].tolist() == [[0]]
+
+
 def test_cover_bbox_max_cells_guard():
     with pytest.raises(ValueError):
         ci.cover_bbox(-180, -90, 180, 90, 10, max_cells=100)

@@ -532,3 +532,34 @@ def test_void_rows_use_polygon_bboxes_on_both_paths(spark):
         none = edges.limit(0)
         assert I.intersect_lines_with_zones(
             none, z, include_void_zones=True, zone_dispatch="dist").count() == 0
+
+
+def test_empty_edge_geometry_is_skipped_on_both_paths(spark):
+    """An edge whose geometry is empty (``MULTILINESTRING EMPTY``, or a
+    ``LINESTRING`` with no points) has no bbox and no cover cell: both
+    transports return exactly the rows of the table without it, void
+    rows included."""
+    edges = _edges(spark, n=60)
+    empties = spark.createDataFrame(
+        pd.DataFrame({
+            "osm_id": [9001, 9002], "edge_length": [0.0, 0.0],
+            "geometry": [G.wkb_multilinestring([]), G.wkb_linestring(np.zeros((0, 2)))],
+        }),
+        schema=edges.schema,
+    )
+    # inside the edge bbox, between two edge rows: a void row
+    void = {"zone_id": "void",
+            "geometry": [np.array([[0.1, 0.27], [0.2, 0.27], [0.2, 0.33], [0.1, 0.33]])]}
+    zones = I.Zones.from_records(_grid_zones() + [void])
+    cols = METRIC_COLS + ["geometry"]
+    for z in (zones, ID.zones_to_df(spark, zones)):
+        got, exp = (
+            I.intersect_lines_with_zones(
+                e, z, keep_geometry=True, include_void_zones=True, zone_dispatch="dist"
+            ).select(*cols).toPandas().sort_values(METRIC_COLS).reset_index(drop=True)
+            for e in (edges.unionByName(empties), edges)
+        )
+        assert len(exp) > 0 and "void" in set(exp["zone_zone_id"]), type(z)
+        pd.testing.assert_frame_equal(got[METRIC_COLS], exp[METRIC_COLS])
+        assert [bytes(g) if g is not None else None for g in got["geometry"]] == [
+            bytes(g) if g is not None else None for g in exp["geometry"]]

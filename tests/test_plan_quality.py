@@ -395,3 +395,70 @@ def test_triangles_equi_joins_only(spark):
     assert "BroadcastNestedLoopJoin" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
     assert "MapInPandas" not in plan
+
+
+def test_knn_two_rankings_one_pid_exchange_each(spark, monkeypatch):
+    """knn on a bench-like shape (GPS fixes on roads plus far fixes next
+    to isolated stubs, which have no candidate in ring 1): exactly two
+    ranking rounds, each one eager checkpoint whose plan hashes on
+    ``__pid`` once (no per-pair dedupe exchange, no second exchange for
+    the done flags), and a pinned job count for the whole call.  Round
+    1 trims each point to its top k before that exchange (a partial
+    WindowGroupLimit); round 2 ranks inside the survivors' partitions."""
+    import numpy as np
+    import pandas as pd
+
+    from osm_chordify_spark.operators.knn import knn_match_segments
+
+    rng = np.random.default_rng(5)
+    ax, ay = rng.uniform(-50, 50, 300), rng.uniform(-30, 30, 300)
+    segs = pd.DataFrame({"seg_id": np.arange(303), "ax": np.r_[ax, 60, 60, 60],
+                         "ay": np.r_[ay, -20, 0, 20]})
+    segs["bx"] = segs["ax"] + np.r_[rng.uniform(-2, 2, 300), 0, 0, 0]
+    segs["by"] = segs["ay"] + np.r_[rng.uniform(-2, 2, 300), 0.5, 0.5, 0.5]
+    t = rng.uniform(0, 1, 200)
+    pts = pd.DataFrame({
+        "point_id": np.arange(203),
+        "x": np.r_[ax[:200] + t * (segs["bx"][:200] - ax[:200]), 58.8, 58.8, 58.8],
+        "y": np.r_[ay[:200] + t * (segs["by"][:200] - ay[:200]), -20, 0, 20],
+    })
+    pdf, sdf = spark.createDataFrame(pts), spark.createDataFrame(segs)
+
+    cls = type(pdf)
+    real = cls.localCheckpoint
+    plans = []
+
+    def spy(self, *a, **kw):
+        out = real(self, *a, **kw)
+        plan = self._jdf.queryExecution().executedPlan().toString()
+        plans.append(plan.split("== Initial Plan ==")[0])
+        return out
+
+    monkeypatch.setattr(cls, "localCheckpoint", spy)
+    sc = spark.sparkContext
+    sc.setJobGroup("knn-pin", "one knn call")
+    try:
+        rows = knn_match_segments(pdf, sdf, k=1, res=9).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    monkeypatch.setattr(cls, "localCheckpoint", real)
+    assert len(rows) == 203
+    assert {r.seg_id for r in rows if r.point_id >= 200} == {300, 301, 302}
+    assert len(plans) == 2
+    for plan in plans:
+        assert "isFinalPlan=true" in plan, plan
+        assert plan.count("hashpartitioning(__pid") == 1, plan
+    # round 1's only shuffle; round 2's other one is the anchor
+    # occupancy count on __cell (segment side, broadcast afterwards)
+    assert plans[0].count("ShuffleQueryStage") == 1, plans[0]
+    assert "dense_rank" in plans[0].split("ShuffleQueryStage")[1].split("Partial")[0]
+    assert plans[1].count("ShuffleQueryStage") == 2, plans[1]
+    assert "Exchange hashpartitioning(__cell" in plans[1], plans[1]
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    jobs = [j for j in tracker.getJobIdsForGroup("knn-pin")
+            if any(str(store.lastStageAttempt(s).status()) != "SKIPPED"
+                   for s in tracker.getJobInfo(j).stageIds)]
+    # measured 11 at local[8] (the parent's doubling loop ran 3 rounds
+    # and 30 jobs on this fixture)
+    assert len(jobs) <= 11, len(jobs)
