@@ -9,12 +9,12 @@ iterative DataFrame program (the north_rule's "Spark graph contraction
 
 * connected_components — min-label propagation + pointer doubling
   (O(log n) rounds), used for weak components (reference
-  graph.py:987-1002) and for chordify chain grouping;
+  graph.py:987-1002) and for chordify's parallel-edge fallback;
 * chordify — degree-2 node collapse (reference graph.py:922-962,
   OSMnx simplify_graph): interstitial-node marking via degree/attr
-  aggregation, chain ids via connected components over the edge
-  adjacency, per-chain path ordering in applyInPandas, attribute
-  aggregation with functions/aggregates.py (A1–A9 semantics);
+  aggregation, chain ids and path order by Wyllie list ranking over the
+  edge adjacency, attribute aggregation with functions/aggregates.py
+  (A1–A9 semantics);
 * validate_topology — protected-self-loop split, isolate removal,
   duplicate edge-id suffixing (reference graph.py:346-474);
 * consolidate_nodes — tolerance-radius node merge via close-pair cell
@@ -22,16 +22,18 @@ iterative DataFrame program (the north_rule's "Spark graph contraction
   ox.consolidate_intersections);
 * largest_component retention (reference graph.py:987-1002).
 
-Scale: every round of the CC loop is two shuffles on (id) — at 1000
-executors the edges table stays partitioned by key; localCheckpoint
-truncates lineage each round so plans don't grow.
+Scale: the iterative loops end every round (CC) or step (list ranking)
+in ``_materialize``, which truncates lineage so plans don't grow and
+hands the next round the state's measured size, so Spark's own
+broadcast threshold picks replicate-the-state (it fits) or a shuffled
+join on the key (lake scale).
 """
 
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 from osm_chordify_spark import geom as G
@@ -45,6 +47,42 @@ PROTECTED_HIGHWAY_TYPES = (
 
 # ---------------------------------------------------------------------------
 # connected components
+
+
+def _materialize(df: DataFrame, *, probe: list) -> tuple[DataFrame, dict]:
+    """Compute ``df`` once → ``(frame, values)``: ``frame`` holds the
+    same rows behind a truncated plan that carries their MEASURED size,
+    ``values`` maps the name of each aggregate Column in ``probe`` to
+    its value over the rows.
+
+    Order: persist → eager localCheckpoint of ``df`` observed with
+    ``probe`` → unpersist.  The checkpoint is the only action: under
+    AQE a fresh cache's first action fills the cache in a job of its
+    own, and the checkpoint reads the cache in the next one, with
+    ``probe`` riding that read.  Why:
+
+    * Spark's size-only estimate of a join is the PRODUCT of its
+      children's sizes, so a 93 KB state left-joined to itself plans as
+      5.2 GB, and a join over it shuffles both sides where the state
+      fits a broadcast.  A localCheckpoint of the join, eager or lazy,
+      carries that estimate.  A persisted frame's plan reports its real
+      size once the cache is filled, and the eager checkpoint reads the
+      stats only after its own job has filled it.  (Compounded over
+      rounds the product also grows double-exponentially: by round ~6
+      Catalyst's stats visitor spent seconds multiplying multi-megabit
+      integers.)
+    * A count() probe adds a map stage, an exchange and a final stage:
+      5 jobs per list-ranking step on the osm_pipeline benchmark edges
+      against 3 here (cache fill, the broadcast lookup side, checkpoint).
+      A no-op write observed with ``probe`` followed by a lazy
+      checkpoint also takes 3, but it computes the checkpoint's rows
+      when the next step first reads them, after ``unpersist``: from
+      the lineage a second time."""
+    df = df.persist()
+    obs = Observation()
+    ck = df.observe(obs, *probe).localCheckpoint(eager=True)
+    df.unpersist()
+    return ck, obs.get
 
 
 def _min_label_prop(
@@ -62,25 +100,14 @@ def _min_label_prop(
     Restructured for driver-side job economy (the 100× scale bottleneck
     here is orchestration, not data): each round composes one
     neighbor-min step and ``doublings_per_round`` pointer-doubling
-    self-joins LAZILY, materializes the round ONCE with an eager
-    localCheckpoint, and probes convergence with a count over the
-    already-materialized RDD (a near-free second job).
-
-    The round ends persist → count → localCheckpoint → unpersist, in
-    that exact order, for a non-obvious reason measured the hard way:
-    Dataset.localCheckpoint carries the origin plan's ESTIMATED stats
-    into the new LogicalRDD, and a round's plan multiplies the
-    sizeInBytes of ~2^(doublings+1) join leaves — so checkpointing the
-    raw join tree makes the carried BigInteger's BIT LENGTH grow ~16×
-    per round (double-exponential value growth), and by round ~6
-    Catalyst's stats visitor is doing Toom-Cook multiplication on
-    multi-megabit integers (measured 0.8 s → 24 s → 20× worse per
-    round; same blowup with lazy checkpoints or bare persists).
-    Materializing the cache FIRST makes InMemoryRelation report its
-    real, small byte size, the checkpoint inherits that, and every
-    round restarts from KB-scale stats.  Both jobs are cheap: the
-    count materializes one round's work, the checkpoint re-reads the
-    cache."""
+    self-joins LAZILY and ends in ONE ``_materialize`` whose observed
+    probe counts the changed labels, so the probe costs no job of its
+    own.  Inside a round the lazy checkpoints carry the join's product
+    estimate (see ``_materialize``; an eager checkpoint would carry it
+    too), so unless the state is a few KB the later doubling joins
+    shuffle both sides (a 200-vertex path still broadcasts); the round-end
+    state and the cached arcs carry measured sizes, so each round's
+    first joins broadcast their small side."""
     arcs = (
         arcs.repartition(F.col("b"))  # co-partition once; reused every round
         .persist()
@@ -123,12 +150,11 @@ def _min_label_prop(
                     "label"
                 ),
             ).localCheckpoint(eager=False)
-        cur = cur.persist()
-        changed = cur.filter(F.col("label") != F.col("old")).count()
-        ckpt = cur.localCheckpoint(eager=True)
-        cur.unpersist()
-        labels = ckpt.drop("old")
-        if changed == 0:
+        labels, got = _materialize(
+            cur, probe=[F.count(F.when(F.col("label") != F.col("old"), 1)).alias("n")]
+        )
+        labels = labels.drop("old")
+        if got["n"] == 0:
             break
     arcs.unpersist()
     return labels
@@ -418,149 +444,110 @@ def strongly_connected_components(
     return out
 
 
-def _chain_components_rank(
-    pairs: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    steps_per_round: int = 3,
-) -> DataFrame:
+def _chain_components_rank(pairs: DataFrame, n_pairs: int) -> DataFrame:
     """Components AND list ranks for FUNCTIONAL pair graphs — in-degree
     ≤ 1 and out-degree ≤ 1, i.e. disjoint chains and rings (chordify's
-    consecutive-edge pairs; the fan-out guard in chordify enforces the
-    precondition).  Returns (id, component, seq) where ``seq`` is the
-    0-based distance from the chain head — for rings, from the
-    deterministic anchor (the ring's min vertex id), so seq is TOTAL.
+    consecutive-edge pairs (src, dst); chordify's parallel-edge guard
+    enforces the precondition).  ``n_pairs`` is the row count of
+    ``pairs``, which the caller already knows.  Returns (id, component,
+    seq) where ``seq`` is the 0-based distance from the chain head — for
+    rings, from the deterministic anchor (the ring's min vertex id), so
+    seq is TOTAL.
 
-    Rings get their seq from a SECOND Wyllie pass (round 4): the first
-    pass labels each ring with its minimum vertex id (mp); the ring
-    subset then re-runs the identical doubling with the ANCHOR's (the
-    min-id vertex's) predecessor pointer cut, turning every ring into a
-    rooted chain — seq = distance from the anchor, exactly the order
-    the old per-chain Python pass produced (it also started rings at
-    the min edge id).  The second pass touches ONLY ring vertices (zero
-    cost when there are none), so chordify's phase A is fully
-    relational for every functional input.
+    Rings get their seq from a SECOND Wyllie pass: the first pass labels
+    each ring with its minimum vertex id (mp); the ring subset then
+    re-runs the identical doubling with the ANCHOR's (the min-id
+    vertex's) predecessor pointer cut, turning every ring into a rooted
+    chain — seq = distance from the anchor.  The second pass touches
+    ONLY ring vertices (zero cost when there are none).
 
     One pointer-doubling self-join per step on the unique PREDECESSOR
-    pointer only (half the join count of a pred+succ formulation), with
-    three accumulators riding the same join:
+    pointer only, over the vertices that have one (heads have no row:
+    a lookup that misses has reached a head), with accumulators riding
+    the same join:
 
     * pp — jumps to pp[pp] (window doubles);
     * dp — Wyllie list ranking: dp += dp[pp] ⇒ at convergence dp =
-      distance from head, which IS chordify's path order — the separate
-      per-chain Python ordering pass disappears for chain components;
-    * mp — min id over the ancestor window (rings: once the window
-      wraps the cycle, mp = the ring minimum = a canonical label);
-    * rooted — whether pp currently points at a head (a vertex with no
-      predecessor); propagates with the window.
+      distance from head, which IS chordify's path order;
+    * mp — min id over the ancestor window, 2^s + 1 vertices after s
+      steps (rings: once the window wraps the cycle, mp = the ring
+      minimum = a canonical label);
+    * rooted — the lookup missed or rooted[pp]: after s steps exactly
+      the vertices within 2^s − 1 of their head are rooted.
 
-    Labels: chains use component = pp (the head — constant across the
-    chain once everyone converges); rings use component = mp.  The two
-    never mix inside one component (a component with a head is a chain).
+    Labels: chains use component = pp (the head); rings use component =
+    mp.  The two never mix inside one component.
 
     Exits: (a) EVERY vertex rooted — pp is then at a head and mp/dp are
-    telescoped over the whole path, so the state is provably final and
-    no confirmation round is needed (label propagation can't certify
-    this; list ranking can); (b) step budget ⌈log₂ n⌉ + 1 — windows of
-    size ≥ n wrap any ring (rings never root, so mixed inputs run to
-    the budget, which is also the sound exit for them).
-    Materialization per round follows the persist → count →
-    localCheckpoint → unpersist discipline of _min_label_prop (see its
-    docstring for the stats-carry blowup this avoids)."""
-    verts = (
-        pairs.select(F.col(src).alias("id"))
-        .union(pairs.select(F.col(dst).alias("id")))
-        .distinct()
-    )
-    pred = pairs.select(F.col(dst).alias("id"), F.col(src).alias("__p"))
+    telescoped over the whole path, so the state is provably final; (b)
+    the budget of s steps with 2^s ≥ n_pairs + 1 (``bit_length``): a
+    chain of m pairs has its last vertex at distance m, and a ring of r
+    ≤ m vertices is wrapped once 2^s + 1 ≥ r (rings never root, so
+    mixed inputs run to the budget).  Extra steps change nothing.
 
-    def init_state(vp):
-        """(id, __p) with NULL __p at heads → the doubling state."""
-        return vp.select(
-            "id",
-            F.coalesce(F.col("__p"), F.col("id")).alias("pp"),
-            F.least(F.col("id"), F.coalesce(F.col("__p"), F.col("id"))).alias("mp"),
-            F.when(F.col("__p").isNull(), F.lit(0)).otherwise(F.lit(1))
-            .cast("long").alias("dp"),
-            F.col("__p").isNull().alias("rooted"),
+    Every step ends in ``_materialize`` with the unrooted count as its
+    observed probe: a bare localCheckpoint of the step, eager or lazy,
+    would carry the join's product estimate (a 93 KB state left-joined
+    to itself plans as 5.2 GB; see there), so the next step would shuffle
+    both sides of a join over a state that fits a broadcast; with the
+    measured size Spark's own broadcast threshold replicates the lookup
+    side when it fits and shuffles it when it does not (lake scale).
+    A step references the state twice (probe + lookup side), so without
+    the checkpoint k steps would plan 2^k copies of the base state."""
+    pred = pairs.select(F.col("dst").alias("id"), F.col("src").alias("pp"))
+
+    def rank(vp, m):
+        """(id, pp) of every vertex with a predecessor → (ranked state,
+        last unrooted count), doubling to all-rooted or the budget for
+        ``m`` pairs.  Heads have no row: a lookup that misses lands on a
+        head, which is where a vertex becomes rooted."""
+        state = vp.select(
+            "id", "pp", F.least("id", "pp").alias("mp"),
+            F.lit(1).cast("long").alias("dp"), F.lit(False).alias("rooted"),
         )
-
-    def run_doubling(state, n):
-        """Run the doubling to all-rooted or the ⌈log₂n⌉+1 budget;
-        ``state`` must already be persisted.  Returns (final_state,
-        last unrooted count)."""
-        import math
-
-        needed_steps = max(1, math.ceil(math.log2(max(n, 2)))) + 1
-        steps_done = 0
-        init = state
-        unrooted = n
-        while steps_done < needed_steps:
-            cur = state
-            for _ in range(steps_per_round):
-                lkp = cur.select(
-                    F.col("id").alias("lid"), F.col("pp").alias("pp2"),
-                    F.col("mp").alias("mp2"), F.col("dp").alias("dp2"),
-                    F.col("rooted").alias("rt2"),
-                )
-                cur = cur.join(lkp, cur.pp == lkp.lid, "left").select(
+        for _ in range(m.bit_length()):
+            lkp = state.select(
+                F.col("id").alias("lid"), F.col("pp").alias("pp2"),
+                F.col("mp").alias("mp2"), F.col("dp").alias("dp2"),
+                F.col("rooted").alias("rt2"),
+            )
+            state, got = _materialize(
+                state.join(lkp, state.pp == lkp.lid, "left").select(
                     "id",
                     F.coalesce(F.col("pp2"), F.col("pp")).alias("pp"),
                     F.least(F.col("mp"), F.coalesce(F.col("mp2"), F.col("mp"))).alias("mp"),
                     (F.col("dp") + F.coalesce(F.col("dp2"), F.lit(0))).alias("dp"),
-                    F.coalesce(F.col("rt2"), F.col("rooted")).alias("rooted"),
-                )
-                # a pointer-doubling step references `cur` TWICE (probe side
-                # + lookup side), so an unbroken lazy chain of k steps is a
-                # plan tree with 2^k copies of the base state — measured 3×
-                # slower at k=4 from exchange setup alone.  A LAZY
-                # localCheckpoint per step collapses the tree to a linear
-                # chain: the step RDD materializes once when the round's
-                # job runs and both branches of the next step read its
-                # blocks.  (Stats carried by these intra-round checkpoints
-                # grow only 2× per step and are reset by the round-end
-                # persist→count→eager-checkpoint.)
-                cur = cur.localCheckpoint(eager=False)
-            steps_done += steps_per_round
-            cur = cur.persist()
-            # the materializing count doubles as the exit probe: zero
-            # unrooted rows certifies the final state outright
-            unrooted = cur.filter(~F.col("rooted")).count()
-            ck = cur.localCheckpoint(eager=True)
-            cur.unpersist()
-            state = ck
-            if unrooted == 0:
+                    (F.col("lid").isNull() | F.col("rt2")).alias("rooted"),
+                ),
+                probe=[F.count(F.when(~F.col("rooted"), 1)).alias("n")],
+            )
+            if got["n"] == 0:
                 break
-        init.unpersist()
-        return state, unrooted
+        return state, got["n"]
 
-    # init stays LAZY: it feeds round 1's join chain directly (one round
-    # of lazy depth is fine — only round-over-round compounding needs
-    # the materialization discipline); n comes from a cheap count
-    state = init_state(verts.join(pred, "id", "left")).persist()
-    n = state.count()
-    state, unrooted = run_doubling(state, n)
-    chains = state.filter(F.col("rooted")).select(
-        "id", F.col("pp").alias("component"), F.col("dp").alias("seq")
+    def ranked(state, heads):
+        return state.filter(F.col("rooted")).select(
+            "id", F.col("pp").alias("component"), F.col("dp").alias("seq")
+        ).unionByName(heads.select("id", F.col("id").alias("component"),
+                                   F.lit(0).cast("long").alias("seq")))
+
+    state, unrooted = rank(pred, n_pairs)
+    chains = ranked(
+        state, pairs.select(F.col("src").alias("id")).join(pred, "id", "left_anti")
     )
     if unrooted == 0:
         return chains
 
     # ---- ring pass: cut the anchor's pred pointer, rank again ----------
+    # every ring is then a chain headed at its min-id vertex, so pp = the
+    # anchor = the first pass's mp label: component ids agree
     ring = state.filter(~F.col("rooted")).select("id", F.col("mp").alias("__ring"))
-    pred_r = (
-        ring.join(pred, "id")
-        .filter(F.col("id") != F.col("__ring"))  # anchor becomes the head
-        .select("id", "__p")
+    state2, _ = rank(
+        ring.join(pred, "id").filter(F.col("id") != F.col("__ring")), unrooted
     )
-    state2 = init_state(ring.select("id").join(pred_r, "id", "left")).persist()
-    state2, _ = run_doubling(state2, unrooted)
-    # every ring is now a rooted chain headed at its min-id vertex, so
-    # pp = the anchor = the first pass's mp label: component ids agree
-    ring_ranked = state2.select(
-        "id", F.col("pp").alias("component"), F.col("dp").alias("seq")
+    return chains.unionByName(
+        ranked(state2, ring.filter(F.col("id") == F.col("__ring")))
     )
-    return chains.unionByName(ring_ranked)
 
 
 def _grouped_map(df: DataFrame, key: str, fn, schema) -> DataFrame:
@@ -615,12 +602,15 @@ def interstitial_nodes(edges: DataFrame, edge_attrs_differ: list[str]) -> DataFr
     inverted — reference graph.py:922-962 via ox.simplify_graph):
     exactly 2 distinct neighbors, in-degree == out-degree ∈ {1, 2},
     no incident self-loop, and all incident edges agree on
-    ``edge_attrs_differ``.
+    ``edge_attrs_differ``.  Returns (node, parallel): ``parallel`` marks
+    a node with two incident edges of the same direction and neighbor
+    (parallel multigraph edges, or repeated rows), the only way an
+    interstitial node gives an edge two successors or two predecessors.
 
     One incident-row union + ONE groupBy computes every per-node
-    statistic (degrees, neighbor sets, loop flag, attr-variant count) —
-    the round-1 shape ran four separate aggregations and three joins
-    (4 shuffles) for the same answer."""
+    statistic (degrees, directed neighbor set, loop flag, attr-variant
+    count) — the round-1 shape ran four separate aggregations and three
+    joins (4 shuffles) for the same answer."""
     attr_cols = [c for c in edge_attrs_differ if c in edges.columns]
     attr_struct = (
         F.struct(*[F.col(c) for c in attr_cols]) if attr_cols else F.lit(1)
@@ -644,21 +634,24 @@ def interstitial_nodes(edges: DataFrame, edge_attrs_differ: list[str]) -> DataFr
     stats = incident.groupBy("node").agg(
         F.sum(F.when((F.col("is_out") == 1) & ~F.col("loop"), 1).otherwise(0)).alias("out_deg"),
         F.sum(F.when((F.col("is_out") == 0) & ~F.col("loop"), 1).otherwise(0)).alias("in_deg"),
-        F.size(
-            F.array_distinct(F.collect_list(F.when(~F.col("loop"), F.col("nbr"))))
-        ).alias("n_nbrs"),
+        F.array_distinct(
+            F.collect_list(F.when(~F.col("loop"), F.struct("nbr", "is_out")))
+        ).alias("__dir"),
         F.max(F.when(F.col("loop"), 1).otherwise(0)).alias("has_loop"),
         F.countDistinct(F.when(~F.col("loop"), F.col("__attrs"))).alias(
             "n_attr_variants"
         ),
     )
     return stats.filter(
-        (F.col("n_nbrs") == 2)
+        (F.size(F.array_distinct(F.col("__dir.nbr"))) == 2)
         & (F.col("in_deg") == F.col("out_deg"))
         & F.col("in_deg").isin(1, 2)
         & (F.col("has_loop") == 0)
         & (F.col("n_attr_variants") <= 1)
-    ).select("node")
+    ).select(
+        "node",
+        (F.size("__dir") < F.col("in_deg") + F.col("out_deg")).alias("parallel"),
+    )
 
 
 def chordify(
@@ -673,71 +666,63 @@ def chordify(
     chain through interstitial nodes is one edge with aggregated attrs
     and concatenated geometry.
 
-    Plan shape: degree/compat aggs (2 shuffles) → edge-pair self-join →
-    chain components + Wyllie list ranks over pairs (log rounds; seq
-    comes free for chains AND rings — a second anchor-cut ranking pass
-    orders rings, so phase A has NO Python ordering; only the
-    parallel-multigraph generic-CC fallback still orders per-chain in
-    pandas) → groupBy(chain).agg(A1–A9 exprs) → union with untouched
-    edges.  No driver-side iteration over rows."""
+    Plan shape: one degree/compat agg → edge-pair self-join,
+    materialized once with its count and parallel-edge flag observed →
+    chain components + Wyllie list ranks over pairs (one materialized
+    step per doubling, ⌈log₂(pairs + 1)⌉ at most; seq comes free for
+    chains AND rings — a second anchor-cut ranking pass orders rings, so
+    phase A has NO Python ordering; only the parallel-multigraph
+    generic-CC fallback still orders per-chain in pandas) →
+    groupBy(chain).agg(A1–A9 exprs) → union with untouched edges.  No
+    driver-side iteration over rows."""
     e = _edge_ids(edges)
-    inter = interstitial_nodes(edges, list(edge_attrs_differ)).withColumn(
-        "__collapsible", F.lit(True)
-    )
+    inter = interstitial_nodes(edges, list(edge_attrs_differ))
 
-    # consecutive-edge pairs through collapsible nodes (no U-turns)
+    # consecutive-edge pairs through collapsible nodes (no U-turns); one
+    # write materializes them and observes their count and whether any
+    # node has parallel edges
     e1 = e.select(F.col("__eid").alias("eid1"), F.col("u").alias("u1"), F.col("v").alias("v1"))
     e2 = e.select(F.col("__eid").alias("eid2"), F.col("u").alias("u2"), F.col("v").alias("v2"))
-    pairs = (
+    pairs, got = _materialize(
         e1.join(inter, e1.v1 == inter.node)
         .join(e2, (F.col("v1") == F.col("u2")) & (F.col("v2") != F.col("u1")))
-        .select(F.col("eid1").alias("src"), F.col("eid2").alias("dst"))
-    ).persist()
-
-    # _functional_chain_components requires the pair graph to be
-    # FUNCTIONAL (in/out-degree ≤ 1).  True parallel multigraph edges
-    # (two a→w edges plus two w→b edges with identical attrs) break it:
-    # node w passes the interstitial filter yet gives each edge 2
-    # successors, and the functional doubling would then emit duplicate
-    # (id, component) rows — silent chain double-counting downstream.
-    # Detect any fan-out/fan-in with one cheap agg and fall back to the
-    # generic connected_components (one row per id guaranteed) for such
-    # inputs; road networks virtually never trip this, so the common
-    # path stays on the specialized doubling.
-    fan = (
-        pairs.select(F.col("src").alias("k"), F.lit(0).alias("side"))
-        .union(pairs.select(F.col("dst").alias("k"), F.lit(1).alias("side")))
-        .groupBy("k", "side")
-        .count()
-        .filter(F.col("count") > 1)
+        .select(F.col("eid1").alias("src"), F.col("eid2").alias("dst"), "parallel"),
+        probe=[F.count(F.lit(1)).alias("n"), F.max("parallel").alias("parallel")],
     )
-    if fan.isEmpty():
-        # (id=__eid, component, seq) — seq is the list rank for chains
-        # AND rings (second Wyllie pass from the ring anchor), so the
-        # per-chain Python ordering below only ever runs on the
-        # generic-CC fallback
-        comp = _chain_components_rank(pairs)
-        seq_total = True
-    else:
+    if got["n"] == 0:
+        # nothing to collapse: every edge is its own chord
+        if track_merged:
+            return edges.withColumn(
+                "merged_osmids",
+                F.array(F.col("osmid")) if "osmid" in edges.columns else F.array(),
+            )
+        return edges
+
+    # _chain_components_rank requires the pair graph to be FUNCTIONAL
+    # (in/out-degree ≤ 1).  True parallel multigraph edges (two a→w
+    # edges plus two w→b edges with identical attrs) break it: node w
+    # passes the interstitial filter yet gives each edge 2 successors,
+    # and the list ranking would then emit duplicate (id, component)
+    # rows — silent chain double-counting downstream.  Such inputs fall
+    # back to the generic connected_components (one row per id
+    # guaranteed); road networks virtually never trip this.
+    if got["parallel"]:
         comp = connected_components(pairs).withColumn(
             "seq", F.lit(None).cast("long")
         )
         seq_total = False
-    pairs.unpersist()
+    else:
+        # (id=__eid, component, seq) — seq is the list rank for chains
+        # AND rings (second Wyllie pass from the ring anchor), so the
+        # per-chain Python ordering below only ever runs on the
+        # generic-CC fallback
+        comp = _chain_components_rank(pairs, got["n"])
+        seq_total = True
     chained = e.join(comp, e.__eid == comp.id, "left").drop("id")
     untouched = chained.filter(F.col("component").isNull()).drop(
         "component", "__eid", "seq"
     )
-
     chain_edges = chained.filter(F.col("component").isNotNull())
-    if chain_edges.isEmpty():
-        out = untouched
-        if track_merged:
-            out = out.withColumn(
-                "merged_osmids",
-                F.array(F.col("osmid")) if "osmid" in edges.columns else F.array(),
-            )
-        return out
 
     # --- phase A: path order per chain --------------------------------------
     # chain components got seq free from the list ranking; only rings

@@ -416,6 +416,170 @@ def test_chordify_rings_fully_relational_no_python_ordering(spark, monkeypatch):
         assert tuple(pts[0]) == tuple(pts[-1])  # closed ring walk
 
 
+# chain lengths (edges) on both sides of every doubling-step boundary: a
+# vertex at distance d from its head is rooted after s steps iff
+# d ≤ 2^s − 1, and a chain of n edges has its last edge at distance n − 1
+CHAIN_LENGTHS = (1, 2, 3, 4, 5, 7, 8, 9, 31, 32, 33, 63, 64, 65)
+
+
+def _road_graph(spark, seed, chains, rings=(), two_way=False, breaks=False):
+    """Seeded road graph for the chordify exactness tests → (edges
+    DataFrame, the same rows in pandas).  One-way chains of each length
+    in ``chains`` and one-way rings of each size in ``rings``; with
+    ``two_way`` also a two-way copy of every chain and one two-way ring;
+    with ``breaks`` two chains and a ring cut by a highway change.
+    Nodes sit at random points and every edge has a random interior
+    vertex, so geometry bytes do not sort in path order."""
+    rng = np.random.default_rng(seed)
+    xy, rows = [], []
+
+    def nodes(n):
+        xy.extend(rng.uniform(-500, 500, (n, 2)))
+        return list(range(len(xy) - n, len(xy)))
+
+    def path(ns, highways, both=False):
+        for a, b, hw in zip(ns, ns[1:], highways):
+            line = np.array([xy[a], rng.uniform(-500, 500, 2), xy[b]])
+            for u, v, coords in ((a, b, line), (b, a, line[::-1]))[: 1 + both]:
+                rows.append((u, v, 0, 1000 + len(rows), rng.integers(1, 40) / 4,
+                             hw, rng.choice(["yes", "no"]),
+                             G.wkb_linestring(coords)))
+
+    for n in chains:
+        path(nodes(n + 1), ["residential"] * n)
+        if two_way:
+            path(nodes(n + 1), ["residential"] * n, both=True)
+    for n in rings:
+        ring = nodes(n)
+        path(ring + ring[:1], ["residential"] * n)
+    if two_way:
+        ring = nodes(6)
+        path(ring + ring[:1], ["service"] * 6, both=True)
+    if breaks:
+        for n, cut in ((9, 4), (33, 16)):
+            path(nodes(n + 1), ["residential"] * cut + ["primary"] * (n - cut))
+        ring = nodes(8)  # two break nodes: two chains, no ring
+        path(ring + ring[:1], ["residential"] * 6 + ["primary"] * 2)
+    cols = ["u", "v", "key", "osmid", "length", "highway", "oneway", "geometry"]
+    pdf = pd.DataFrame(rows, columns=cols)
+    return spark.createDataFrame(pdf), pdf
+
+
+def _python_chordify(pdf, eids):
+    """Plain-Python chordify of a graph without parallel edges or
+    self-loops: interstitial nodes by the OSMnx rule, then a walk along
+    each edge's unique successor from every edge without a predecessor,
+    and round each ring from its min edge id.  Returns sorted row
+    tuples in chordify's column order."""
+    recs = pdf.to_dict("records")
+    for r, eid in zip(recs, eids):
+        r["eid"] = eid
+    outs, ins, nbrs, hws = {}, {}, {}, {}
+    for r in recs:
+        outs.setdefault(r["u"], []).append(r)
+        ins.setdefault(r["v"], []).append(r)
+        for n, m in ((r["u"], r["v"]), (r["v"], r["u"])):
+            nbrs.setdefault(n, set()).add(m)
+            hws.setdefault(n, set()).add(r["highway"])
+    inter = {
+        n for n in nbrs
+        if len(nbrs[n]) == 2 and len(hws[n]) == 1
+        and len(ins.get(n, [])) == len(outs.get(n, [])) in (1, 2)
+    }
+    succ = {}
+    for r in recs:
+        if r["v"] in inter:
+            (succ[r["eid"]],) = [f for f in outs[r["v"]] if f["v"] != r["u"]]
+    has_pred = {f["eid"] for f in succ.values()}
+    walks = []
+    for r in recs:
+        if r["eid"] not in has_pred:
+            walks.append([r])
+            while walks[-1][-1]["eid"] in succ:
+                walks[-1].append(succ[walks[-1][-1]["eid"]])
+    seen = {r["eid"] for w in walks for r in w}
+    for r in sorted(recs, key=lambda r: r["eid"]):
+        if r["eid"] not in seen:
+            walks.append([r])
+            while succ[walks[-1][-1]["eid"]]["eid"] != r["eid"]:
+                walks[-1].append(succ[walks[-1][-1]["eid"]])
+            seen.update(f["eid"] for f in walks[-1])
+    out = []
+    for w in walks:
+        if len(w) == 1:
+            r = w[0]
+            out.append((r["u"], r["v"], r["key"], r["osmid"], r["length"],
+                        r["highway"], r["oneway"], r["geometry"], (r["osmid"],)))
+            continue
+        lines = [G.geometry_lines(f["geometry"])[0] for f in w]
+        osmids = tuple(sorted(f["osmid"] for f in w))
+        out.append((
+            w[0]["u"], w[-1]["v"], 0, osmids[0],
+            round(sum(f["length"] for f in w), 3), w[0]["highway"],
+            "no" if any(f["oneway"] == "no" for f in w) else "yes",
+            G.wkb_linestring(np.vstack([lines[0]] + [c[1:] for c in lines[1:]])),
+            osmids,
+        ))
+    return sorted(out)
+
+
+def _chordify_rows(edges):
+    out = GR.chordify(edges, edge_attrs_differ=["highway"])
+    assert out.columns == ["u", "v", "key", "osmid", "length", "highway",
+                           "oneway", "geometry", "merged_osmids"]
+    return sorted(
+        (r.u, r.v, r.key, r.osmid, r.length, r.highway, r.oneway,
+         bytes(r.geometry), tuple(r.merged_osmids))
+        for r in out.collect()
+    )
+
+
+def _edge_eids(edges):
+    return [r["__eid"] for r in GR._edge_ids(edges).select("__eid").collect()]
+
+
+# the three graphs exit the list ranking three ways: the mixed graph runs
+# both passes to the step budget (its rings never root), the chain-only
+# graph exits on the all-rooted probe, and the last one has a step budget
+# with no slack (33 + 3 pairs: 6 steps, and its chain needs all 6)
+_CHORD_GRAPHS = {
+    "mixed": dict(seed=11, chains=CHAIN_LENGTHS,
+                  rings=(3, 4, 5, 8, 9, 16, 17, 33), two_way=True, breaks=True),
+    "chains": dict(seed=12, chains=CHAIN_LENGTHS, two_way=True),
+    "tight_budget": dict(seed=13, chains=(33,), rings=(3,)),
+}
+
+
+@pytest.mark.parametrize("graph", sorted(_CHORD_GRAPHS))
+def test_chordify_matches_python_chain_walk(spark, graph):
+    """chordify equals a plain-Python chain walk row for row — endpoints,
+    aggregated attrs, merged_osmids and geometry bytes — on seeded graphs
+    with chains of every length around each doubling-step boundary,
+    one-way and two-way rings (the second Wyllie pass) and attribute
+    breaks.  A doubling that stops one step early leaves the far end of
+    the longest chain unranked; an off-by-one ``dp`` reorders or ties
+    path positions, which moves geometry bytes."""
+    edges, pdf = _road_graph(spark, **_CHORD_GRAPHS[graph])
+    got = _chordify_rows(edges)
+    assert got == _python_chordify(pdf, _edge_eids(edges))
+    assert len(got) < len(pdf)
+
+
+def test_chordify_shuffled_joins_same_output(spark):
+    """With broadcast joins disabled every doubling step plans the
+    shuffled join a lake-scale state gets; the output must not change."""
+    edges, pdf = _road_graph(spark, **_CHORD_GRAPHS["mixed"])
+    want = _python_chordify(pdf, _edge_eids(edges))
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        got = _chordify_rows(edges)
+    finally:
+        spark.conf.set(key, old)
+    assert got == want
+
+
 def test_summarize_graph_validation_connectivity_and_examples(spark):
     """The non-oracle pieces of the A13 bundle: weak connectivity
     (iterative CC), the protected self-loop split on array-valued

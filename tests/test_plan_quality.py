@@ -462,3 +462,90 @@ def test_knn_two_rankings_one_pid_exchange_each(spark, monkeypatch):
     # measured 11 at local[8] (the parent's doubling loop ran 3 rounds
     # and 30 jobs on this fixture)
     assert len(jobs) <= 11, len(jobs)
+
+
+def _per_materialize(spark, monkeypatch, run):
+    """Run ``run()`` with each ``graph._materialize`` call in its own job
+    group → [(jobs that ran a stage, shuffle bytes written)] per call.
+    A CC round or a list-ranking step is lazy up to its
+    ``_materialize``, so each call's group holds the whole round/step."""
+    from osm_chordify_spark.operators import graph as GR
+
+    sc = spark.sparkContext
+    real, groups = GR._materialize, []
+
+    def spy(df, **kw):
+        groups.append(f"materialize-{id(groups)}-{len(groups)}")
+        sc.setJobGroup(groups[-1], "one materialize")
+        try:
+            return real(df, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    monkeypatch.setattr(GR, "_materialize", spy)
+    run()
+    monkeypatch.setattr(GR, "_materialize", real)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
+    out = []
+    for g in groups:
+        jobs = written = 0
+        for j in tracker.getJobIdsForGroup(g):
+            # in a long session the status store has already dropped
+            # some of a job's stage ids (skipped ones): ask the tracker
+            kept = [s for s in tracker.getJobInfo(j).stageIds
+                    if tracker.getStageInfo(s) is not None]
+            ran = [st for st in map(store.lastStageAttempt, kept)
+                   if str(st.status()) != "SKIPPED"]
+            jobs += bool(ran)
+            written += sum(st.shuffleWriteBytes() for st in ran)
+        out.append((jobs, written))
+    return out
+
+
+def test_chordify_doubling_steps_broadcast_no_shuffle(spark, monkeypatch):
+    """A 64-edge chain: the pair materialization, then the six doubling
+    steps that root a 63-pair chain (2^6 − 1 = 63).  Each step ends in a
+    measured-size checkpoint, so the next step's lookup side is
+    broadcast: no step writes shuffle bytes, and each runs three jobs —
+    the cache fill, the broadcast of the lookup side and the checkpoint
+    read that carries the all-rooted probe."""
+    import pandas as pd
+
+    from osm_chordify_spark import geom as G
+    from osm_chordify_spark.operators.graph import chordify
+
+    edges = spark.createDataFrame(pd.DataFrame({
+        "u": range(64), "v": range(1, 65), "key": 0, "osmid": range(64),
+        "length": 1.0, "highway": "residential",
+        "geometry": [G.wkb_linestring([[i, 0.0], [i + 1, 0.0]]) for i in range(64)],
+    }))
+    rows = []
+    calls = _per_materialize(
+        spark, monkeypatch,
+        lambda: rows.extend(chordify(edges, edge_attrs_differ=["highway"]).collect()),
+    )
+    assert [(r.u, r.v, r.length) for r in rows] == [(0, 64, 64.0)]
+    steps = calls[1:]
+    assert len(steps) == 6, calls
+    assert all(written == 0 for _, written in steps), calls
+    assert all(jobs <= 3 for jobs, _ in steps), calls  # measured 3 at local[8]
+
+
+def test_connected_components_jobs_per_round(spark, monkeypatch):
+    """CC on a 200-pair path: each round (one neighbor-min step and three
+    lazy doublings) ends in one ``_materialize`` whose observed probe
+    counts the changed labels — no separate count job per round."""
+    from osm_chordify_spark.operators.graph import connected_components
+
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(200)],
+                                  "src long, dst long")
+    rows = []
+    rounds = _per_materialize(
+        spark, monkeypatch,
+        lambda: rows.extend(connected_components(pairs).collect()),
+    )
+    assert len(rows) == 201 and {r.component for r in rows} == {0}
+    assert len(rounds) == 4, rounds
+    # measured at local[8]: 13 jobs in round 1, 7 in each later round
+    assert rounds[0][0] <= 13 and all(jobs <= 7 for jobs, _ in rounds[1:]), rounds
