@@ -37,7 +37,10 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_chordify_spark.functions import materialize as MZ
+
 END = "</w>"
+REROOT_EVERY = 4  # merge rounds between eager re-roots of the state
 _TOKEN_RE = r"[^a-z0-9']+"
 
 
@@ -79,22 +82,17 @@ def _merge_fold(syms, left: str, right: str):
     )
 
 
-def train_bpe(
-    word_freq: DataFrame,
-    num_merges: int,
-    *,
-    checkpoint_every: int = 4,
-) -> list[tuple[str, str]]:
+def train_bpe(word_freq: DataFrame, num_merges: int) -> list[tuple[str, str]]:
     """Learn ``num_merges`` BPE merges from a (word, freq) table.
 
     Returns the ordered merge list [(left, right), ...].  Iteration
     state is one DataFrame of (symbols array<string>, freq) rows —
     O(vocabulary); per round: one freq-weighted adjacent-pair count
     (two narrow shuffles over pair keys), one deterministic top-1, one
-    codegen-side fold applying the merge.  Plans are re-rooted with an
-    eager persist→count→localCheckpoint every ``checkpoint_every``
-    rounds so lineage and carried stats stay bounded (see
-    tests/test_bpe.py for the pure-Python parity pin).
+    codegen-side fold applying the merge.  Plans are re-rooted with one
+    ``functions.materialize.materialize`` every ``REROOT_EVERY`` rounds
+    so lineage and carried stats stay bounded (see tests/test_bpe.py
+    for the pure-Python parity pin).
     """
     # (?!^)(?=.) matches between characters only (Spark split keeps
     # trailing empties, so a bare (?!^) would append a '' symbol)
@@ -125,11 +123,8 @@ def train_bpe(
         left, right = pairs[0]["l"], pairs[0]["r"]
         merges.append((left, right))
         state = state.select(_merge_fold(F.col("syms"), left, right).alias("syms"), "freq")
-        if (r + 1) % checkpoint_every == 0:
-            nxt = state.persist()
-            nxt.count()
-            state = nxt.localCheckpoint(eager=True)
-            nxt.unpersist()
+        if (r + 1) % REROOT_EVERY == 0:
+            state, _ = MZ.materialize(state)
     return merges
 
 

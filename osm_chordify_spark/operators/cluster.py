@@ -37,6 +37,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from osm_chordify_spark.functions import materialize as MZ
+
 _HASH_HEX = 13  # 52-bit md5 prefix, the engine's shared hash family
 
 
@@ -122,15 +124,16 @@ def kmeans_assign(
     # the quantized working set is re-consumed once per Lloyd iteration:
     # materialize it once (eager, intra-query — recomputed per call) so
     # each iteration plans a one-source scan instead of re-deriving the
-    # parquet read + quantize chain
-    pts = df.select(
-        F.col(id_col).alias("__id"), quantize_expr(vec_col, scale).alias("__qv")
-    ).localCheckpoint(eager=True)
-    # the centroid update counts per (cluster, j): a short, empty or null
-    # vector would drop out of those counts and shift centroids, so every
-    # vector must have the same length d
+    # parquet read + quantize chain.  The centroid update counts per
+    # (cluster, j): a short, empty or null vector would drop out of
+    # those counts and shift centroids, so every vector must have the
+    # same length d — its min/max ride the checkpoint's job
     size = F.coalesce(F.size("__qv"), F.lit(-1))
-    lo, hi = pts.agg(F.min(size), F.max(size)).first()
+    pts, got = MZ.checkpoint(
+        df.select(F.col(id_col).alias("__id"), quantize_expr(vec_col, scale).alias("__qv")),
+        F.min(size).alias("lo"), F.max(size).alias("hi"),
+    )
+    lo, hi = got["lo"], got["hi"]
     if lo is not None and (lo != hi or lo < 0):
         raise ValueError(
             f"{vec_col} vectors must all have one length, got lengths {lo}..{hi}"

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from osm_chordify_spark.functions import materialize as MZ
+
 
 def edge_quality_summary(
     edges: DataFrame,
@@ -241,36 +243,34 @@ def summarize_graph_validation(
         F.sum(F.when(loop, 1).otherwise(0)).alias("self_loops"),
         F.sum(F.when(loop & prot, 1).otherwise(0)).alias("prot_loops"),
         F.sum(F.when(loop & ~prot, 1).otherwise(0)).alias("unprot_loops"),
+        F.count(F.when(~loop, 1)).alias("nonloop"),
     ).first()
     n_nodes = nodes.count()
-    used = (
+    used, got = MZ.checkpoint(
         edges.select(F.col(u).alias("node_id"))
         .unionByName(edges.select(F.col(v).alias("node_id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     isolates = nodes.join(used, "node_id", "left_anti").count()
-    nonloop = edges.filter(~loop)
-    if nonloop.isEmpty():
-        ncomp = used.count()  # every used node is a self-loop island
+    if ea["nonloop"] == 0:
+        ncomp = got["rows"]  # every used node is a self-loop island
     else:
-        comp = GR.connected_components(
-            nonloop.select(F.col(u).alias("src"), F.col(v).alias("dst"))
-        ).localCheckpoint(eager=True)
+        comp, _ = MZ.checkpoint(GR.connected_components(
+            edges.filter(~loop).select(F.col(u).alias("src"), F.col(v).alias("dst"))
+        ))
         in_nonloop = comp.select(F.col("id").alias("node_id")).distinct()
         loop_only = used.join(in_nonloop, "node_id", "left_anti").count()
         ncomp = comp.select("component").distinct().count() + loop_only
     weakly_connected = bool(n_nodes > 0 and isolates == 0 and ncomp == 1)
 
-    dup = duplicate_coords_at_precision(nodes, precision=precision)
-    dup = dup.localCheckpoint(eager=True)
-    dup_n = dup.count()
+    dup, got = MZ.checkpoint(duplicate_coords_at_precision(nodes, precision=precision))
+    dup_n = got["rows"]
     dup_ex = [
         (r["rx"], r["ry"], list(r["node_ids"]))
         for r in dup.orderBy("rx", "ry").limit(5).collect()
     ]
-    close = close_node_pairs(nodes, close_threshold).localCheckpoint(eager=True)
-    close_n = close.count()
+    close, got = MZ.checkpoint(close_node_pairs(nodes, close_threshold))
+    close_n = got["rows"]
     close_ex = [
         (r["node_id"], r["nid2"], r["dist"])
         for r in close.orderBy("node_id", "nid2").limit(5).collect()

@@ -23,20 +23,23 @@ iterative DataFrame program (the north_rule's "Spark graph contraction
 * largest_component retention (reference graph.py:987-1002).
 
 Scale: the iterative loops end every round (CC) or step (list ranking)
-in ``_materialize``, which truncates lineage so plans don't grow and
-hands the next round the state's measured size, so Spark's own
-broadcast threshold picks replicate-the-state (it fits) or a shuffled
-join on the key (lake scale).
+in ``functions.materialize``, which truncates lineage, hands the next
+round the state's measured size (Spark's own broadcast threshold then
+replicates the state or shuffles on the key) and observes the exit test
+on the same job.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Observation, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm_chordify_spark import geom as G
+from osm_chordify_spark.functions import materialize as MZ
 from osm_chordify_spark.functions.aggregates import chord_agg_exprs
 from osm_chordify_spark.functions.tags import is_truthy_osm_tag
 
@@ -49,47 +52,10 @@ PROTECTED_HIGHWAY_TYPES = (
 # connected components
 
 
-def _materialize(df: DataFrame, *, probe: list) -> tuple[DataFrame, dict]:
-    """Compute ``df`` once → ``(frame, values)``: ``frame`` holds the
-    same rows behind a truncated plan that carries their MEASURED size,
-    ``values`` maps the name of each aggregate Column in ``probe`` to
-    its value over the rows.
-
-    Order: persist → eager localCheckpoint of ``df`` observed with
-    ``probe`` → unpersist.  The checkpoint is the only action: under
-    AQE a fresh cache's first action fills the cache in a job of its
-    own, and the checkpoint reads the cache in the next one, with
-    ``probe`` riding that read.  Why:
-
-    * Spark's size-only estimate of a join is the PRODUCT of its
-      children's sizes, so a 93 KB state left-joined to itself plans as
-      5.2 GB, and a join over it shuffles both sides where the state
-      fits a broadcast.  A localCheckpoint of the join, eager or lazy,
-      carries that estimate.  A persisted frame's plan reports its real
-      size once the cache is filled, and the eager checkpoint reads the
-      stats only after its own job has filled it.  (Compounded over
-      rounds the product also grows double-exponentially: by round ~6
-      Catalyst's stats visitor spent seconds multiplying multi-megabit
-      integers.)
-    * A count() probe adds a map stage, an exchange and a final stage:
-      5 jobs per list-ranking step on the osm_pipeline benchmark edges
-      against 3 here (cache fill, the broadcast lookup side, checkpoint).
-      A no-op write observed with ``probe`` followed by a lazy
-      checkpoint also takes 3, but it computes the checkpoint's rows
-      when the next step first reads them, after ``unpersist``: from
-      the lineage a second time."""
-    df = df.persist()
-    obs = Observation()
-    ck = df.observe(obs, *probe).localCheckpoint(eager=True)
-    df.unpersist()
-    return ck, obs.get
+DOUBLINGS_PER_ROUND = 3  # lazy pointer doublings per CC round
 
 
-def _min_label_prop(
-    arcs: DataFrame,
-    max_iter: int = 30,
-    doublings_per_round: int = 3,
-) -> DataFrame:
+def _min_label_prop(arcs: DataFrame, max_iter: int = 30) -> DataFrame:
     """Min-label propagation along directed arcs (a → b) + pointer
     doubling → (id, label) where label = min vertex with a directed path
     to id (including id itself); vertices are a∪b.
@@ -99,31 +65,25 @@ def _min_label_prop(
 
     Restructured for driver-side job economy (the 100× scale bottleneck
     here is orchestration, not data): each round composes one
-    neighbor-min step and ``doublings_per_round`` pointer-doubling
-    self-joins LAZILY and ends in ONE ``_materialize`` whose observed
+    neighbor-min step and ``DOUBLINGS_PER_ROUND`` pointer-doubling
+    self-joins LAZILY and ends in ONE ``materialize`` whose observed
     probe counts the changed labels, so the probe costs no job of its
     own.  Inside a round the lazy checkpoints carry the join's product
-    estimate (see ``_materialize``; an eager checkpoint would carry it
+    estimate (see ``materialize``; an eager checkpoint would carry it
     too), so unless the state is a few KB the later doubling joins
     shuffle both sides (a 200-vertex path still broadcasts); the round-end
     state and the cached arcs carry measured sizes, so each round's
     first joins broadcast their small side."""
-    arcs = (
-        arcs.repartition(F.col("b"))  # co-partition once; reused every round
-        .persist()
-    )
-    # materialize BEFORE planning anything on top: a populated
-    # InMemoryRelation reports real stats, so the label/nmin sides of
-    # every round's joins broadcast instead of shuffling (an
-    # unmaterialized cache plans with defaultSizeInBytes = never
-    # broadcast, which costs ~8 extra exchanges in round 1 alone)
-    arcs.count()
-    labels = (
+    # co-partitioned once, reused every round, and measured BEFORE any
+    # round is planned on top, so every round's label/nmin sides
+    # broadcast (an unfilled cache plans as never-broadcast: ~8 extra
+    # exchanges in round 1 alone)
+    arcs, _ = MZ.materialize(arcs.repartition(F.col("b")))
+    labels, _ = MZ.checkpoint(
         arcs.select(F.col("a").alias("id"))
         .union(arcs.select(F.col("b").alias("id")))
         .distinct()
         .withColumn("label", F.col("id"))
-        .localCheckpoint(eager=True)
     )
     for _ in range(max_iter):
         nmin = (
@@ -138,7 +98,7 @@ def _min_label_prop(
                 "label"
             ),
         ).localCheckpoint(eager=False)
-        for _ in range(doublings_per_round):
+        for _ in range(DOUBLINGS_PER_ROUND):
             # label ← min(label, label[label]); the lazy per-step
             # checkpoint collapses the otherwise-2^k self-join plan tree
             # to a linear chain (see _chain_components_rank for the why)
@@ -150,13 +110,12 @@ def _min_label_prop(
                     "label"
                 ),
             ).localCheckpoint(eager=False)
-        labels, got = _materialize(
-            cur, probe=[F.count(F.when(F.col("label") != F.col("old"), 1)).alias("n")]
+        labels, got = MZ.materialize(
+            cur, F.count(F.when(F.col("label") != F.col("old"), 1)).alias("n")
         )
         labels = labels.drop("old")
         if got["n"] == 0:
             break
-    arcs.unpersist()
     return labels
 
 
@@ -168,7 +127,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iter: int = 30,
-    doublings_per_round: int = 3,
     local_max_edges: int = 0,
 ) -> DataFrame:
     """Undirected connected components → (id, component) where component
@@ -242,9 +200,7 @@ def connected_components(
         .union(pairs.select(F.col(dst).alias("a"), F.col(src).alias("b")))
         .filter(F.col("a") != F.col("b"))
     )
-    labels = _min_label_prop(
-        sym, max_iter=max_iter, doublings_per_round=doublings_per_round
-    )
+    labels = _min_label_prop(sym, max_iter=max_iter)
     return labels.select("id", F.col("label").alias("component"))
 
 
@@ -311,7 +267,6 @@ def strongly_connected_components(
     dst: str = "dst",
     max_phases: int = 25,
     max_local_arcs: int = 1_000_000,
-    **prop_kw,
 ) -> DataFrame:
     """Strongly connected components → (id, component) where component
     is the min vertex id of the SCC (reference graph.py:987-1002 strong
@@ -331,54 +286,39 @@ def strongly_connected_components(
     color root retires per phase, so phases strictly shrink the graph —
     road networks (one giant SCC + oneway tails) settle in 1–3 phases,
     each O(log n) propagation rounds + O(peel depth) trim rounds."""
-    arcs0 = pairs.select(F.col(src).alias("a"), F.col(dst).alias("b")).filter(
-        F.col("a") != F.col("b")
-    )
-    verts = (
+    verts, _ = MZ.checkpoint(
         pairs.select(F.col(src).alias("id"))
         .union(pairs.select(F.col(dst).alias("id")))
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    arcs = arcs0.localCheckpoint(eager=True)
+    arcs, got = MZ.checkpoint(pairs.select(F.col(src).alias("a"), F.col(dst).alias("b"))
+                              .filter(F.col("a") != F.col("b")))
+    n_arcs = got["rows"]
 
     # Small-graph dispatch: the iterative coloring loop costs tens of
     # driver-scheduled jobs regardless of data volume — on a graph that
     # fits the driver comfortably, Tarjan runs in milliseconds.  Same
     # philosophy as broadcast-vs-shuffle join selection; the distributed
     # path is exercised by forcing max_local_arcs=0 in tests.
-    if max_local_arcs > 0:
-        local = arcs.limit(max_local_arcs + 1).toPandas()
-        if len(local) <= max_local_arcs:
-            spark = pairs.sparkSession
-            vert_ids = sorted(int(r[0]) for r in verts.collect())
-            out = _scc_local(local, vert_ids)
-            if len(out) == 0:
-                return spark.createDataFrame([], schema="id long, component long")
-            return spark.createDataFrame(out)
+    if 0 < max_local_arcs and n_arcs <= max_local_arcs:
+        spark = pairs.sparkSession
+        vert_ids = sorted(int(r[0]) for r in verts.collect())
+        out = _scc_local(arcs.toPandas(), vert_ids)
+        if len(out) == 0:
+            return spark.createDataFrame([], schema="id long, component long")
+        return spark.createDataFrame(out)
 
+    # Every loop exit reads the arc count observed on the checkpoint that
+    # ends a trim batch or a retire: the vertices left always include
+    # every arc endpoint, so once no arc is left they are all singletons.
     parts: list[DataFrame] = []
-
-    def retire(found_ids, arcs, verts):
-        # LAZY checkpoints: the n_arcs count / verts.isEmpty() that always
-        # follow a retire materialize these anyway — eager here just
-        # spent two extra driver-side jobs per phase
-        arcs = (
-            arcs.join(found_ids.withColumnRenamed("id", "a"), "a", "left_anti")
-            .join(found_ids.withColumnRenamed("id", "b"), "b", "left_anti")
-            .localCheckpoint(eager=False)
-        )
-        verts = verts.join(found_ids, "id", "left_anti").localCheckpoint(eager=False)
-        return arcs, verts
-
-    n_arcs = arcs.count()
-    for _ in range(max_phases):
+    phases = 0
+    while True:
         # ---- trim: peel sources/sinks — they are singleton SCCs.  Each
-        # action materializes ``trim_batch`` lazily-chained peel steps
-        # (lazy localCheckpoints share RDD stages, as in _min_label_prop)
-        trim_batch = 6
-        while True:
-            for _ in range(trim_batch):
+        # checkpoint materializes 6 lazily-chained peel steps (lazy
+        # localCheckpoints share RDD stages, as in _min_label_prop)
+        while n_arcs:
+            for _ in range(6):
                 core = (
                     arcs.select(F.col("b").alias("id"))
                     .distinct()
@@ -390,10 +330,10 @@ def strongly_connected_components(
                     .join(core.withColumnRenamed("id", "b"), "b", "left_semi")
                     .localCheckpoint(eager=False)
                 )
-            n = arcs.count()
-            if n == n_arcs:
+            arcs, got = MZ.checkpoint(arcs)
+            if got["rows"] == n_arcs:
                 break
-            n_arcs = n
+            n_arcs = got["rows"]
         # everything trimmed off the arc set is its own SCC
         arc_verts = (
             arcs.select(F.col("a").alias("id"))
@@ -407,10 +347,15 @@ def strongly_connected_components(
         # valid and cheap after those are reassigned; the caller's final
         # union action materializes it once
         parts.append(singles.localCheckpoint(eager=False))
-        verts = verts.join(arc_verts, "id", "left_semi").localCheckpoint(eager=False)
-        if verts.isEmpty():
+        if n_arcs == 0:
             break
-        color = _min_label_prop(arcs, **prop_kw)  # (id, label)
+        if phases == max_phases:
+            raise RuntimeError(
+                f"strongly_connected_components did not settle in {max_phases} phases"
+            )
+        phases += 1
+        verts = verts.join(arc_verts, "id", "left_semi").localCheckpoint(eager=False)
+        color = _min_label_prop(arcs)  # (id, label)
         ca = color.select(F.col("id").alias("a"), F.col("label").alias("__ca"))
         cb = color.select(F.col("id").alias("b"), F.col("label").alias("__cb"))
         restricted_rev = (
@@ -419,29 +364,22 @@ def strongly_connected_components(
             .filter(F.col("__ca") == F.col("__cb"))
             .select(F.col("b").alias("a"), F.col("a").alias("b"))
         )
-        rev = _min_label_prop(restricted_rev, **prop_kw).withColumnRenamed(
-            "label", "__rev"
-        )
-        scc = (
+        rev = _min_label_prop(restricted_rev).withColumnRenamed("label", "__rev")
+        scc, _ = MZ.checkpoint(
             color.join(rev, "id", "left")
             .withColumn("__rev", F.coalesce(F.col("__rev"), F.col("id")))
             .filter(F.col("__rev") == F.col("label"))
             .select("id", F.col("label").alias("component"))
-            .localCheckpoint(eager=True)
         )
         parts.append(scc)
-        arcs, verts = retire(scc.select("id"), arcs, verts)
-        n_arcs = arcs.count()
-        if verts.isEmpty():
-            break
-    else:
-        raise RuntimeError(
-            f"strongly_connected_components did not settle in {max_phases} phases"
+        found = scc.select("id")  # retire them
+        arcs, got = MZ.checkpoint(
+            arcs.join(found.withColumnRenamed("id", "a"), "a", "left_anti")
+            .join(found.withColumnRenamed("id", "b"), "b", "left_anti")
         )
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
+        n_arcs = got["rows"]
+        verts = verts.join(found, "id", "left_anti").localCheckpoint(eager=False)
+    return reduce(DataFrame.unionByName, parts)
 
 
 def _chain_components_rank(pairs: DataFrame, n_pairs: int) -> DataFrame:
@@ -485,7 +423,7 @@ def _chain_components_rank(pairs: DataFrame, n_pairs: int) -> DataFrame:
     ≤ m vertices is wrapped once 2^s + 1 ≥ r (rings never root, so
     mixed inputs run to the budget).  Extra steps change nothing.
 
-    Every step ends in ``_materialize`` with the unrooted count as its
+    Every step ends in ``materialize`` with the unrooted count as its
     observed probe: a bare localCheckpoint of the step, eager or lazy,
     would carry the join's product estimate (a 93 KB state left-joined
     to itself plans as 5.2 GB; see there), so the next step would shuffle
@@ -511,7 +449,7 @@ def _chain_components_rank(pairs: DataFrame, n_pairs: int) -> DataFrame:
                 F.col("mp").alias("mp2"), F.col("dp").alias("dp2"),
                 F.col("rooted").alias("rt2"),
             )
-            state, got = _materialize(
+            state, got = MZ.materialize(
                 state.join(lkp, state.pp == lkp.lid, "left").select(
                     "id",
                     F.coalesce(F.col("pp2"), F.col("pp")).alias("pp"),
@@ -519,7 +457,7 @@ def _chain_components_rank(pairs: DataFrame, n_pairs: int) -> DataFrame:
                     (F.col("dp") + F.coalesce(F.col("dp2"), F.lit(0))).alias("dp"),
                     (F.col("lid").isNull() | F.col("rt2")).alias("rooted"),
                 ),
-                probe=[F.count(F.when(~F.col("rooted"), 1)).alias("n")],
+                F.count(F.when(~F.col("rooted"), 1)).alias("n"),
             )
             if got["n"] == 0:
                 break
@@ -608,9 +546,14 @@ def interstitial_nodes(edges: DataFrame, edge_attrs_differ: list[str]) -> DataFr
     interstitial node gives an edge two successors or two predecessors.
 
     One incident-row union + ONE groupBy computes every per-node
-    statistic (degrees, directed neighbor set, loop flag, attr-variant
-    count) — the round-1 shape ran four separate aggregations and three
-    joins (4 shuffles) for the same answer."""
+    statistic (degrees, per-direction neighbor min/max, loop flag, attr
+    min/max) — the round-1 shape ran four separate aggregations and
+    three joins (4 shuffles) for the same answer.  A node that passes
+    has at most 2 arcs per direction, so each direction's min and max
+    ARE its neighbor set: the distinct-neighbor count and the parallel
+    flag need no collected array.  The attrs agree exactly when their
+    min equals their max, so no distinct aggregate (and no second
+    exchange) is needed either."""
     attr_cols = [c for c in edge_attrs_differ if c in edges.columns]
     attr_struct = (
         F.struct(*[F.col(c) for c in attr_cols]) if attr_cols else F.lit(1)
@@ -631,27 +574,33 @@ def interstitial_nodes(edges: DataFrame, edge_attrs_differ: list[str]) -> DataFr
             attr_struct.alias("__attrs"),
         )
     )
+    per_dir = []
+    for d, name in ((1, "out"), (0, "in")):
+        arc = (F.col("is_out") == d) & ~F.col("loop")
+        per_dir += [
+            F.sum(F.when(arc, 1).otherwise(0)).alias(f"{name}_deg"),
+            F.min(F.when(arc, F.col("nbr"))).alias(f"{name}_min"),
+            F.max(F.when(arc, F.col("nbr"))).alias(f"{name}_max"),
+        ]
+    attrs = F.when(~F.col("loop"), F.col("__attrs"))
     stats = incident.groupBy("node").agg(
-        F.sum(F.when((F.col("is_out") == 1) & ~F.col("loop"), 1).otherwise(0)).alias("out_deg"),
-        F.sum(F.when((F.col("is_out") == 0) & ~F.col("loop"), 1).otherwise(0)).alias("in_deg"),
-        F.array_distinct(
-            F.collect_list(F.when(~F.col("loop"), F.struct("nbr", "is_out")))
-        ).alias("__dir"),
+        *per_dir,
         F.max(F.when(F.col("loop"), 1).otherwise(0)).alias("has_loop"),
-        F.countDistinct(F.when(~F.col("loop"), F.col("__attrs"))).alias(
-            "n_attr_variants"
-        ),
+        F.min(attrs).alias("attrs_min"),
+        F.max(attrs).alias("attrs_max"),
     )
+    nbrs = F.array("out_min", "out_max", "in_min", "in_max")
+
+    def doubled(name):
+        return (F.col(f"{name}_deg") == 2) & (F.col(f"{name}_min") == F.col(f"{name}_max"))
+
     return stats.filter(
-        (F.size(F.array_distinct(F.col("__dir.nbr"))) == 2)
+        (F.size(F.array_distinct(nbrs)) == 2)
         & (F.col("in_deg") == F.col("out_deg"))
         & F.col("in_deg").isin(1, 2)
         & (F.col("has_loop") == 0)
-        & (F.col("n_attr_variants") <= 1)
-    ).select(
-        "node",
-        (F.size("__dir") < F.col("in_deg") + F.col("out_deg")).alias("parallel"),
-    )
+        & (F.col("attrs_min") == F.col("attrs_max"))
+    ).select("node", (doubled("out") | doubled("in")).alias("parallel"))
 
 
 def chordify(
@@ -683,13 +632,13 @@ def chordify(
     # node has parallel edges
     e1 = e.select(F.col("__eid").alias("eid1"), F.col("u").alias("u1"), F.col("v").alias("v1"))
     e2 = e.select(F.col("__eid").alias("eid2"), F.col("u").alias("u2"), F.col("v").alias("v2"))
-    pairs, got = _materialize(
+    pairs, got = MZ.materialize(
         e1.join(inter, e1.v1 == inter.node)
         .join(e2, (F.col("v1") == F.col("u2")) & (F.col("v2") != F.col("u1")))
         .select(F.col("eid1").alias("src"), F.col("eid2").alias("dst"), "parallel"),
-        probe=[F.count(F.lit(1)).alias("n"), F.max("parallel").alias("parallel")],
+        F.max("parallel").alias("parallel"),
     )
-    if got["n"] == 0:
+    if got["rows"] == 0:
         # nothing to collapse: every edge is its own chord
         if track_merged:
             return edges.withColumn(
@@ -716,7 +665,7 @@ def chordify(
         # AND rings (second Wyllie pass from the ring anchor), so the
         # per-chain Python ordering below only ever runs on the
         # generic-CC fallback
-        comp = _chain_components_rank(pairs, got["n"])
+        comp = _chain_components_rank(pairs, got["rows"])
         seq_total = True
     chained = e.join(comp, e.__eid == comp.id, "left").drop("id")
     untouched = chained.filter(F.col("component").isNull()).drop(

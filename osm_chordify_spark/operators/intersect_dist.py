@@ -73,6 +73,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 from osm_chordify_spark import cellindex as ci
 from osm_chordify_spark import geom as G
 from osm_chordify_spark import geom_batch as GB
+from osm_chordify_spark.functions import materialize as MZ
 from osm_chordify_spark.functions.skew import fan_out
 from osm_chordify_spark.operators.intersect import (
     Zones,
@@ -639,10 +640,11 @@ def nearest_zone_dist(
         cell_h = (y1 - y0) / n
         cell_min = min(cell_w, cell_h)
         zc_r = zcells.filter(F.shiftright("__cell", 58) == rr)
-        # lazy: materializes with round 1's first action, reused after
-        unresolved = pbase.withColumn(
+        # its row count is the first round's exit test (see below)
+        unresolved, got = MZ.checkpoint(pbase.withColumn(
             "__pcell", cell_expr(F.col("__px"), F.col("__py"), rr, world)
-        ).localCheckpoint(eager=False)
+        ))
+        n_unres = got["rows"]
 
         _MASK = (1 << 29) - 1
 
@@ -754,37 +756,35 @@ def nearest_zone_dist(
             # the partition-dependent internal __zid — overlapping /
             # equidistant zones must resolve identically run-to-run and
             # across paths.
-            # ranked is checkpointed ONCE per round: done / still / best
-            # are then lazy filters over its blocks
-            ranked = (
+            # ranked is checkpointed ONCE per round, with its resolved
+            # count observed: done / still / best are then lazy filters
+            # over its blocks
+            bound = max(r - 1, 0) * cell_min
+            resolved = F.col("__dist") <= bound
+            ranked, got = MZ.checkpoint(
                 allc.join(zindexed.select("__zid", "__zname"), "__zid")
                 .groupBy("__pid")
                 .agg(F.min(F.struct("__dist", "__zname", "__zid")).alias("__b"))
                 .select("__pid", F.col("__b.__zid").alias("__zid"),
-                        F.col("__b.__dist").alias("__dist"))
-                .localCheckpoint(eager=True)
+                        F.col("__b.__dist").alias("__dist")),
+                F.count(F.when(resolved, 1)).alias("done"),
             )
-            bound = max(r - 1, 0) * cell_min
-            done = ranked.filter(F.col("__dist") <= bound).select(
-                "__pid", "__zid", "__dist"
-            )
+            done = ranked.filter(resolved).select("__pid", "__zid", "__dist")
             finished.append(done)
-            still = ranked.filter(F.col("__dist") > bound)
+            if got["done"] == n_unres:  # all resolved: the common round-1 exit
+                break
+            still = ranked.filter(~resolved)
             if r >= max_ring:
                 # give up on the bound: best seen wins (documented cap)
                 finished.append(still.select("__pid", "__zid", "__dist"))
                 break
             # a point stays unresolved until RESOLVED — including points
-            # whose annuli so far found no candidate at all (not ranked).
-            # isEmpty probes the lazy anti-join first (a limit-1 job) so
-            # the common everyone-resolved-in-round-1 exit never pays a
-            # full materialization of an empty survivor set
-            nxt = unresolved.join(done.select("__pid"), "__pid", "left_anti")
-            if nxt.isEmpty():
-                break
-            nxt_unres = nxt.localCheckpoint(eager=True)
+            # whose annuli so far found no candidate at all (not ranked)
+            unresolved, got = MZ.checkpoint(
+                unresolved.join(done.select("__pid"), "__pid", "left_anti")
+            )
+            n_unres = got["rows"]
             best = still.select("__pid", "__zid", "__dist")
-            unresolved = nxt_unres
             rounds += 1
             if rounds >= escalate_after and rr > 0:
                 finished.append(_hierarchical_finish(unresolved, best))

@@ -26,13 +26,15 @@ Algorithm (exact kNN, not approximate), two rounds and a fallback:
    cross-joining against all segments; at res 0 the single world cell
    makes ring 1 itself exhaustive, so the recursion terminates exactly.
 
-Job economy: each round is one eager localCheckpoint of a plan with one
+Job economy: each round is one eager checkpoint of a plan with one
 hash exchange on the point id (round 2 repartitions its survivors by
 number, which AQE never coalesces into one task for the probe after
-it), then one emptiness probe of its unfinished points: no anti-join,
-no per-pair dedupe exchange.  A warm call on the ``osm_pipeline`` bench
-shape runs 13 jobs (35 for the doubling loop this replaced,
-``BENCH/knn_two_rounds.md``).
+it), and the count of its unfinished points is observed on that same
+job: no emptiness probe, no anti-join, no per-pair dedupe exchange.  A
+warm call on the ``osm_pipeline`` bench shape runs 11 jobs (13 with a
+separate emptiness probe per round, 35 for the doubling loop before
+the two rounds; ``BENCH/knn_two_rounds.md``,
+``BENCH/one_materialize_module.md``).
 """
 
 from __future__ import annotations
@@ -44,6 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from osm_chordify_spark.cellindex import WORLD
+from osm_chordify_spark.functions import materialize as MZ
 from osm_chordify_spark.functions.cells import cell_expr, cell_parent_expr
 
 _MASK = (1 << 29) - 1
@@ -131,8 +134,9 @@ def _ring_search(
 
     def ranked(cand, bound, carried=None):
         """Per point, the sorted top-k (dist, sid) structs (merged with
-        ``carried`` ones) and the finalize flag: at most one exchange,
-        the window's, which the aggregate reuses."""
+        ``carried`` ones) and the finalize flag, checkpointed with the
+        count of unfinished points: at most one exchange, the window's,
+        which the aggregate reuses."""
         new = collect(
             F.when(F.col("__sid").isNotNull(), F.struct("__dist", "__sid"))
         )
@@ -145,7 +149,8 @@ def _ring_search(
             F.first(bound).alias("__bound"),
         )
         done = F.coalesce(kth <= F.col("__bound"), F.lit(False))
-        return out.withColumn("__done", done).localCheckpoint(eager=True)
+        return MZ.checkpoint(out.withColumn("__done", done),
+                             F.count(F.when(~F.col("__done"), 1)).alias("left"))
 
     def finished(rk):
         return rk.filter("__done").select("__pid", F.posexplode(top)).select(
@@ -154,11 +159,11 @@ def _ring_search(
     probe = unresolved.withColumn(
         "__cell", F.explode(_annulus_cells(F.col("__pcell"), -1, 1, res))
     )
-    r1 = ranked(probe.join(segs, "__cell", "left").withColumn("__dist", dist),
-                F.lit(cell_min))
-    surv = r1.filter(~F.col("__done"))
-    if surv.isEmpty():
+    r1, got = ranked(probe.join(segs, "__cell", "left").withColumn("__dist", dist),
+                     F.lit(cell_min))
+    if got["left"] == 0:
         return finished(r1)
+    surv = r1.filter(~F.col("__done"))
     if res == 0:
         # ring 1 is the single world cell: best-so-far IS exact
         return finished(r1).unionByName(
@@ -212,14 +217,13 @@ def _ring_search(
     probe = surv.withColumn(
         "__cell", F.explode_outer(_annulus_cells(F.col("__pcell"), 1, F.col("__R"), res))
     )
-    r2 = ranked(
+    r2, got = ranked(
         probe.join(segs, "__cell", "left").withColumn("__dist", dist),
         F.col("__R") * F.lit(cell_min), carried=top,
     )
     results = finished(r1).unionByName(finished(r2))
-    left = r2.filter(~F.col("__done"))
-    if not left.isEmpty():
-        results = results.unionByName(coarsen(left))
+    if got["left"]:
+        results = results.unionByName(coarsen(r2.filter(~F.col("__done"))))
     return results
 
 

@@ -91,9 +91,7 @@ def host_link_edges(
     )
 
 
-def pagerank_fixed_point(
-    edges: DataFrame, iterations: int = 3, persist_edges: bool = True
-) -> DataFrame:
+def pagerank_fixed_point(edges: DataFrame, iterations: int = 3) -> DataFrame:
     """Weighted PageRank in bigint micro-ranks (1.0 == 1e12).
 
     Update rule per iteration (dangling mass leaks, the simple-leak
@@ -112,8 +110,9 @@ def pagerank_fixed_point(
     Returns (host, rank_micro bigint, out_weight bigint) — out_weight
     0 for dangling hosts.
     """
-    if persist_edges:
-        edges = edges.persist()
+    # every iteration re-reads ``edges`` inside ONE lazy plan, so Spark's
+    # exchange reuse computes their aggregate once; nothing is cached (a
+    # persist() here outlived the call in the session's cache)
     nodes = (
         edges.select(F.col("src_host").alias("host"))
         .union(edges.select(F.col("dst_host").alias("host")))

@@ -62,6 +62,7 @@ from pyspark.sql.types import (
 )
 
 from osm_chordify_spark import geom as G
+from osm_chordify_spark.functions import materialize as MZ
 from osm_chordify_spark.operators.zoneindex import ZoneIndex
 
 # global cell ids (for region labels) encode (gx, gy) in one int64;
@@ -612,14 +613,9 @@ def vectorize_regions(
             if out:
                 yield pd.concat(out, ignore_index=True)
 
-    from pyspark import StorageLevel
-
-    rows = tiles.mapInPandas(run, schema=_ROWS_SCHEMA)
     # materialize the kernel output once; stats/borders/sides all re-read
-    # it.  Spilled-capable level + unpersist before return (the result is
-    # checkpointed) — no storage-memory creep across repeated calls.
-    rows = rows.persist(StorageLevel.MEMORY_AND_DISK)
-    rows.count()
+    # it, and the border self-joins plan on its measured size
+    rows, _ = MZ.materialize(tiles.mapInPandas(run, schema=_ROWS_SCHEMA))
 
     stats = rows.filter(F.col("kind") == 0)
     borders = rows.filter(F.col("kind") == 1).select(
@@ -671,11 +667,9 @@ def vectorize_regions(
         F.max("d").alias("max_cell_y"),
     )
     if not boundary:
-        out = regions.withColumn(
-            "region_id", F.col("region_id").cast("long")
-        ).localCheckpoint(eager=True)
-        rows.unpersist()
-        return out
+        return MZ.checkpoint(
+            regions.withColumn("region_id", F.col("region_id").cast("long"))
+        )[0]
 
     sides = (
         rows.filter(F.col("kind") == 2)
@@ -744,13 +738,10 @@ def vectorize_regions(
         )
 
     geoms = kept.groupBy("region_id").applyInPandas(trace, schema=geom_schema)
-    out = (
+    return MZ.checkpoint(
         regions.withColumn("region_id", F.col("region_id").cast("long"))
         .join(geoms, "region_id", "left")
-        .localCheckpoint(eager=True)
-    )
-    rows.unpersist()
-    return out
+    )[0]
 
 
 def focal_stats(

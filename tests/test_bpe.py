@@ -50,7 +50,7 @@ def test_train_bpe_matches_python_reference(spark):
     wf_df = B.word_frequencies(docs)
     wf = {r["word"]: r["freq"] for r in wf_df.collect()}
     want = _py_train(wf, 12)
-    got = B.train_bpe(wf_df, 12, checkpoint_every=4)
+    got = B.train_bpe(wf_df, 12)
     assert got == want
     assert len(got) == 12  # corpus is rich enough for all 12 merges
 

@@ -110,6 +110,20 @@ def test_pagerank_fixed_point_matches_reference_arithmetic(spark):
         assert abs(out[h][0] / 1e12 - rf[h]) < 1e-9
 
 
+def test_pagerank_leaves_no_cached_frame(spark):
+    """A call caches nothing for the rest of the session: the session's
+    cache manager is as empty after the call as before it."""
+    edges = spark.createDataFrame(
+        [("a", "b", 2), ("b", "a", 1), ("a", "c", 1)],
+        "src_host string, dst_host string, weight long",
+    )
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    assert cache.isEmpty()
+    assert len(LG.pagerank_fixed_point(edges, iterations=2).collect()) == 3
+    assert cache.isEmpty()
+
+
 def test_with_host_rank_join(spark):
     pages = _pages(spark, [("https://a.org/1", "x"), ("https://zzz.org/1", "x")])
     ranks = spark.createDataFrame(

@@ -454,53 +454,60 @@ def test_knn_two_rankings_one_pid_exchange_each(spark, monkeypatch):
     assert "dense_rank" in plans[0].split("ShuffleQueryStage")[1].split("Partial")[0]
     assert plans[1].count("ShuffleQueryStage") == 2, plans[1]
     assert "Exchange hashpartitioning(__cell" in plans[1], plans[1]
+    jobs = _group_jobs(sc, "knn-pin")[0]
+    # measured 9 at local[8]: each ranking's unfinished count rides its
+    # checkpoint (11 with a separate emptiness probe per round; the
+    # doubling loop before the two rounds ran 3 rounds and 30 jobs)
+    assert jobs <= 9, jobs
+
+
+def _group_jobs(sc, group):
+    """(jobs that ran a stage, shuffle bytes written) of a job group."""
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    jobs = [j for j in tracker.getJobIdsForGroup("knn-pin")
-            if any(str(store.lastStageAttempt(s).status()) != "SKIPPED"
-                   for s in tracker.getJobInfo(j).stageIds)]
-    # measured 11 at local[8] (the parent's doubling loop ran 3 rounds
-    # and 30 jobs on this fixture)
-    assert len(jobs) <= 11, len(jobs)
+    jobs = written = 0
+    for j in tracker.getJobIdsForGroup(group):
+        # in a long session the status store has already dropped
+        # some of a job's stage ids (skipped ones): ask the tracker
+        kept = [s for s in tracker.getJobInfo(j).stageIds
+                if tracker.getStageInfo(s) is not None]
+        ran = [st for st in map(store.lastStageAttempt, kept)
+               if str(st.status()) != "SKIPPED"]
+        jobs += bool(ran)
+        written += sum(st.shuffleWriteBytes() for st in ran)
+    return jobs, written
 
 
 def _per_materialize(spark, monkeypatch, run):
-    """Run ``run()`` with each ``graph._materialize`` call in its own job
-    group → [(jobs that ran a stage, shuffle bytes written)] per call.
-    A CC round or a list-ranking step is lazy up to its
-    ``_materialize``, so each call's group holds the whole round/step."""
-    from osm_chordify_spark.operators import graph as GR
+    """Run ``run()`` with each ``materialize.materialize`` or
+    ``materialize.checkpoint`` call in its own job group → [(function
+    name, jobs that ran a stage, shuffle bytes written)] per call.  A CC
+    round or a list-ranking step is lazy up to its ``materialize``, so
+    each call's group holds the whole round/step; the ``checkpoint``
+    inside a ``materialize`` stays in that call's group."""
+    from osm_chordify_spark.functions import materialize as MZ
 
     sc = spark.sparkContext
-    real, groups = GR._materialize, []
+    groups, depth = [], []
 
-    def spy(df, **kw):
-        groups.append(f"materialize-{id(groups)}-{len(groups)}")
-        sc.setJobGroup(groups[-1], "one materialize")
-        try:
-            return real(df, **kw)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
+    def spying(name, real):
+        def spy(df, *probe):
+            if depth:  # checkpoint called by materialize
+                return real(df, *probe)
+            groups.append((name, f"materialize-{id(groups)}-{len(groups)}"))
+            sc.setJobGroup(groups[-1][1], "one materialize")
+            depth.append(name)
+            try:
+                return real(df, *probe)
+            finally:
+                depth.pop()
+                sc.setLocalProperty("spark.jobGroup.id", None)
+        return spy
 
-    monkeypatch.setattr(GR, "_materialize", spy)
+    for name in ("materialize", "checkpoint"):
+        monkeypatch.setattr(MZ, name, spying(name, getattr(MZ, name)))
     run()
-    monkeypatch.setattr(GR, "_materialize", real)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker, store = sc.statusTracker(), sc._jsc.sc().statusStore()
-    out = []
-    for g in groups:
-        jobs = written = 0
-        for j in tracker.getJobIdsForGroup(g):
-            # in a long session the status store has already dropped
-            # some of a job's stage ids (skipped ones): ask the tracker
-            kept = [s for s in tracker.getJobInfo(j).stageIds
-                    if tracker.getStageInfo(s) is not None]
-            ran = [st for st in map(store.lastStageAttempt, kept)
-                   if str(st.status()) != "SKIPPED"]
-            jobs += bool(ran)
-            written += sum(st.shuffleWriteBytes() for st in ran)
-        out.append((jobs, written))
-    return out
+    return [(name, *_group_jobs(sc, g)) for name, g in groups]
 
 
 def test_chordify_doubling_steps_broadcast_no_shuffle(spark, monkeypatch):
@@ -526,26 +533,103 @@ def test_chordify_doubling_steps_broadcast_no_shuffle(spark, monkeypatch):
         lambda: rows.extend(chordify(edges, edge_attrs_differ=["highway"]).collect()),
     )
     assert [(r.u, r.v, r.length) for r in rows] == [(0, 64, 64.0)]
+    assert {name for name, _, _ in calls} == {"materialize"}, calls
     steps = calls[1:]
     assert len(steps) == 6, calls
-    assert all(written == 0 for _, written in steps), calls
-    assert all(jobs <= 3 for jobs, _ in steps), calls  # measured 3 at local[8]
+    assert all(written == 0 for _, _, written in steps), calls
+    assert all(jobs <= 3 for _, jobs, _ in steps), calls  # measured 3 at local[8]
 
 
 def test_connected_components_jobs_per_round(spark, monkeypatch):
-    """CC on a 200-pair path: each round (one neighbor-min step and three
-    lazy doublings) ends in one ``_materialize`` whose observed probe
+    """CC on a 200-pair path: the arcs and the initial labels are
+    materialized once, then each round (one neighbor-min step and three
+    lazy doublings) ends in one ``materialize`` whose observed probe
     counts the changed labels — no separate count job per round."""
     from osm_chordify_spark.operators.graph import connected_components
 
     pairs = spark.createDataFrame([(i, i + 1) for i in range(200)],
                                   "src long, dst long")
     rows = []
-    rounds = _per_materialize(
+    calls = _per_materialize(
         spark, monkeypatch,
         lambda: rows.extend(connected_components(pairs).collect()),
     )
     assert len(rows) == 201 and {r.component for r in rows} == {0}
-    assert len(rounds) == 4, rounds
+    assert [name for name, _, _ in calls] == ["materialize", "checkpoint"] + [
+        "materialize"] * 4, calls
+    rounds = [jobs for _, jobs, _ in calls[2:]]
     # measured at local[8]: 13 jobs in round 1, 7 in each later round
-    assert rounds[0][0] <= 13 and all(jobs <= 7 for jobs, _ in rounds[1:]), rounds
+    assert rounds[0] <= 13 and all(jobs <= 7 for jobs in rounds[1:]), calls
+
+
+def _one_call_jobs(spark, name, run):
+    """Jobs that ran a stage while ``run()`` built and collected one
+    operator call (build-time checkpoints included)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, "one call")
+    try:
+        out = run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, _group_jobs(sc, name)[0]
+
+
+def test_nearest_zone_dist_round_one_exit_jobs(spark):
+    """Every point lies inside a zone, so round 1 resolves them all: the
+    survivors' checkpoint carries the exit test (0 rows left), so no
+    emptiness probe or second round follows the ranking."""
+    import numpy as np
+    import pandas as pd
+
+    from osm_chordify_spark import geom as G
+    from osm_chordify_spark.operators.intersect_dist import nearest_zone_dist
+
+    square = [[0, 0], [25, 0], [25, 25], [0, 25]]
+    zdf = spark.createDataFrame(pd.DataFrame({
+        "zone_id": [f"z{i}{j}" for i in range(4) for j in range(4)],
+        "geometry": [G.wkb_polygon([np.array(square, float) + [25 * i, 25 * j]])
+                     for i in range(4) for j in range(4)],
+    }))
+    rng = np.random.default_rng(3)
+    xy = rng.uniform(1, 99, (100, 2))
+    pdf = spark.createDataFrame(pd.DataFrame(
+        {"point_id": np.arange(100), "x": xy[:, 0], "y": xy[:, 1]}))
+    rows, jobs = _one_call_jobs(spark, "nearest-pin", lambda: nearest_zone_dist(
+        pdf, zdf, index_res=6, world=(0.0, 0.0, 128.0, 128.0)).collect())
+    got = {r.point_id: (r.zone_id, r.dist) for r in rows}
+    assert got == {i: (f"z{int(x // 25)}{int(y // 25)}", 0.0)
+                   for i, (x, y) in enumerate(xy)}
+    # measured 12 at local[8]; 15 with the emptiness probe of an
+    # anti-join survivor set after the ranking
+    assert jobs <= 12, jobs
+
+
+def test_scc_distributed_jobs(spark):
+    """The distributed SCC loop on a small graph (two 3-cycles joined by
+    an arc, a tail and a lone arc): every trim batch, retire and exit
+    test is one checkpoint with its arc count observed."""
+    from osm_chordify_spark.operators.graph import strongly_connected_components
+
+    pairs = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 5), (5, 3), (5, 6), (7, 8)],
+        "src long, dst long")
+    rows, jobs = _one_call_jobs(spark, "scc-pin", lambda: strongly_connected_components(
+        pairs, max_local_arcs=0).collect())
+    assert sorted((r.id, r.component) for r in rows) == [
+        (0, 0), (1, 0), (2, 0), (3, 3), (4, 3), (5, 3), (6, 6), (7, 7), (8, 8)]
+    # measured 247-250 at local[8]; 257-258 with a count or emptiness
+    # job after every trim batch, retire and coloring phase
+    assert jobs <= 252, jobs
+
+
+def test_kmeans_assign_jobs(spark):
+    """The vector-length check rides the working set's checkpoint: no
+    aggregate job of its own before the seeds and the Lloyd rounds."""
+    from osm_chordify_spark.operators.cluster import kmeans_assign
+
+    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
+    rows, jobs = _one_call_jobs(spark, "kmeans-pin", lambda: kmeans_assign(
+        emb, k=4, iters=2).collect())
+    assert len(rows) == emb.count()
+    # measured 7 at local[8]; 9 with the length check's own aggregate
+    assert jobs <= 7, jobs
